@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from pulsar_lunar_spark.operators import corpus as C
 from pulsar_lunar_spark.operators import dedup as D
@@ -45,9 +46,21 @@ _SHINGLES3 = f"""
 # faster solo (interleaved noop A/B at sf0.1: med 0.83 vs 1.11 s).
 # The JVM twin stays in operators/corpus.py as the value-identity
 # verification twin (tests/test_corpus.py pins both paths equal).
+# The return type is a StructType, not a DDL string: parsing DDL needs a
+# live SparkContext, and this decorator runs at import.
 @F.pandas_udf(
-    "total_words int, distinct_words int, top_word_count int,"
-    " total_2grams int, distinct_2grams int"
+    StructType(
+        [
+            StructField(name, IntegerType())
+            for name in (
+                "total_words",
+                "distinct_words",
+                "top_word_count",
+                "total_2grams",
+                "distinct_2grams",
+            )
+        ]
+    )
 )
 def _repetition_counts_arrow(words):  # pd.Series of word arrays
     import pandas as pd
@@ -55,6 +68,15 @@ def _repetition_counts_arrow(words):  # pd.Series of word arrays
 
     tw, dw, top, t2, d2 = [], [], [], [], []
     for w in words:
+        if w is None:
+            # NULL text: the JVM twin's size()/aggregate() give NULL, and
+            # its guarded 2-gram arrays are empty
+            tw.append(None)
+            dw.append(None)
+            top.append(None)
+            t2.append(0)
+            d2.append(0)
+            continue
         lst = list(w)
         c = Counter(lst)
         n = len(lst)
@@ -70,7 +92,8 @@ def _repetition_counts_arrow(words):  # pd.Series of word arrays
             "top_word_count": top,
             "total_2grams": t2,
             "distinct_2grams": d2,
-        }
+        },
+        dtype="Int32",
     )
 
 

@@ -588,8 +588,9 @@ def q_individual_ack(spark: SparkSession, sf_dir: str) -> DataFrame:
     The ledger stores one bigint BitSet per 64-message block per
     partition (the proto's ack_set shape), so it is backlog-bounded and
     merge-by-OR idempotent (bench reps re-ack the same set harmlessly);
-    the pending view is one block-key left join + bit test — ledger side
-    broadcast-sized for any sane backlog."""
+    the pending view is one block-key left anti join with the bit test
+    as join condition — ledger side broadcast-sized for any sane
+    backlog."""
     log = _seek_log(spark, sf_dir)
     env = log.read("events")
     log.ack("events", "q_individual_ack", env.filter(F.col("sequence_id") % 3 != 0))

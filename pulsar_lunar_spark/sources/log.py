@@ -16,6 +16,12 @@ Spark-first:
 - read()/replay()/compacted() = batch views: full scan, time-range seek
   (CommandSeek by publish time), latest-per-key (read_compacted).
 
+Every read of a topic, batch or streaming, uses the schema the log wrote
+(``ENVELOPE_SCHEMA``; the ack ledger has ``ACK_SCHEMA``), so no read
+waits on a footer-inference job before planning starts. The
+``__partition``/``__pdate`` layout columns still come from the directory
+names.
+
 A real ``format("pulsar")`` connector would slot behind the same API; the
 file backing is the test/bench stand-in AND a legitimate log-table design
 (the "topic as table" pattern).
@@ -30,7 +36,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from pulsar_lunar_spark.functions.envelope import (
     DEFAULT_NUM_PARTITIONS,
@@ -39,6 +45,20 @@ from pulsar_lunar_spark.functions.envelope import (
     to_envelope,
 )
 from pulsar_lunar_spark.operators.compaction import compacted_latest_by_key
+
+
+#: One ack-ledger row: the BitSet of acked sequence ids in one
+#: 64-message block of one partition.
+ACK_SCHEMA = StructType(
+    [
+        StructField("partition", IntegerType()),
+        StructField("block_id", LongType()),
+        StructField("bits", LongType()),
+    ]
+)
+
+#: A message's bit inside its 64-message block's BitSet.
+_SEQ_BIT = "shiftleft(cast(1 as bigint), cast(pmod(sequence_id, 64) as int))"
 
 
 def _safe_topic(topic: str) -> str:
@@ -186,8 +206,13 @@ class MessageLog:
     # -- consume: batch views ------------------------------------------
     def read(self, topic: str) -> DataFrame:
         """Full batch scan of a topic (envelope rows; message_id.partition is
-        stored inside the struct — __partition is only the directory layout)."""
-        return self.spark.read.parquet(self.topic_path(topic)).drop("__partition", "__pdate")
+        stored inside the struct — __partition is only the directory layout).
+
+        The scan uses ``ENVELOPE_SCHEMA``, so building it submits no Spark
+        job, and a topic directory that exists but holds no data files
+        reads as an empty envelope DataFrame (a missing directory still
+        raises PATH_NOT_FOUND)."""
+        return self._raw(topic).drop("__partition", "__pdate")
 
     def read_pattern(self, pattern: str) -> DataFrame:
         """Multi-topic (regex pattern) read — Pulsar's pattern
@@ -208,7 +233,8 @@ class MessageLog:
         return reduce(DataFrame.unionByName, (self.read(t) for t in names))
 
     def _raw(self, topic: str) -> DataFrame:
-        return self.spark.read.parquet(self.topic_path(topic))
+        """Envelope rows plus the directory layout columns."""
+        return self.spark.read.schema(ENVELOPE_SCHEMA).parquet(self.topic_path(topic))
 
     def replay(
         self,
@@ -348,7 +374,7 @@ class MessageLog:
             else older_than
         )
         path = self.topic_path(topic)
-        df = self.spark.read.parquet(path)
+        df = self._raw(topic)
         dropped = 0
         if "__pdate" in df.columns:
             # layout is __partition=N/__pdate=D (produce partitionBy order)
@@ -364,8 +390,10 @@ class MessageLog:
                     dropped += 1
                 elif day_str == cutoff_date:
                     # the cutoff's own day: bounded partial rewrite
-                    day = self.spark.read.parquet(full).filter(
-                        F.col("publish_time") >= F.lit(cutoff)
+                    day = (
+                        self.spark.read.schema(ENVELOPE_SCHEMA)
+                        .parquet(full)
+                        .filter(F.col("publish_time") >= F.lit(cutoff))
                     )
                     tmp = full + ".__ret_tmp"
                     day.write.mode("overwrite").parquet(tmp)
@@ -374,7 +402,8 @@ class MessageLog:
         else:
             kept = df.filter(F.col("publish_time") >= F.lit(cutoff))
             tmp = path + ".__ret_tmp"
-            kept.write.mode("overwrite").parquet(tmp)
+            # keep the __partition directory layout: seeks prune on it
+            kept.write.partitionBy("__partition").mode("overwrite").parquet(tmp)
             shutil.rmtree(path)
             os.rename(tmp, path)
         return dropped
@@ -392,75 +421,67 @@ class MessageLog:
 
         ``message_ids`` is any DataFrame carrying the envelope's
         ``message_id`` struct + ``sequence_id`` (e.g. a filtered
-        ``read(topic)``). Positions compact to (partition, block, BitSet)
-        rows before the append, so an ack of N messages writes at most
-        N/64 rows per partition; re-acking is a bitwise-OR no-op
-        (idempotent, like the broker's range-set union)."""
+        ``read(topic)``). Positions compact to ``ACK_SCHEMA`` rows
+        (partition, block, BitSet) before the append, so an ack of N
+        messages writes at most N/64 rows per partition; re-acking is a
+        bitwise-OR no-op (idempotent, like the broker's range-set union)."""
         acked = (
             message_ids.select(
                 F.col("message_id.partition").alias("partition"),
                 F.expr("sequence_id div 64").alias("block_id"),
-                F.expr(
-                    "shiftleft(cast(1 as bigint), cast(pmod(sequence_id, 64) as int))"
-                ).alias("bits"),
+                F.expr(_SEQ_BIT).alias("bits"),
             )
             .groupBy("partition", "block_id")
             .agg(F.bit_or("bits").alias("bits"))
         )
-        acked.write.mode("append").parquet(self.ack_path(topic, subscription))
+        acked.to(ACK_SCHEMA).write.mode("append").parquet(self.ack_path(topic, subscription))
 
-    def _ack_bits(self, topic: str, subscription: str) -> DataFrame | None:
+    def _acks(self, topic: str, subscription: str) -> DataFrame | None:
+        """The raw append-only ack ledger, or None before the first ack."""
         path = self.ack_path(topic, subscription)
         if not os.path.isdir(path):
             return None
-        return (
-            self.spark.read.parquet(path)
-            .groupBy("partition", "block_id")
-            .agg(F.bit_or("bits").alias("bits"))
-        )
+        return self.spark.read.schema(ACK_SCHEMA).parquet(path)
 
     def pending(self, topic: str, subscription: str) -> DataFrame:
         """The redelivery view: every message NOT individually acked on
         this subscription — acking message 3 of 1..5 replays exactly
-        {1,2,4,5}. One left join on the compacted (partition, block)
-        ledger + a bit test; the ledger side is backlog-bounded (64
-        messages per row) so at scale it is broadcast-sized unless the
-        backlog itself is huge, in which case the block-key shuffle join
-        is the right plan anyway — AQE picks."""
+        {1,2,4,5}.
+
+        One left anti join against the raw ledger rows, keyed on
+        (partition, sequence_id div 64) with the message's bit test as
+        the join condition. A message is acked iff its bit is set in
+        some ledger row of its block (the OR of a block's rows has a bit
+        set iff one row has it), so no per-block fold is needed. A
+        message whose partition or sequence_id is NULL matches no row
+        and stays pending. The ledger side is backlog-bounded (64
+        messages per row): broadcast-sized unless the backlog itself is
+        huge, in which case the block-key shuffle join is the right plan
+        anyway — AQE picks."""
         df = self.read(topic)
-        acks = self._ack_bits(topic, subscription)
+        acks = self._acks(topic, subscription)
         if acks is None:
             return df
-        env = df.withColumn("__part", F.col("message_id.partition")).withColumn(
-            "__block", F.expr("sequence_id div 64")
+        acked = (
+            (F.col("message_id.partition") == acks["partition"])
+            & (F.expr("sequence_id div 64") == acks["block_id"])
+            & (acks["bits"].bitwiseAND(F.expr(_SEQ_BIT)) != 0)
         )
-        joined = env.join(
-            acks,
-            (env["__part"] == acks["partition"]) & (env["__block"] == acks["block_id"]),
-            "left",
-        )
-        mask = F.expr(
-            "shiftleft(cast(1 as bigint), cast(pmod(sequence_id, 64) as int))"
-        )
-        return (
-            joined.filter(
-                F.col("bits").isNull() | (F.col("bits").bitwiseAND(mask) == 0)
-            )
-            .drop("__part", "__block", "partition", "block_id", "bits")
-        )
+        return df.join(acks, acked, "left_anti")
 
     def compact_acks(self, topic: str, subscription: str) -> None:
         """Fold the append-only ack ledger down to one row per
-        (partition, block) — the cursor-ledger compaction the broker runs
-        on its individually-deleted ranges. Safe to skip: ``pending``
-        bit-ORs per block either way; this just bounds ledger file
-        count."""
-        acks = self._ack_bits(topic, subscription)
+        (partition, block), bit-ORing its BitSets — the cursor-ledger
+        compaction the broker runs on its individually-deleted ranges.
+        Safe to skip: ``pending`` gives the same set on the raw ledger;
+        this just bounds the ledger's row and file count."""
+        acks = self._acks(topic, subscription)
         if acks is None:
             return
         path = self.ack_path(topic, subscription)
         tmp = path + ".compact"
-        acks.write.mode("overwrite").parquet(tmp)
+        folded = acks.groupBy("partition", "block_id").agg(F.bit_or("bits").alias("bits"))
+        folded.write.mode("overwrite").parquet(tmp)
         import shutil
 
         shutil.rmtree(path)

@@ -39,12 +39,15 @@ def test_repetition_counts_crafted(spark):
 def test_repetition_counts_arrow_matches_jvm_twin(spark, sf_dir):
     """The r12 Arrow counting lane (llm3._repetition_counts_arrow) must
     produce the exact integers of the JVM HOF twin on the real corpus —
-    the value-identity pin for the q_quality_gopher rewrite."""
+    the value-identity pin for the q_quality_gopher rewrite. A NULL and
+    an empty text row ride along: NULL degrades the same way in both."""
     from pulsar_lunar_spark.operators.dedup import normalize_text
     from pulsar_lunar_spark.queries.llm3 import _repetition_counts_arrow
     from pulsar_lunar_spark.session import load_table
 
-    d = load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    edge = spark.createDataFrame([(-1, None), (-2, "")], docs.schema)
+    d = docs.unionByName(edge)
     cnt = C.repetition_counts(F.col("text"))
     jvm = d.select(
         "doc_id", *[v.alias(k) for k, v in cnt.items()]
@@ -55,6 +58,7 @@ def test_repetition_counts_arrow_matches_jvm_twin(spark, sf_dir):
     ).select("doc_id", "__c.*")
     jvm_rows = {r["doc_id"]: tuple(r)[1:] for r in jvm.collect()}
     arrow_rows = {r["doc_id"]: tuple(r)[1:] for r in arrow.collect()}
+    assert jvm_rows[-1] == (None, None, None, 0, 0)
     assert jvm_rows == arrow_rows
 
 

@@ -855,37 +855,98 @@ def test_individual_ack_sparse_replay(spark, tmp_path):
     an already-acked id is an idempotent no-op; ledger compaction
     changes nothing observable."""
     ml = MessageLog(spark, str(tmp_path / "acklog"))
+    # plus one message with a NULL sequence id (and NULL key): its block
+    # join key is NULL, so no ack can match it and it stays pending
     df = spark.createDataFrame(
-        [(i, f"u{i}") for i in range(1, 6)], "event_id long, user string"
+        [(i, f"u{i}") for i in range(1, 6)] + [(None, None)],
+        "event_id long, user string",
     )
     ml.produce(df, topic="t", payload_cols=["event_id"], key="user",
                sequence_id="event_id")
 
-    def pending_ids():
+    def pending_ids(sub="subA"):
+        # the NULL-id message shows as -1
         return sorted(
-            r["sequence_id"] for r in ml.pending("t", "subA").collect()
+            -1 if r["sequence_id"] is None else r["sequence_id"]
+            for r in ml.pending("t", sub).collect()
         )
 
-    assert pending_ids() == [1, 2, 3, 4, 5]
+    assert pending_ids() == [-1, 1, 2, 3, 4, 5]
     env = ml.read("t")
     ml.ack("t", "subA", env.filter(F.col("sequence_id").isin(1, 2, 4)))
-    assert pending_ids() == [3, 5]
+    assert pending_ids() == [-1, 3, 5]
     ml.ack("t", "subA", env.filter(F.col("sequence_id") == 3))
-    assert pending_ids() == [5]
+    assert pending_ids() == [-1, 5]
     # idempotent re-ack
     ml.ack("t", "subA", env.filter(F.col("sequence_id") == 1))
-    assert pending_ids() == [5]
+    assert pending_ids() == [-1, 5]
+    # acking the NULL-id message writes a NULL-keyed ledger row that
+    # matches nothing
+    ml.ack("t", "subA", env.filter(F.col("sequence_id").isNull()))
+    assert pending_ids() == [-1, 5]
     # another subscription has its own cursor state
-    assert sorted(r["sequence_id"] for r in ml.pending("t", "subB").collect()) == [1, 2, 3, 4, 5]
+    assert pending_ids("subB") == [-1, 1, 2, 3, 4, 5]
     # compaction folds the append-only ledger, observable state unchanged
     ml.compact_acks("t", "subA")
-    assert pending_ids() == [5]
+    assert pending_ids() == [-1, 5]
+
+
+def test_topic_reads_submit_no_job_at_build(spark, tmp_path):
+    """Every batch read of a topic uses the envelope schema the log wrote,
+    so building read/replay/compacted/pending/read_pattern DataFrames
+    submits no Spark job (no footer-inference pass before planning)."""
+    import datetime as dt
+
+    rows = [(i, f"u{i % 7}", dt.datetime(2026, 3, 1 + i % 3, i % 24)) for i in range(300)]
+    df = spark.createDataFrame(rows, "event_id long, user string, ts timestamp")
+    ml = MessageLog(spark, str(tmp_path / "jobslog"))
+    for topic in ("jobs.a", "jobs.b"):
+        ml.produce(df, topic=topic, payload_cols=["event_id"], key="user",
+                   sequence_id="event_id", publish_time="ts", time_partition=True)
+    ml.ack("jobs.a", "s", ml.read("jobs.a").filter(F.col("sequence_id") % 2 == 0))
+
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("topic-read-build", "building topic reads")
+        built = [
+            ml.read("jobs.a"),
+            ml.replay("jobs.a", "2026-03-02", "2026-03-03"),
+            ml.replay("jobs.a", start_message_id=(0, 100)),
+            ml.compacted("jobs.a"),
+            ml.pending("jobs.a", "s"),
+            ml.read_pattern(r"^jobs\."),
+        ]
+        # control: a job in a second group. The listener bus is ordered, so
+        # once this job is visible, any job the builds submitted is too.
+        sc.setJobGroup("topic-read-control", "control action")
+        assert built[0].count() == 300
+        tracker = sc.statusTracker()
+        assert tracker.getJobIdsForGroup("topic-read-control")
+        assert tracker.getJobIdsForGroup("topic-read-build") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_empty_topic_dir_reads_as_empty_envelope(spark, tmp_path):
+    """A topic directory that exists but holds no data files reads as an
+    empty envelope DataFrame (the schema is the envelope's, not inferred
+    from files)."""
+    from pulsar_lunar_spark.functions.envelope import ENVELOPE_SCHEMA
+
+    ml = MessageLog(spark, str(tmp_path / "emptylog"))
+    os.makedirs(ml.topic_path("empty"))
+    df = ml.read("empty")
+    assert df.schema == ENVELOPE_SCHEMA
+    assert df.count() == 0
+    assert ml.compacted("empty").count() == 0
 
 
 def test_individual_ack_blocks_span_partitions(spark, sf_dir, tmp_path):
     """ack_set BitSets are per (partition, 64-message block): acks on a
     multi-partition topic with sequence ids crossing block boundaries
-    must replay exactly the unacked ids."""
+    must replay exactly the unacked ids. pending() is one left anti join
+    against the raw ledger rows: no aggregate folds the ledger first."""
     from pulsar_lunar_spark.session import load_table
 
     ml = MessageLog(spark, str(tmp_path / "acklog2"))
@@ -895,7 +956,10 @@ def test_individual_ack_blocks_span_partitions(spark, sf_dir, tmp_path):
     env = ml.read("t")
     all_ids = sorted(r["sequence_id"] for r in env.collect())
     ml.ack("t", "s", env.filter(F.col("sequence_id") % 7 != 0))
-    got = sorted(r["sequence_id"] for r in ml.pending("t", "s").collect())
+    pending = ml.pending("t", "s")
+    plan = pending._jdf.queryExecution().optimizedPlan().toString()
+    assert "LeftAnti" in plan and "Aggregate" not in plan, plan
+    got = sorted(r["sequence_id"] for r in pending.collect())
     assert got == [i for i in all_ids if i % 7 == 0]
 
 
@@ -958,6 +1022,13 @@ def test_topic_retention_drops_whole_partitions(spark, tmp_path):
     assert d2 == 0
     left2 = sorted(r["sequence_id"] for r in ml2.read("t").collect())
     assert left2 == [3, 4, 5, 6]
+    # the rewrite keeps the __partition layout a seek prunes on
+    entries = os.listdir(ml2.topic_path("t"))
+    assert any(d.startswith("__partition=") for d in entries)
+    assert not any(d.endswith(".parquet") for d in entries)
+    part = ml2.read("t").filter(F.col("sequence_id") == 3).first()["message_id"]["partition"]
+    seek = ml2.replay("t", start_message_id=(part, 2), inclusive=True)
+    assert 3 in {r["sequence_id"] for r in seek.collect()}
 
 
 def test_replicate_topic_byte_identical(spark, sf_dir, tmp_path):
