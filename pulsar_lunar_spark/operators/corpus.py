@@ -284,15 +284,6 @@ def sample_flag(id_col: Column, rate_hex2: str) -> Column:
 # TF-IDF and BM25 over exploded tokens
 # ---------------------------------------------------------------------------
 
-def word_table(df: DataFrame, id_col: str, text_col: str, min_len: int = 0) -> DataFrame:
-    """(id, word) exploded token table (normalized whitespace words)."""
-    words = F.split(normalize_text(F.col(text_col)), " ")
-    out = df.select(F.col(id_col).alias("__id"), F.explode(words).alias("word"))
-    if min_len:
-        out = out.filter(F.length("word") >= min_len)
-    return out
-
-
 def tfidf_terms(
     df: DataFrame, id_col: str, text_col: str, group_col: str, min_len: int = 3
 ) -> DataFrame:

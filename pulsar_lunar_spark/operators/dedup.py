@@ -705,17 +705,6 @@ def _simhash_sig_udf(n_bits: int):
     return sig
 
 
-def simhash_signature(col: Column, seed: int = 42) -> Column:
-    """64-bit SimHash of normalized text (bigint): each token votes its
-    xxhash64 bits; the signature takes the sign of the per-bit vote sum.
-
-    NOTE: single-expression form; prefer the staged path in
-    simhash_near_pairs for bulk use (see _simhash_from_hashes)."""
-    tokens = F.split(normalize_text(col), " ")
-    hashes = F.transform(tokens, lambda t: F.xxhash64(t, F.lit(seed)))
-    return _simhash_from_hashes(hashes)
-
-
 def simhash_near_pairs(
     df: DataFrame,
     id_col: str,

@@ -91,15 +91,6 @@ def salted_join(
     return out.drop("__salt")
 
 
-def repartition_by_key_range(
-    df: DataFrame, cols: Sequence[str | Column], num_partitions: int
-) -> DataFrame:
-    """Range partitioning (repartitionByRange): totally-ordered partitions
-    for window-heavy or sorted-output workloads — the sort inside each
-    partition is then local, no global sort exchange."""
-    return df.repartitionByRange(num_partitions, *cols)
-
-
 # ---------------------------------------------------------------------------
 # Z-order clustering key (multi-column data-skipping layout)
 # ---------------------------------------------------------------------------

@@ -103,18 +103,6 @@ def _random_hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]
     return planes
 
 
-def hyperplane_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit LSH bucket id (bigint) from random hyperplane projections."""
-    bits = [
-        F.when(dot_lit(vec, plane) >= 0, 1 << i).otherwise(0)
-        for i, plane in enumerate(planes)
-    ]
-    out = F.lit(0).cast("long")
-    for b in bits:
-        out = out + b.cast("long")
-    return out
-
-
 def _plane_battery(dim: int, n_planes: int, n_tables: int, seed: int):
     """The shared LSH battery: all tables' hyperplanes stacked as ONE
     (n_tables*n_planes) x dim numpy matrix plus the per-table bit weights.

@@ -48,14 +48,6 @@ def punct_ratio(col: Column) -> Column:
     return F.when(n > 0, n_punct / n).otherwise(F.lit(0.0))
 
 
-def stopword_ratio(col: Column, lang: str = "en") -> Column:
-    """Fraction of words that are (lang) stopwords."""
-    words = F.split(normalize_text(col), " ")
-    stop = F.array(*[F.lit(w) for w in LANG_STOPWORDS[lang]])
-    n_stop = F.size(F.filter(words, lambda w: F.array_contains(stop, w)))
-    return F.when(F.size(words) > 0, n_stop / F.size(words)).otherwise(F.lit(0.0))
-
-
 def mean_word_length(col: Column) -> Column:
     words = F.split(normalize_text(col), " ")
     total = F.aggregate(

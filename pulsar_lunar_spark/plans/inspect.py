@@ -55,11 +55,6 @@ def uses_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in plan_text(df)
 
 
-def has_cartesian(df: DataFrame) -> bool:
-    t = plan_text(df)
-    return "CartesianProduct" in t
-
-
 def has_window_group_limit(df: DataFrame) -> bool:
     return "WindowGroupLimit" in plan_text(df)
 
@@ -83,12 +78,6 @@ def uses_python_eval(df: DataFrame) -> bool:
             "AggregateInPandas",
         )
     )
-
-
-def whole_stage_codegen_spans(df: DataFrame) -> int:
-    """Number of WholeStageCodegen spans (more fused = fewer interpreter
-    boundaries; a plan fragmented into many tiny spans is a smell)."""
-    return plan_text(df, "simple").count("WholeStageCodegen")
 
 
 def assert_scale_plan(

@@ -64,6 +64,8 @@ from pulsar_lunar_spark.queries.llm import (
 )
 from pulsar_lunar_spark.queries.registry import register
 from pulsar_lunar_spark.session import (
+    artifact,
+    artifact_dir,
     load_table,
     scratch_root,
     versioned_slot,
@@ -140,20 +142,15 @@ def _overlap_store_probe(batch_df, store_dir: str, probe) -> None:
 
 
 def _docs_topics(spark: SparkSession, sf_dir: str) -> MessageLog:
-    """Produce the ``docs`` topic ONCE per (process, dataset) as THREE
+    """Produce the ``docs`` topic ONCE (an artifact) as THREE
     sequential appends — ingest day k (doc_id % 3 == k) lands as its own
     produce, so the file source's (mtime, path) ordering serves the days
     oldest-first to a single continuous subscription — the crawl-drop
     timeline. Deterministic function of the immutable documents table,
     so every call (and every bench rep) replays the same topic."""
-    import shutil
 
-    base = os.path.join(scratch_root("pl_ingest_topics", sf_dir), "log")
-    log = MessageLog(spark, base)
-    marker = os.path.join(base, "_PRODUCED")
-    if not os.path.exists(marker):
-        shutil.rmtree(base, ignore_errors=True)
-        log = MessageLog(spark, base)
+    def produce(root: str) -> None:
+        log = MessageLog(spark, root)
         d = load_table(spark, sf_dir, "documents")
         for k in range(_INGEST_DAYS):
             log.produce(
@@ -163,9 +160,8 @@ def _docs_topics(spark: SparkSession, sf_dir: str) -> MessageLog:
                 key="doc_id",
                 sequence_id="doc_id",
             )
-        with open(marker, "w"):
-            pass
-    return log
+
+    return MessageLog(spark, artifact_dir(spark, sf_dir, "pl_ingest_topics", produce))
 
 
 _INGEST_ORACLE = f"""
@@ -375,28 +371,25 @@ _UNI_TOPWORDS = 300
 # ~n_pieces-per-word micro units summed over the bounded vocab.
 _UNI_EM_SLACK = 1_000
 
-# trained model per (resolved dataset, content stamp): the training
-# corpus pass + bounded EM loop run once per process, and the encode
-# twin reuses the same model (the shared_spool staleness convention).
-_UNI_MODEL_CACHE: dict = {}
 
-
-def _unigram_model(spark: SparkSession, sf_dir: str):
+def _unigram_model(spark: SparkSession, sf_dir: str, *, rebuild: bool = False):
+    """The trained unigram model, an artifact: q_unigram_lm_train (the
+    training operator) passes ``rebuild`` and trains on every call;
+    q_unigram_encode reuses the model as a consumer."""
     from pulsar_lunar_spark.operators import corpus as C
-    from pulsar_lunar_spark.session import _dataset_stamp
 
-    key = (os.path.realpath(sf_dir), _dataset_stamp(sf_dir))
-    model = _UNI_MODEL_CACHE.get(key)
-    if model is None:
-        d = load_table(spark, sf_dir, "documents")
-        model = C.unigram_lm_train(
-            d, "text",
+    return artifact(
+        spark,
+        sf_dir,
+        "unigram_model",
+        lambda: C.unigram_lm_train(
+            load_table(spark, sf_dir, "documents"), "text",
             vocab_size=_UNI_VOCAB, seed_multis=_UNI_SEED_MULTIS,
             n_iters=_UNI_ITERS, top_words=_UNI_TOPWORDS,
             max_piece_len=_UNI_MAXLEN,
-        )
-        _UNI_MODEL_CACHE[key] = model
-    return model
+        ),
+        rebuild=rebuild,
+    )
 
 
 _UNI_WORDS = r"""
@@ -463,7 +456,7 @@ def q_unigram_lm_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch's beyond integer-rounding slack. The exact per-epoch costs and
     segmentations are pinned by the brute-force replication test in
     tests/test_llm18.py."""
-    p_ppm, pieces, chars, seed, epoch_cost = _unigram_model(spark, sf_dir)
+    p_ppm, pieces, chars, seed, epoch_cost = _unigram_model(spark, sf_dir, rebuild=True)
     multis = sorted((p for p in seed if len(p) > 1), key=lambda p: (-seed[p], p))
     seed_top = multis[0]
     vocab_chars = set(chars)
@@ -506,8 +499,9 @@ def q_unigram_lm_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-LM tokenizer APPLICATION: Viterbi-segment every word of
     the doc_id % 19 slice under the trained 96-piece model
-    (q_unigram_lm_train's cached model — train once per process, apply
-    corpus-wide), out-of-vocabulary characters falling back to the UNK
+    (q_unigram_lm_train's model artifact — trained by the training query
+    or on first use, applied corpus-wide), out-of-vocabulary characters
+    falling back to the UNK
     cost. The segmentation DP is inherently per-word sequential, so it
     runs as an Arrow-batched pandas UDF over the exploded word column
     (the declared Python lane; the piece-cost dict is a bounded 96-entry
@@ -1102,7 +1096,7 @@ def q_spec_decode_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _clips_topic(spark: SparkSession, sf_dir: str):
-    """Produce the ``clips`` topic ONCE per (process, dataset) as three
+    """Produce the ``clips`` topic ONCE (an artifact) as three
     sequential day appends (day = base doc_id % 3; a clip's planted
     variants land the same day) from the SAME materialized vdup fixture
     q_video_neardup decodes — real AVI bytes ride the envelope payload
@@ -1117,16 +1111,10 @@ def _clips_topic(spark: SparkSession, sf_dir: str):
     envelope rows would make stored n_sigs values disagree between
     batches and split the (id_a, id_b, n_sigs_a, n_sigs_b) pair
     groups."""
-    import shutil
-
     from pulsar_lunar_spark.queries.media import _vdup_fixture
 
-    base = os.path.join(scratch_root("pl_clips_topic", sf_dir), "log")
-    log = MessageLog(spark, base)
-    marker = os.path.join(base, "_PRODUCED")
-    if not os.path.exists(marker):
-        shutil.rmtree(base, ignore_errors=True)
-        log = MessageLog(spark, base)
+    def produce(root: str) -> None:
+        log = MessageLog(spark, root)
         vids = _vdup_fixture(spark, sf_dir).withColumn(
             "did", F.regexp_extract("media_id", "^m([0-9]+)", 1).cast("long")
         )
@@ -1138,9 +1126,8 @@ def _clips_topic(spark: SparkSession, sf_dir: str):
                 key="media_id",
                 sequence_id="did",
             )
-        with open(marker, "w"):
-            pass
-    return log
+
+    return MessageLog(spark, artifact_dir(spark, sf_dir, "pl_clips_topic", produce))
 
 
 def _stream_media_oracle() -> str:
@@ -1336,21 +1323,15 @@ def q_stream_media_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _audio_topic(spark: SparkSession, sf_dir: str):
-    """Produce the ``audio`` topic ONCE per (process, dataset) as three
+    """Produce the ``audio`` topic ONCE (an artifact) as three
     sequential day appends — the audio lane's doc_ids are all ≡1 mod 3,
     so its ingest day is (doc_id div 3) % 3 — from the SAME materialized
     fixture q_audio_fingerprint_dedup decodes (real WAV bytes through
     the envelope)."""
-    import shutil
-
     from pulsar_lunar_spark.queries.media import _afp_fixture
 
-    base = os.path.join(scratch_root("pl_audio_topic", sf_dir), "log")
-    log = MessageLog(spark, base)
-    marker = os.path.join(base, "_PRODUCED")
-    if not os.path.exists(marker):
-        shutil.rmtree(base, ignore_errors=True)
-        log = MessageLog(spark, base)
+    def produce(root: str) -> None:
+        log = MessageLog(spark, root)
         clips = _afp_fixture(spark, sf_dir).withColumn(
             "did", F.regexp_extract("media_id", "^m([0-9]+)", 1).cast("long")
         )
@@ -1362,9 +1343,8 @@ def _audio_topic(spark: SparkSession, sf_dir: str):
                 key="media_id",
                 sequence_id="did",
             )
-        with open(marker, "w"):
-            pass
-    return log
+
+    return MessageLog(spark, artifact_dir(spark, sf_dir, "pl_audio_topic", produce))
 
 
 def _stream_audio_oracle() -> str:
@@ -1537,20 +1517,14 @@ def q_stream_audio_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _image_topic(spark: SparkSession, sf_dir: str):
-    """Produce the ``images`` topic ONCE per (process, dataset) as three
+    """Produce the ``images`` topic ONCE (an artifact) as three
     sequential day appends (the image lane's ids are ≡0 mod 3, so its
     day is (doc_id div 3) % 3) from the SAME materialized fixture
     q_image_phash_dedup decodes (real BMP bytes through the envelope)."""
-    import shutil
-
     from pulsar_lunar_spark.queries.media import _dhash_fixture
 
-    base = os.path.join(scratch_root("pl_image_topic", sf_dir), "log")
-    log = MessageLog(spark, base)
-    marker = os.path.join(base, "_PRODUCED")
-    if not os.path.exists(marker):
-        shutil.rmtree(base, ignore_errors=True)
-        log = MessageLog(spark, base)
+    def produce(root: str) -> None:
+        log = MessageLog(spark, root)
         imgs = _dhash_fixture(spark, sf_dir).withColumn(
             "did", F.regexp_extract("media_id", "^m([0-9]+)", 1).cast("long")
         )
@@ -1562,9 +1536,8 @@ def _image_topic(spark: SparkSession, sf_dir: str):
                 key="media_id",
                 sequence_id="did",
             )
-        with open(marker, "w"):
-            pass
-    return log
+
+    return MessageLog(spark, artifact_dir(spark, sf_dir, "pl_image_topic", produce))
 
 
 def _stream_image_oracle() -> str:

@@ -102,27 +102,15 @@ def _media_df(spark: SparkSession, sf_dir: str, only: str | None = None) -> Data
 
 
 def _materialized(spark: SparkSession, sf_dir: str, tag: str, build) -> DataFrame:
-    """Materialize a synthesized fixture DataFrame ONCE per (process, sf,
-    tag) on tmpfs and re-read it on later calls — the per-row python
-    encode loops are fixture builds, and re-running them on every bench
-    rep measured fixture cost, not the decode operator under test.
-    Binary content round-trips parquet losslessly, so the decode stage
-    sees byte-identical input either way. The per-pid dir registers for
-    removal at process exit (session.scratch_at_exit)."""
-    import os
+    """Materialize a synthesized fixture DataFrame once (a
+    session.shared_spool artifact) and re-read it on later calls — the
+    per-row python encode loops are fixture builds, and re-running them
+    on every bench rep measured fixture cost, not the decode operator
+    under test. Binary content round-trips parquet losslessly, so the
+    decode stage sees byte-identical input either way."""
+    from pulsar_lunar_spark.session import shared_spool
 
-    from pulsar_lunar_spark.session import scratch_root
-
-    base = scratch_root("pulsar_lunar_media", sf_dir)
-    path = os.path.join(base, tag)
-    marker = os.path.join(path, "_SYNTHED")
-    if not os.path.exists(marker):
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
-        build().write.mode("overwrite").parquet(path)
-        open(marker, "w").close()
-    return spark.read.parquet(path)
+    return shared_spool(spark, sf_dir, f"pulsar_lunar_media_{tag}", build)
 
 
 def _media_table(spark: SparkSession, sf_dir: str, only: str | None = None) -> DataFrame:

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
 from pulsar_lunar_spark.functions.envelope import decode_payload, to_envelope
-from pulsar_lunar_spark.session import load_table
+from pulsar_lunar_spark.session import artifact_dir, load_table
 from pulsar_lunar_spark.sources.log import MessageLog
 from pulsar_lunar_spark.queries.registry import register
 
@@ -264,31 +264,15 @@ def q_custom_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _seek_log(spark: SparkSession, sf_dir: str) -> "MessageLog":
-    """A cached single-partition events topic for the seek query (one
-    produce per sf_dir; a marker file distinguishes complete from partial).
-    Single-partition so the DuckDB oracle needs no knowledge of Spark's
-    key-hash router; multi-partition seek is covered by pytest."""
-    import os
-    import shutil
-    import tempfile
+def _seek_log(spark: SparkSession, sf_dir: str) -> MessageLog:
+    """A single-partition events topic for the seek query, produced once
+    as an artifact (session.artifact_dir). Single-partition so the DuckDB
+    oracle needs no knowledge of Spark's key-hash router; multi-partition
+    seek is covered by pytest."""
 
-    from pulsar_lunar_spark.sources.log import MessageLog
-
-    from pulsar_lunar_spark.session import scratch_root
-
-    # per-(dataset, process) segment: concurrent harnesses must not race
-    # on the marker (same TOCTOU reasoning as streaming_q._sf_tag);
-    # removed at exit — tmpfs pid dirs must not accumulate across runs
-    base = scratch_root("pulsar_lunar_seeklog", sf_dir)
-    log = MessageLog(spark, base)
-    marker = os.path.join(base, "_PRODUCED")
-    if not os.path.exists(marker):
-        shutil.rmtree(base, ignore_errors=True)
-        log = MessageLog(spark, base)
-        e = load_table(spark, sf_dir, "events")
-        log.produce(
-            e,
+    def produce(root: str) -> None:
+        MessageLog(spark, root).produce(
+            load_table(spark, sf_dir, "events"),
             topic="events",
             payload_cols=["event_id", "event_type", "value"],
             key="user_id",
@@ -297,9 +281,8 @@ def _seek_log(spark: SparkSession, sf_dir: str) -> "MessageLog":
             publish_time="ts",
             num_partitions=1,
         )
-        with open(marker, "w"):
-            pass
-    return log
+
+    return MessageLog(spark, artifact_dir(spark, sf_dir, "pulsar_lunar_seeklog", produce))
 
 
 @register(
@@ -358,36 +341,25 @@ def q_geo_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: replication is one distributed scan + one partitioned write
     per target cluster — no shuffle, bandwidth-bound like the broker's
     replicator."""
-    import shutil
     import tempfile
 
-    from pulsar_lunar_spark.session import (
-        scratch_at_exit,
-        scratch_root,
-        spool_base_dir,
-    )
+    from pulsar_lunar_spark.session import scratch_at_exit, spool_base_dir
 
     root = spool_base_dir()
+
     # the source topic is read-only under replication, so it is produced
-    # once per (process, sf) and reused (marker-file + per-PID pattern,
-    # same as _shared_log); only the replicas are fresh per call
-    src_root = scratch_root("pl_georepl_src", sf_dir)
-    marker = os.path.join(src_root, "_PRODUCED")
-    src = MessageLog(spark, src_root)
-    if not os.path.exists(marker):
-        shutil.rmtree(src_root, ignore_errors=True)
-        src = MessageLog(spark, src_root)
-        e = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 3000)
-        src.produce(
-            e,
+    # once as an artifact and reused; only the replicas are fresh per call
+    def produce(src_root: str) -> None:
+        MessageLog(spark, src_root).produce(
+            load_table(spark, sf_dir, "events").filter(F.col("event_id") < 3000),
             topic="events",
             payload_cols=["event_id", "value"],
             key="user_id",
             sequence_id="event_id",
             publish_time="ts",
         )
-        with open(marker, "w"):
-            pass
+
+    src = MessageLog(spark, artifact_dir(spark, sf_dir, "pl_georepl_src", produce))
     replicas = {
         name: MessageLog(
             spark,
@@ -528,17 +500,10 @@ def q_topic_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoff = datetime(1970, 1, 1) + timedelta(microseconds=cut_us)
     # retention MUTATES the topic, so each call gets a PRIVATE copy —
     # but the pristine produce is deterministic, so it is produced once
-    # per (process, sf) and file-copied per call (a tmpfs copytree is
-    # ~50 ms where the Spark produce job is >1 s; the marker-file +
-    # per-PID pattern is _shared_log's)
-    from pulsar_lunar_spark.session import scratch_root
-
-    pristine = scratch_root("pl_retention_src", sf_dir)
-    marker = os.path.join(pristine, "_PRODUCED")
-    if not os.path.exists(marker):
-        shutil.rmtree(pristine, ignore_errors=True)
-        src = MessageLog(spark, pristine)
-        src.produce(
+    # as an artifact and file-copied per call (a tmpfs copytree is ~50 ms
+    # where the Spark produce job is >1 s)
+    def produce(root: str) -> None:
+        MessageLog(spark, root).produce(
             e,
             topic="events",
             payload_cols=["event_id"],
@@ -548,8 +513,8 @@ def q_topic_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
             num_partitions=1,
             time_partition=True,
         )
-        with open(marker, "w"):
-            pass
+
+    pristine = artifact_dir(spark, sf_dir, "pl_retention_src", produce)
     from pulsar_lunar_spark.session import scratch_at_exit
 
     work = tempfile.mkdtemp(prefix="pl_retention_", dir=os.path.dirname(pristine))

@@ -481,20 +481,21 @@ _BUCKET_N = 8
 
 
 def _bucketed_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Write orders/lineitem hash-bucketed by order key ONCE per
-    (dataset, process): external tables on tmpfs scratch (data dies with
-    the process; catalog entries die with the session). Fixture cost,
-    not query cost — the pattern every repeated fact-fact join pays once
-    per day at 100 TB, then amortizes over every downstream join."""
+    """Write orders/lineitem hash-bucketed by order key ONCE (a
+    session.artifact_dir artifact): external tables on tmpfs scratch
+    (data dies with the process; catalog entries die with the session).
+    Fixture cost, not query cost — the pattern every repeated fact-fact
+    join pays once per day at 100 TB, then amortizes over every
+    downstream join."""
     import re
 
     from pulsar_lunar_spark.operators.partitioning import write_bucketed
-    from pulsar_lunar_spark.session import scratch_root, sf_cache_tag
+    from pulsar_lunar_spark.session import artifact_dir, sf_cache_tag
 
     tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_cache_tag(sf_dir))
     t_orders, t_lineitem = f"bkt_orders_{tag}", f"bkt_lineitem_{tag}"
-    if not spark.catalog.tableExists(t_lineitem):
-        root = scratch_root("bucketed", sf_dir)
+
+    def write(root: str) -> None:
         write_bucketed(
             load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority"),
             t_orders,
@@ -511,6 +512,8 @@ def _bucketed_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             sort_cols=["l_orderkey"],
             path=os.path.join(root, "lineitem"),
         )
+
+    artifact_dir(spark, sf_dir, "bucketed", write)
     return t_orders, t_lineitem
 
 

@@ -317,9 +317,9 @@ _NEWEST_FIRST: tuple[str, ...] = (
     "q_stream_media_ingest",
     "q_stream_audio_ingest",
     "q_stream_image_ingest",
-    # round-11 rewrite: trained weights cache per (process, spool) — warm
-    # calls pay only the eval pass (2.3 -> 1.04 s solo median); the
-    # cloned-session epoch loop closes the ADVICE r10 conf-leak finding
+    # round-11 rewrite: every call trains its four epochs plus the eval
+    # pass (r12); the cloned-session epoch loop closes the ADVICE r10
+    # conf-leak finding
     "q_train_quality_lr",
 )
 

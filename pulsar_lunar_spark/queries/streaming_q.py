@@ -6,9 +6,9 @@ results, noop for observed-metrics runs) and returns the materialized
 result, which the driver hash-checks against batch SQL — proving the
 streaming and batch semantics agree (the unified-model claim, SIGMOD'18).
 
-Each run uses a fresh checkpoint (idempotent re-runs) over a per-process
-cached produce of the events topic; memory-sink table names are
-namespaced per query to avoid collisions.
+Each run uses a fresh checkpoint (idempotent re-runs) over one produce
+of the events topic (a session.artifact_dir artifact); memory-sink table
+names are namespaced per query to avoid collisions.
 
 Scale notes: these exact pipelines run unchanged against an unbounded
 source — availableNow is swapped for a processing-time trigger and the
@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pulsar_lunar_spark.queries.registry import register
-from pulsar_lunar_spark.session import load_table
+from pulsar_lunar_spark.session import artifact, artifact_dir, load_table
 from pulsar_lunar_spark.sources.log import MessageLog
 from pulsar_lunar_spark.streaming import run_available_now, stateful_sessionize
 
@@ -42,10 +42,9 @@ def _tmp_root() -> str:
 
 def _sf_tag(sf_dir: str) -> str:
     # per-(dataset, process) path segment: two concurrent harnesses (pytest
-    # + the driver on the same sf) must never rmtree/produce into a
-    # directory the other is mid-read on — the marker-file check alone is a
-    # TOCTOU race — and two sf_dirs sharing a basename must never reuse one
-    # another's produced topics (the tag hashes the resolved path)
+    # + the driver on the same sf) must never rmtree a checkpoint or sink
+    # directory the other is mid-read on, and two sf_dirs sharing a
+    # basename must never share one (the tag hashes the resolved path)
     from pulsar_lunar_spark.session import sf_cache_tag
 
     return sf_cache_tag(sf_dir)
@@ -63,22 +62,16 @@ def _pid_root(sf_dir: str) -> str:
 
 
 def _shared_log(spark: SparkSession, sf_dir: str, copies: int = 1) -> MessageLog:
-    """Produce the events topic ONCE per (process, sf_dir, copies) and
-    reuse it.
+    """The events topic produced ``copies`` times, one artifact per
+    (dataset, copies) — see session.artifact_dir.
 
     The produced log is a deterministic function of the input table, so
     every query (and every bench rep) can replay the same directory —
-    re-producing per call tripled the harness cost for zero coverage.  A
-    marker file distinguishes a complete produce from a partial one.
+    re-producing per call tripled the harness cost for zero coverage.
     """
-    import shutil
 
-    base = os.path.join(_pid_root(sf_dir), f"log_x{copies}")
-    log = MessageLog(spark, base)
-    marker = os.path.join(base, "_PRODUCED")
-    if not os.path.exists(marker):
-        shutil.rmtree(base, ignore_errors=True)
-        log = MessageLog(spark, base)
+    def produce(root: str) -> None:
+        log = MessageLog(spark, root)
         e = load_table(spark, sf_dir, "events")
         for _ in range(copies):
             log.produce(
@@ -90,9 +83,10 @@ def _shared_log(spark: SparkSession, sf_dir: str, copies: int = 1) -> MessageLog
                 sequence_id="event_id",
                 publish_time="ts",
             )
-        with open(marker, "w"):
-            pass
-    return log
+
+    return MessageLog(
+        spark, artifact_dir(spark, sf_dir, f"pl_streamq_log_x{copies}", produce)
+    )
 
 
 def _fresh_checkpoint(sf_dir: str, tag: str) -> str:
@@ -105,26 +99,18 @@ def _fresh_checkpoint(sf_dir: str, tag: str) -> str:
     return ck
 
 
-_EVENTS_MAX_US: dict[str, int] = {}
-
-# deterministic end-of-stream cutoffs derived from the immutable events
-# table, cached per (resolved sf_dir, tag) — see _events_max_us
-_CUTOFF_CACHE: dict = {}
-
-
 def _events_max_us(spark: SparkSession, sf_dir: str) -> int:
-    """max(ts) of the immutable events table, in epoch micros — cached per
-    resolved sf_dir (deterministic function of read-only test data; the
+    """max(ts) of the events table, in epoch micros — an artifact (the
     scan is a whole batch job that deterministic end-of-stream cutoffs
     would otherwise re-pay on every call)."""
-    key = os.path.realpath(sf_dir)
-    if key not in _EVENTS_MAX_US:
-        _EVENTS_MAX_US[key] = (
-            load_table(spark, sf_dir, "events")
-            .agg(F.unix_micros(F.max("ts")).alias("m"))
-            .head()["m"]
-        )
-    return _EVENTS_MAX_US[key]
+    return artifact(
+        spark,
+        sf_dir,
+        "events_max_us",
+        lambda: load_table(spark, sf_dir, "events")
+        .agg(F.unix_micros(F.max("ts")).alias("m"))
+        .head()["m"],
+    )
 
 
 def _fresh_dir(sf_dir: str, tag: str) -> str:
@@ -523,25 +509,25 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         _fresh_checkpoint(sf_dir, "ssouter"),
         state_partitions=4,
     )
-    # deterministic eviction cutoff over the IMMUTABLE events table —
-    # cached per (process, sf_dir) like _events_max_us; re-scanning per
-    # call paid a whole batch job for a constant
-    ckey = (os.path.realpath(sf_dir), "outer_join_cutoff")
-    if ckey not in _CUTOFF_CACHE:
-        _CUTOFF_CACHE[ckey] = (
-            load_table(spark, sf_dir, "events")
-            .agg(
-                (
-                    F.least(
-                        F.max(F.when(F.col("event_type") == "click", F.col("ts"))),
-                        F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))),
-                    )
-                    - F.expr("interval 60 minutes")
-                ).alias("t")
-            )
-            .head()["t"]
+    # deterministic eviction cutoff over the events table — an artifact
+    # like _events_max_us; re-scanning per call paid a whole batch job
+    # for a constant
+    cutoff = artifact(
+        spark,
+        sf_dir,
+        "outer_join_cutoff",
+        lambda: load_table(spark, sf_dir, "events")
+        .agg(
+            (
+                F.least(
+                    F.max(F.when(F.col("event_type") == "click", F.col("ts"))),
+                    F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))),
+                )
+                - F.expr("interval 60 minutes")
+            ).alias("t")
         )
-    cutoff = _CUTOFF_CACHE[ckey]
+        .head()["t"],
+    )
     return (
         spark.read.parquet(out)
         .filter(F.col("c_ts") < F.lit(cutoff))
@@ -795,22 +781,14 @@ def q_compressed_topic(spark: SparkSession, sf_dir: str) -> DataFrame:
     uncompressed and a zstd topic; the read-back counts must match the
     source exactly (lossless codec) and the zstd topic's on-disk bytes
     must be strictly smaller (the flag a wrong codec config flips)."""
-    import os as _os
-
-    # cached per process (same _PRODUCED-marker discipline as _shared_log):
-    # the two probe topics are a deterministic function of the input, and
-    # re-producing both per bench rep doubled the query's wall-clock
-    base = os.path.join(_pid_root(sf_dir), "compress_probe")
-    probe = MessageLog(spark, base)
-    marker = _os.path.join(base, "_PRODUCED")
-    if not _os.path.exists(marker):
-        import shutil
-
-        shutil.rmtree(base, ignore_errors=True)
-        probe = MessageLog(spark, base)
+    # the two probe topics are a deterministic function of the input (an
+    # artifact), and re-producing both per bench rep doubled the query's
+    # wall-clock
+    def produce(root: str) -> None:
+        log = MessageLog(spark, root)
         e = load_table(spark, sf_dir, "events")
         for topic, codec in (("plain", "uncompressed"), ("packed", "zstd")):
-            probe.produce(
+            log.produce(
                 e,
                 topic=topic,
                 payload_cols=["event_id", "event_type", "value"],
@@ -819,13 +797,16 @@ def q_compressed_topic(spark: SparkSession, sf_dir: str) -> DataFrame:
                 publish_time="ts",
                 compression=codec,
             )
-        open(marker, "w").close()
+
+    probe = MessageLog(
+        spark, artifact_dir(spark, sf_dir, "pl_streamq_compress_probe", produce)
+    )
 
     def _bytes(topic: str) -> int:
         root = probe.topic_path(topic)
         return sum(
-            _os.path.getsize(_os.path.join(r, f))
-            for r, _d, fs in _os.walk(root)
+            os.path.getsize(os.path.join(r, f))
+            for r, _d, fs in os.walk(root)
             for f in fs
             if f.endswith(".parquet")
         )
@@ -890,20 +871,13 @@ def q_multi_topic_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the union is a multi-source parquet scan (each topic brings
     its own file splits, no shuffle before the final demux aggregate)."""
     # the per-type topics are a deterministic function of the input table —
-    # produce them ONCE per sf (the _shared_log pattern) and let every rep
-    # replay the same directory
-    probe_base = os.path.join(_pid_root(sf_dir), "multitopic_probe")
-    probe = MessageLog(spark, probe_base)
-    marker = os.path.join(probe_base, "_PRODUCED")
-    if not os.path.exists(marker):
-        import shutil
-
-        shutil.rmtree(probe_base, ignore_errors=True)
-        probe = MessageLog(spark, probe_base)
+    # produced once as an artifact; every rep replays the same directory
+    def produce(root: str) -> None:
+        log = MessageLog(spark, root)
         e = load_table(spark, sf_dir, "events")
         types = [r["event_type"] for r in e.select("event_type").distinct().collect()]
         for etype in types:
-            probe.produce(
+            log.produce(
                 e.filter(F.col("event_type") == etype),
                 topic=f"events.{etype}",
                 payload_cols=["event_id", "event_type", "value"],
@@ -911,7 +885,10 @@ def q_multi_topic_read(spark: SparkSession, sf_dir: str) -> DataFrame:
                 sequence_id="event_id",
                 publish_time="ts",
             )
-        open(marker, "w").close()
+
+    probe = MessageLog(
+        spark, artifact_dir(spark, sf_dir, "pl_streamq_multitopic_probe", produce)
+    )
     back = probe.read_pattern(r"^events\.")
     return (
         back.groupBy("topic")
@@ -1265,20 +1242,14 @@ def q_dlq_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pulsar_lunar_spark.streaming.ops import foreach_batch_with_dlq
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    # dedicated probe topic, produced once per process: the router's work
-    # is per-poison-key, and draining the full 100k-message topic three
-    # times would measure the file source, not the DLQ ledger. The slice
-    # keeps both paths flowing (good rows + every poison row among the
-    # first 20k ids) and the oracle applies the same slice.
-    log = MessageLog(spark, os.path.join(_pid_root(sf_dir), "dlqprobe"))
-    marker = os.path.join(log.root, "_PRODUCED")
-    if not os.path.exists(marker):
-        import shutil
-
-        shutil.rmtree(log.root, ignore_errors=True)
-        log = MessageLog(spark, os.path.join(_pid_root(sf_dir), "dlqprobe"))
+    # dedicated probe topic, produced once as an artifact: the router's
+    # work is per-poison-key, and draining the full 100k-message topic
+    # three times would measure the file source, not the DLQ ledger. The
+    # slice keeps both paths flowing (good rows + every poison row among
+    # the first 20k ids) and the oracle applies the same slice.
+    def produce(root: str) -> None:
         e = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 20000)
-        log.produce(
+        MessageLog(spark, root).produce(
             e,
             topic="events",
             payload_cols=["value"],
@@ -1287,8 +1258,8 @@ def q_dlq_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
             sequence_id="event_id",
             publish_time="ts",
         )
-        with open(marker, "w"):
-            pass
+
+    log = MessageLog(spark, artifact_dir(spark, sf_dir, "pl_streamq_dlqprobe", produce))
     payload = StructType([StructField("value", DoubleType())])
     dlq_dir = _fresh_dir(sf_dir, "dlq_out")
     retry_dir = _fresh_dir(sf_dir, "dlq_ledger")

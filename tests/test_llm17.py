@@ -121,24 +121,21 @@ def test_train_quality_lr_matches_bruteforce(spark, sf_dir):
 
 def test_train_quality_lr_retrains_per_call(spark, sf_dir):
     """r12 (VERDICT r11 item 1): the training query must never serve a
-    memoised model. Poison the process-level model artifact and verify a
+    memoised model. Poison the model artifact in the store and verify a
     fresh call RETRAINS (bit-identical result, not the poison) and
     overwrites the artifact for downstream consumers."""
-    from pulsar_lunar_spark.queries import llm17
+    from pulsar_lunar_spark.session import artifact
 
     q = all_queries()["q_train_quality_lr"]
     base = q.fn(spark, sf_dir).collect()
-    assert llm17._LR_MODEL_ARTIFACT  # artifact published for consumers
-    poisoned = {
-        tag: [[v + 1_000 for v in w] for w in ws]
-        for tag, ws in llm17._LR_MODEL_ARTIFACT.items()
-    }
-    llm17._LR_MODEL_ARTIFACT.update(poisoned)
+    model = artifact(spark, sf_dir, "lr_model", lambda: None)
+    assert model  # artifact published for consumers
+    poisoned = tuple(tuple(v + 1_000 for v in w) for w in model)
+    artifact(spark, sf_dir, "lr_model", lambda: poisoned, rebuild=True)
     again = q.fn(spark, sf_dir).collect()
     assert again == base  # retrained from scratch — poison never served
-    assert all(
-        llm17._LR_MODEL_ARTIFACT[tag] != poisoned[tag] for tag in poisoned
-    )  # artifact refreshed by the training pass
+    # artifact refreshed by the training pass
+    assert artifact(spark, sf_dir, "lr_model", lambda: None) == model
 
 
 def test_train_quality_lr_learns_past_fixed_baseline(spark, sf_dir):

@@ -145,6 +145,22 @@ def test_unigram_train_replicates_python_reference(spark):
     assert epoch_cost[-1] <= epoch_cost[1] + 1_000
 
 
+def test_unigram_lm_train_trains_on_every_call(spark, sf_dir):
+    """The training query's timed region trains: a model planted under
+    the store's unigram key (what an earlier call leaves for the encode
+    consumer) never reaches its result, and the call refreshes it."""
+    from pulsar_lunar_spark.queries import all_queries
+    from pulsar_lunar_spark.session import artifact
+
+    q = all_queries()["q_unigram_lm_train"]
+    clean = q.fn(spark, sf_dir).collect()
+    model = artifact(spark, sf_dir, "unigram_model", lambda: None)
+    poisoned = ({"z": 5_000_000}, ["z"], ["z"], {"zz": 10**9}, [0, 0, 10**9])
+    artifact(spark, sf_dir, "unigram_model", lambda: poisoned, rebuild=True)
+    assert q.fn(spark, sf_dir).collect() == clean
+    assert artifact(spark, sf_dir, "unigram_model", lambda: None) == model
+
+
 def test_neardup_safe_split_excludes_exactly_leaky_eval_docs(spark):
     """Exclusions = precisely the eval-candidate docs with a verified
     near-dup pair to a train doc (independent recomputation from the

@@ -68,24 +68,43 @@ def test_sf_cache_tag_distinguishes_same_basename(tmp_path):
     assert sf_cache_tag(str(a)) == sf_cache_tag(str(a) + "/")
 
 
-def test_streaming_cutoff_caches_key_on_resolved_path(tmp_path):
-    # the per-process cutoff memos must never serve one dataset's constant
-    # to another (same hazard class as sf_cache_tag)
-    import os
+def test_artifacts_follow_dataset_content(spark, sf_dir, tmp_path):
+    # every cached derived value follows the dataset's content: rewriting
+    # events.parquet IN PLACE rebuilds the cutoff constant, the table plan
+    # and the produced topic; two datasets sharing a basename never share
+    # an entry (same hazard class as sf_cache_tag)
+    import shutil
 
-    from pulsar_lunar_spark.queries import streaming_q as sq
+    import pyarrow.parquet as pq
 
-    a = tmp_path / "x" / "sf0.01"
-    b = tmp_path / "y" / "sf0.01"
-    a.mkdir(parents=True)
-    b.mkdir(parents=True)
-    assert os.path.realpath(str(a)) != os.path.realpath(str(b))
-    sq._EVENTS_MAX_US[os.path.realpath(str(a))] = 111
-    assert os.path.realpath(str(b)) not in sq._EVENTS_MAX_US
-    sq._CUTOFF_CACHE[(os.path.realpath(str(a)), "outer_join_cutoff")] = 1
-    assert (os.path.realpath(str(b)), "outer_join_cutoff") not in sq._CUTOFF_CACHE
-    del sq._EVENTS_MAX_US[os.path.realpath(str(a))]
-    del sq._CUTOFF_CACHE[(os.path.realpath(str(a)), "outer_join_cutoff")]
+    from pulsar_lunar_spark.queries.messaging import _seek_log
+    from pulsar_lunar_spark.queries.streaming_q import _events_max_us
+    from pulsar_lunar_spark.session import load_table
+
+    base = os.path.basename(os.path.normpath(sf_dir))
+    a, b = tmp_path / "x" / base, tmp_path / "y" / base
+    for d in (a, b):
+        d.mkdir(parents=True)
+        for name in os.listdir(sf_dir):
+            if name.endswith(".parquet"):
+                shutil.copyfile(os.path.join(sf_dir, name), d / name)
+    events = pq.read_table(a / "events.parquet").sort_by("ts")
+    head = events.slice(0, events.num_rows // 2)  # pyarrow keeps the ts type
+
+    def observed(d):
+        return (
+            _events_max_us(spark, str(d)),
+            load_table(spark, str(d), "events").count(),
+            _seek_log(spark, str(d)).read("events").count(),
+        )
+
+    pq.write_table(head, b / "events.parquet")
+    full, half = observed(a), observed(b)
+    assert full[1:] == (events.num_rows, events.num_rows)
+    assert half[1:] == (head.num_rows, head.num_rows)
+    assert half[0] < full[0]
+    pq.write_table(head, a / "events.parquet")
+    assert observed(a) == half
 
 
 def test_sample_head_leads_with_unconfirmed():
