@@ -5,21 +5,22 @@ A long-running ingest (micro-batched streaming sink, hourly mixture
 drops) accretes thousands of KB-sized files; scan cost then becomes
 file-open-bound, not byte-bound. Compaction rewrites a directory to
 ~target-sized files. Upsert gives the CDC/dedup-by-key write path that
-table formats call MERGE INTO, built from a full-outer join + atomic
-directory swap — no Delta/Iceberg dependency, same semantics for the
-"latest record per key wins" case (the reference's compacted-topic model,
-/root/reference/src/PulsarApi.proto:317-319 `readCompacted`, applied to
-storage instead of a broker).
+table formats call MERGE INTO, built from a full-outer join + a
+directory swap (session.replace_dir) — no Delta/Iceberg dependency,
+same semantics for the "latest record per key wins" case (the
+reference's compacted-topic model, ``readCompacted`` in
+PulsarApi.proto:317-319, applied to storage instead of a broker).
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from pulsar_lunar_spark.session import replace_dir
 
 
 def plan_compaction(
@@ -46,17 +47,16 @@ def compact_files(
 ) -> int:
     """Rewrite a parquet directory to ~target_bytes files; returns the new
     file count. Uses coalesce (no shuffle — merges existing splits) and an
-    atomic tmp-dir swap so readers never observe a half-written table.
+    tmp-dir swap (session.replace_dir) so readers never observe a
+    half-written table.
     """
     n_now, n_target = plan_compaction(spark, path, target_bytes)
     if n_now <= n_target:
         return n_now
-    tmp = f"{path.rstrip('/')}.__compact_{uuid.uuid4().hex[:8]}"
-    spark.read.parquet(path).coalesce(n_target).write.mode("overwrite").parquet(tmp)
-    old = f"{path.rstrip('/')}.__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    replace_dir(
+        path,
+        spark.read.parquet(path).coalesce(n_target).write.mode("overwrite").parquet,
+    )
     return sum(
         1
         for _root, _d, files in os.walk(path)
@@ -80,8 +80,8 @@ def merge_upsert(
     guarantee). Implemented as union + one per-key max-struct aggregate:
     the target is hash-partitioned by key once; at scale, pre-bucketing
     the target by the key makes the rewrite shuffle-free
-    (partitioning.write_bucketed). Atomic directory swap as in
-    compact_files.
+    (partitioning.write_bucketed). The rewrite replaces the directory
+    through session.replace_dir.
     """
     target = spark.read.parquet(target_path)
     cols = target.columns
@@ -103,12 +103,7 @@ def merge_upsert(
         )
         .select(*key_cols, *[F.col(f"__win.{c}").alias(c) for c in payload])
     )
-    tmp = f"{target_path.rstrip('/')}.__merge_{uuid.uuid4().hex[:8]}"
-    merged.select(*cols).write.mode("overwrite").parquet(tmp)
-    old = f"{target_path.rstrip('/')}.__old_{uuid.uuid4().hex[:8]}"
-    os.rename(target_path, old)
-    os.rename(tmp, target_path)
-    shutil.rmtree(old)
+    replace_dir(target_path, merged.select(*cols).write.mode("overwrite").parquet)
 
 
 def cdc_apply(
@@ -140,7 +135,7 @@ def cdc_apply(
     (the same age-based GC Kafka compaction applies to its null
     records).
 
-    One union + per-key max-struct aggregate + atomic directory swap; at
+    One union + per-key max-struct aggregate + session.replace_dir; at
     scale, bucketing the target by the key makes the rewrite
     shuffle-free on the target side."""
     cols = changes.columns
@@ -175,15 +170,7 @@ def cdc_apply(
             *[F.col(f"__win.{c}").alias(c) for c in payload],
         )
     )
-    if not exists:
-        merged.select(*cols).write.mode("overwrite").parquet(target_path)
-        return
-    tmp = f"{target_path.rstrip('/')}.__cdc_{uuid.uuid4().hex[:8]}"
-    merged.select(*cols).write.mode("overwrite").parquet(tmp)
-    old = f"{target_path.rstrip('/')}.__old_{uuid.uuid4().hex[:8]}"
-    os.rename(target_path, old)
-    os.rename(tmp, target_path)
-    shutil.rmtree(old)
+    replace_dir(target_path, merged.select(*cols).write.mode("overwrite").parquet)
 
 
 def cdc_live(spark: SparkSession, target_path: str, op_col: str = "op") -> DataFrame:
@@ -203,17 +190,12 @@ def cdc_vacuum_tombstones(
     once the source can no longer redeliver changes that old (the
     redelivery/retention horizon), exactly like compacted-log null-record
     expiry. Tombstones NEWER than the horizon stay: they are still
-    guarding against in-flight stale upserts. Atomic swap as in
-    cdc_apply."""
+    guarding against in-flight stale upserts. The rewrite replaces the
+    directory through session.replace_dir."""
     kept = spark.read.parquet(target_path).filter(
         (F.col(op_col) != "d") | (F.col(version_col) > F.lit(horizon))
     )
-    tmp = f"{target_path.rstrip('/')}.__vac_{uuid.uuid4().hex[:8]}"
-    kept.write.mode("overwrite").parquet(tmp)
-    old = f"{target_path.rstrip('/')}.__old_{uuid.uuid4().hex[:8]}"
-    os.rename(target_path, old)
-    os.rename(tmp, target_path)
-    shutil.rmtree(old)
+    replace_dir(target_path, kept.write.mode("overwrite").parquet)
 
 
 # ---------------------------------------------------------------------------
@@ -290,8 +272,8 @@ def incremental_agg_refresh(
     aggregates: AGG(base ∪ delta) = AGG(AGG(base) ∪ AGG(delta)), so a
     refresh costs O(delta + |agg|) — never a rescan of the base fact
     table. The delta is pre-aggregated, unioned with the stored state,
-    re-summed per key, and atomically swapped in (same _SUCCESS-free
-    tmp-dir swap as merge_upsert; readers see old or new, never half).
+    re-summed per key, and swapped in through session.replace_dir
+    (readers see old or new, never half).
 
     `sum_cols` must be integral columns (exact addition — the identity
     only survives reorder for associative-exact arithmetic). AVG is
@@ -320,12 +302,4 @@ def incremental_agg_refresh(
         )
     else:
         merged = delta_agg
-    tmp = f"{agg_path.rstrip('/')}.__refresh_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(agg_path):
-        old = f"{agg_path.rstrip('/')}.__old_{uuid.uuid4().hex[:8]}"
-        os.rename(agg_path, old)
-        os.rename(tmp, agg_path)
-        shutil.rmtree(old)
-    else:
-        os.rename(tmp, agg_path)
+    replace_dir(agg_path, merged.write.mode("overwrite").parquet)

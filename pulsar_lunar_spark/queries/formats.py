@@ -1,12 +1,14 @@
 """Source/sink format coverage: CSV, JSON(lines), ORC round-trips through
 real Spark writers/readers (SURVEY §2B scans/sinks row).
 
-Each query writes a dimension table out in the target format (overwrite —
-idempotent re-runs), reads it back with an explicit schema, and aggregates
-the re-read data joined against parquet-sourced facts. The oracle aggregates
-the same tables straight from parquet, so a hash match proves the format
-round-trip is lossless *through the declared schema* (CSV/JSON carry no
-native types — the explicit read schema is the contract, exactly like a
+Each query writes a dimension table out in the target format (into a
+fresh session.scratch_dir per call, so re-runs are idempotent and the
+previous call's result stays readable), reads it back with an explicit
+schema, and aggregates the re-read data joined against parquet-sourced
+facts. The oracle aggregates the same tables straight from parquet, so
+a hash match proves the format round-trip is lossless *through the
+declared schema* (CSV/JSON carry no native types — the explicit read
+schema is the contract, exactly like a
 Pulsar topic schema, /root/reference/src/PulsarApi.proto:25-50).
 
 Scale notes: format conversion is a per-partition streaming rewrite (no
@@ -17,13 +19,12 @@ side never leaves parquet.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pulsar_lunar_spark.queries.registry import register
-from pulsar_lunar_spark.session import load_table
+from pulsar_lunar_spark.session import load_table, scratch_dir
 
 _NATION_AGG_ORACLE = """
 SELECT r_name, CAST(COUNT(*) AS BIGINT) AS n_nations,
@@ -34,18 +35,9 @@ ORDER BY r_name
 """
 
 
-def _roundtrip_dir(sf_dir: str, fmt: str) -> str:
-    # per-process path: concurrent harnesses on the same sf must not
-    # overwrite each other's roundtrip fixtures mid-read
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    return os.path.join(
-        tempfile.gettempdir(), "pulsar_lunar_formats", f"{tag}-{os.getpid()}", fmt
-    )
-
-
 def _nation_roundtrip(spark: SparkSession, sf_dir: str, fmt: str, **read_opts) -> DataFrame:
     nation = load_table(spark, sf_dir, "nation")
-    path = _roundtrip_dir(sf_dir, fmt)
+    path = scratch_dir(f"pl_formats_{fmt}", sf_dir)
     nation.write.mode("overwrite").format(fmt).options(**read_opts).save(path)
     back = (
         spark.read.format(fmt)
@@ -101,7 +93,7 @@ def q_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     String/None schema type (/root/reference/src/PulsarApi.proto:26-43):
     payload bytes with no structure, schema applied by the consumer."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
-    path = _roundtrip_dir(sf_dir, "text")
+    path = scratch_dir("pl_formats_text", sf_dir)
     docs.select(F.col("text").alias("value")).write.mode("overwrite").text(path)
     back = spark.read.text(path)
     return back.select(
@@ -137,17 +129,14 @@ def q_binary_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     starts from (one row per object: path / length / content bytes, the
     content column feeding the decode UDFs in operators/multimodal.py).
     Fixture: 40 bounded per-doc files written from documents.text (UTF-8
-    bytes, overwrite-idempotent); the read path under test parses the id
-    from the file path and must recover byte length + md5 exactly — the
+    bytes, a fresh directory per call); the read path under test parses
+    the id from the file path and must recover byte length + md5 exactly — the
     same (path, bytes) contract as an object-store image/audio bucket.
     At scale the binaryFile source lists and splits by file, so the scan
     parallelizes per object with no shuffle."""
-    import shutil
-
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 40)
-    path = _roundtrip_dir(sf_dir, "binary_docs")
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path, exist_ok=True)
+    path = scratch_dir("pl_formats_binary_docs", sf_dir)
+    os.makedirs(path)
     # bounded fixture build (40 rows) — the operator under test is the read
     for r in d.select("doc_id", "text").collect():
         with open(os.path.join(path, f"{r.doc_id}.bin"), "wb") as fh:
@@ -184,7 +173,7 @@ def q_file_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay out of the registered result only because the scratch path is
     process-scoped while oracle SQL is static.)"""
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 9 == 0)
-    path = _roundtrip_dir(sf_dir, "provenance")
+    path = scratch_dir("pl_formats_provenance", sf_dir)
     o.select("o_orderkey").repartition(4).write.mode("overwrite").parquet(path)
     back = spark.read.parquet(path).select(
         F.input_file_name().alias("f"), "o_orderkey"
@@ -227,7 +216,7 @@ def q_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's analytic split exactly — proving malformed rows are neither
     dropped nor double-counted."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    path = _roundtrip_dir(sf_dir, "json_corrupt")
+    path = scratch_dir("pl_formats_json_corrupt", sf_dir)
     line = F.when(
         F.col("doc_id") % 7 == 0,
         F.concat(F.lit('{"doc_id": '), F.col("doc_id").cast("string"), F.lit(", TRUNC")),
@@ -272,7 +261,7 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     column. Non-null counts per column must equal the oracle's analytic
     even/odd split and the key sum proves no row was lost or duplicated."""
     nation = load_table(spark, sf_dir, "nation")
-    base = _roundtrip_dir(sf_dir, "parquet_evolved")
+    base = scratch_dir("pl_formats_parquet_evolved", sf_dir)
     nation.filter(F.col("n_nationkey") % 2 == 0).select("n_nationkey", "n_name").write.mode(
         "overwrite"
     ).parquet(os.path.join(base, "batch=old"))

@@ -287,14 +287,14 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     written-once 3-column table; the approx and exact top-10 are then
     two TakeOrdered scans of that tiny table. The old form ran the full
     corpus pass twice (once LSH-filtered, once brute-force)."""
-    from pulsar_lunar_spark.session import scratch_root, versioned_slot
+    from pulsar_lunar_spark.session import scratch_dir
 
     emb = load_table(spark, sf_dir, "embeddings")
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()["embedding"]]
     scored = S.ann_cosine_scored(emb, "embedding", qvec)
     # per-CALL slot (keep-last-2): a fixed overwrite slot would delete
     # the files a previously returned result still lists
-    path = versioned_slot(scratch_root("pl_ann_scored", sf_dir), "scored")
+    path = scratch_dir("pl_ann_scored", sf_dir)
     scored.write.mode("overwrite").parquet(path)
     sc = spark.read.parquet(path)
     approx = (

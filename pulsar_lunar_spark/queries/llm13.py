@@ -985,7 +985,7 @@ def q_kn_doc_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc mean table still spools (two consumers: the corpus mean and
     the rollup)."""
     from pulsar_lunar_spark.operators.corpus import kn_bigram_model
-    from pulsar_lunar_spark.session import scratch_root, versioned_slot
+    from pulsar_lunar_spark.session import scratch_dir
 
     docs = load_table(spark, sf_dir, "documents")
     words = F.split(normalize_text(F.col("text")), " ")
@@ -1020,7 +1020,7 @@ def q_kn_doc_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The per-doc mean table feeds TWO consumers (the corpus mean and the
     # per-source rollup) — spool it once so the scoring scan runs once,
     # not per consumer (doc-level rows, linear at any corpus size).
-    dslot = versioned_slot(scratch_root("pulsar_lunar_kn", sf_dir), "docm")
+    dslot = scratch_dir("pl_kn_docm", sf_dir)
     raw_docm.write.mode("overwrite").parquet(dslot)
     docm = spark.read.parquet(dslot)
     tot = docm.agg(F.expr("sum(m) div count(1)").cast("long").alias("mu"))

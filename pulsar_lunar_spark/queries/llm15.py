@@ -425,7 +425,7 @@ def q_source_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     lesson); word and source marginals ride KEYED windows over the
     V x S-bounded cell table; N is a 1-row broadcast scalar frame,
     never an unpartitioned window."""
-    from pulsar_lunar_spark.session import scratch_root, versioned_slot
+    from pulsar_lunar_spark.session import scratch_dir
 
     d = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     raw_cells = (
@@ -438,7 +438,7 @@ def q_source_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source", "word")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
-    slot = versioned_slot(scratch_root("pulsar_lunar_kl", sf_dir), "cells")
+    slot = scratch_dir("pl_kl_cells", sf_dir)
     raw_cells.write.mode("overwrite").parquet(slot)
     cells = spark.read.parquet(slot)
     tot = cells.agg(F.sum("c").cast("long").alias("n"))

@@ -211,7 +211,7 @@ def q_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     divergent grouping — the llm14 lesson). At 100 TB: one pass,
     shuffle O(docs x categories)."""
     from pulsar_lunar_spark.operators import corpus as C
-    from pulsar_lunar_spark.session import scratch_root, versioned_slot
+    from pulsar_lunar_spark.session import scratch_dir
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     rater = d.select(
@@ -238,7 +238,7 @@ def q_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "cat")
         .agg(F.count(F.lit(1)).cast("long").alias("v"))
     )
-    slot = versioned_slot(scratch_root("pulsar_lunar_fk", sf_dir), "votes")
+    slot = scratch_dir("pl_fk_votes", sf_dir)
     votes_raw.write.mode("overwrite").parquet(slot)
     votes = spark.read.parquet(slot)
     per_doc = votes.groupBy("doc_id").agg(

@@ -67,8 +67,7 @@ from pulsar_lunar_spark.session import (
     artifact,
     artifact_dir,
     load_table,
-    scratch_root,
-    versioned_slot,
+    scratch_dir,
 )
 from pulsar_lunar_spark.sources.log import MessageLog
 from pulsar_lunar_spark.streaming import run_available_now
@@ -231,7 +230,7 @@ def q_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     session (8 shuffle partitions for the tiny per-batch aggregates,
     scoped by run_available_now to this query only)."""
     log = _docs_topics(spark, sf_dir)
-    run = versioned_slot(scratch_root("pl_ingest_dedup", sf_dir), "run")
+    run = scratch_dir("pl_ingest_dedup", sf_dir)
     store_sh = os.path.join(run, "store_shingles")
     pairs = os.path.join(run, "pairs")
     from pyspark.sql.types import (
@@ -1180,7 +1179,7 @@ def q_stream_media_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the band_postings stress-probe shape); per-clip signature-set sizes
     come from one store aggregate, never a re-decode."""
     log = _clips_topic(spark, sf_dir)
-    run = versioned_slot(scratch_root("pl_media_ingest", sf_dir), "run")
+    run = scratch_dir("pl_media_ingest", sf_dir)
     store_sigs = os.path.join(run, "store_sigs")
     pairs = os.path.join(run, "pairs")
     from pyspark.sql.types import (
@@ -1392,7 +1391,7 @@ def q_stream_audio_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pair mass bounded by fingerprint agreement); per-clip window counts
     ride the same store aggregate."""
     log = _audio_topic(spark, sf_dir)
-    run = versioned_slot(scratch_root("pl_audio_ingest", sf_dir), "run")
+    run = scratch_dir("pl_audio_ingest", sf_dir)
     store_pp = os.path.join(run, "store_postings")
     pairs = os.path.join(run, "pairs")
     from pyspark.sql.types import (
@@ -1586,7 +1585,7 @@ def q_stream_image_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     side (shuffle O(4 x images), pair mass bounded by band agreement —
     the band_postings stress-probe shape)."""
     log = _image_topic(spark, sf_dir)
-    run = versioned_slot(scratch_root("pl_image_ingest", sf_dir), "run")
+    run = scratch_dir("pl_image_ingest", sf_dir)
     store_h = os.path.join(run, "store_hashes")
     pairs = os.path.join(run, "pairs")
     from pyspark.sql.types import (

@@ -121,7 +121,7 @@ def q_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pins nothing in executor memory after it returns (round-3 judge
     # criterion, regression-locked by
     # test_containment_query_leaves_no_new_cached_rdds)
-    from pulsar_lunar_spark.session import scratch_root, versioned_slot
+    from pulsar_lunar_spark.session import scratch_dir
 
     posts = D.containment_postings(corpus, "doc_id", "text", shingle_k=3).persist()
     # no orderBy: the driver's value hash is order-insensitive, and a
@@ -140,11 +140,9 @@ def q_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-CALL slot, not a fixed overwrite slot: a previously RETURNED
     # result DataFrame must stay readable after a later call
     # (mode=overwrite on a shared slot deletes the very files an earlier
-    # call's result still lists); versioned_slot keeps the last 2 and
+    # call's result still lists); scratch_dir keeps the last 2 and
     # prunes the rest, and the parent dir is removed at process exit
-    slot = versioned_slot(
-        scratch_root("pulsar_lunar_postings", sf_dir), "containment-res"
-    )
+    slot = scratch_dir("pl_containment_res", sf_dir)
     # repartition(1), NOT coalesce(1): coalesce propagates up and would
     # collapse the pair aggregation itself to one partition; repartition
     # adds a tiny (~1k-row) exchange and commits one file instead of 32

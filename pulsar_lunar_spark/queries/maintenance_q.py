@@ -6,8 +6,9 @@ aggregates a DuckDB oracle replicates analytically from the source
 tables — so the CDC write path, the multi-version read path, and the
 compaction rewrite all get value-exact correctness rows.
 
-Each query rebuilds its scratch directory from the parquet sources on
-every invocation (overwrite-idempotent), so re-runs are deterministic.
+Each query rebuilds a fresh scratch directory (session.scratch_dir)
+from the parquet sources on every invocation, so re-runs are
+deterministic and the previous call's result stays readable.
 Integer-cents payloads throughout (FLOOR(price*100) — floor of a double
 is engine-exact both sides).
 """
@@ -15,27 +16,13 @@ is engine-exact both sides).
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pulsar_lunar_spark.operators import maintenance as M
 from pulsar_lunar_spark.queries.registry import register
-from pulsar_lunar_spark.session import load_table
-
-
-def _scratch(sf_dir: str, tag: str) -> str:
-    # per-process path: a concurrently running harness (pytest + parity on
-    # the same sf) must never rmtree a directory another process is writing
-    sf_tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    path = os.path.join(
-        tempfile.gettempdir(), "pulsar_lunar_maint", f"{sf_tag}-{os.getpid()}", tag
-    )
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path, exist_ok=True)
-    return path
+from pulsar_lunar_spark.session import load_table, scratch_dir
 
 
 _PRICE_C = "CAST(FLOOR(o_totalprice * 100) AS BIGINT)"
@@ -74,10 +61,10 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The merge is union + one per-key max-struct aggregate (single hash
     shuffle on the key; shuffle-free when the target is pre-bucketed via
-    partitioning.write_bucketed) and commits by atomic directory swap."""
+    partitioning.write_bucketed) and commits through session.replace_dir."""
     o = load_table(spark, sf_dir, "orders")
     price_c = F.floor(F.col("o_totalprice") * 100).cast("bigint")
-    path = _scratch(sf_dir, "merge_target")
+    path = scratch_dir("pl_maint_merge_target", sf_dir)
     target = o.filter(F.col("o_orderkey") % 4 == 0).select(
         F.col("o_orderkey").alias("k"),
         price_c.alias("price_c"),
@@ -135,7 +122,7 @@ def q_snapshot_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = o.filter(F.col("o_orderkey") % 3 == 0).select(
         F.col("o_orderkey").alias("k"), price_c.alias("price_c")
     )
-    path = _scratch(sf_dir, "travel")
+    path = scratch_dir("pl_maint_travel", sf_dir)
     M.write_snapshot(base, path)
     M.write_snapshot(base.filter(F.col("k") % 5 != 0), path)
     v0 = M.read_snapshot(spark, path, version=0)
@@ -165,10 +152,10 @@ def q_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     integrity — row count / key sum / cent sum over the rewritten files
     match the source exactly — and (b) the file count actually dropped to
     the plan target (compacted_ok). The rewrite is coalesce-based (merges
-    splits, no shuffle) with an atomic directory swap, the scan-health
+    splits, no shuffle) through session.replace_dir, the scan-health
     chore a 100 TB ingest runs behind every streaming sink."""
     o = load_table(spark, sf_dir, "orders")
-    path = _scratch(sf_dir, "compact")
+    path = scratch_dir("pl_maint_compact", sf_dir)
     even = o.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_totalprice"
     )

@@ -1408,9 +1408,9 @@ def q_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # carries its frame's bands, so there is NO keyframe join at all.
     # (frame_deltas / video_frame_dhash remain the single-purpose ops;
     # value identity with this fused stage is pytest-pinned.)
-    from pulsar_lunar_spark.session import scratch_root, versioned_slot
+    from pulsar_lunar_spark.session import scratch_dir
 
-    feat_slot = versioned_slot(scratch_root("pl_vdup_feat", sf_dir), "feat")
+    feat_slot = scratch_dir("pl_vdup_feat", sf_dir)
     M.video_frame_features(vids).filter(F.col("decode_ok")).write.mode(
         "overwrite"
     ).parquet(feat_slot)

@@ -6,14 +6,12 @@ correct iff it is invisible to downstream aggregation).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
 from pulsar_lunar_spark.functions.envelope import decode_payload, to_envelope
-from pulsar_lunar_spark.session import artifact_dir, load_table
+from pulsar_lunar_spark.session import artifact_dir, load_table, scratch_dir
 from pulsar_lunar_spark.sources.log import MessageLog
 from pulsar_lunar_spark.queries.registry import register
 
@@ -341,12 +339,6 @@ def q_geo_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: replication is one distributed scan + one partitioned write
     per target cluster — no shuffle, bandwidth-bound like the broker's
     replicator."""
-    import tempfile
-
-    from pulsar_lunar_spark.session import scratch_at_exit, spool_base_dir
-
-    root = spool_base_dir()
-
     # the source topic is read-only under replication, so it is produced
     # once as an artifact and reused; only the replicas are fresh per call
     def produce(src_root: str) -> None:
@@ -361,12 +353,7 @@ def q_geo_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = MessageLog(spark, artifact_dir(spark, sf_dir, "pl_georepl_src", produce))
     replicas = {
-        name: MessageLog(
-            spark,
-            scratch_at_exit(
-                tempfile.mkdtemp(prefix=f"pl_georepl_{name}_", dir=root)
-            ),
-        )
+        name: MessageLog(spark, scratch_dir(f"pl_georepl_{name}", sf_dir))
         for name in ("cluster-a", "cluster-b")
     }
     src.replicate_topic("events", list(replicas.values()))
@@ -488,7 +475,6 @@ def q_topic_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     count == date count (the partitioned layout multiplies dirs by the
     partition fan-out; pytest covers multi-day drops)."""
     import shutil
-    import tempfile
     from datetime import datetime, timedelta
 
     e = load_table(spark, sf_dir, "events")
@@ -514,13 +500,8 @@ def q_topic_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
             time_partition=True,
         )
 
-    pristine = artifact_dir(spark, sf_dir, "pl_retention_src", produce)
-    from pulsar_lunar_spark.session import scratch_at_exit
-
-    work = tempfile.mkdtemp(prefix="pl_retention_", dir=os.path.dirname(pristine))
-    scratch_at_exit(work)
-    shutil.rmtree(work)
-    shutil.copytree(pristine, work)
+    work = scratch_dir("pl_retention_work", sf_dir)
+    shutil.copytree(artifact_dir(spark, sf_dir, "pl_retention_src", produce), work)
     probe = MessageLog(spark, work)
     dropped = probe.apply_retention("events", cutoff)
     back = probe.read("events")

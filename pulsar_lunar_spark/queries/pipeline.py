@@ -10,14 +10,13 @@ doubles are min/max picks of integral columns.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pulsar_lunar_spark.operators.partitioning import stable_row_ids
 from pulsar_lunar_spark.queries.registry import register
-from pulsar_lunar_spark.session import ensure_parallelism, load_table
+from pulsar_lunar_spark.session import ensure_parallelism, load_table, scratch_dir
 
 
 @register(
@@ -81,11 +80,6 @@ def q_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _prune_dir(sf_dir: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    return os.path.join(tempfile.gettempdir(), "pulsar_lunar_partitioned", tag)
-
-
 @register(
     "q_partitioned_prune",
     oracle="""
@@ -105,7 +99,7 @@ def q_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     difference between scanning one language and scanning the corpus
     (PartitionFilters asserted in tests/test_pipeline.py)."""
     d = load_table(spark, sf_dir, "documents")
-    out = _prune_dir(sf_dir)
+    out = scratch_dir("pl_partitioned", sf_dir)
     d.write.partitionBy("lang").mode("overwrite").parquet(out)
     rd = spark.read.parquet(out).filter(F.col("lang") == "en")
     return (
@@ -142,7 +136,7 @@ def q_dynamic_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching languages and the corpus when the filter comes from a JOIN
     instead of a literal (plan asserted in tests/test_pipeline.py)."""
     d = load_table(spark, sf_dir, "documents")
-    out = _prune_dir(sf_dir) + "_dpp"
+    out = scratch_dir("pl_partitioned_dpp", sf_dir)
     d.write.partitionBy("lang").mode("overwrite").parquet(out)
     fact = spark.read.parquet(out)
     dim = d.filter(F.col("doc_id") % 97 == 0).select("lang").distinct()

@@ -6,9 +6,12 @@ results, noop for observed-metrics runs) and returns the materialized
 result, which the driver hash-checks against batch SQL — proving the
 streaming and batch semantics agree (the unified-model claim, SIGMOD'18).
 
-Each run uses a fresh checkpoint (idempotent re-runs) over one produce
-of the events topic (a session.artifact_dir artifact); memory-sink table
-names are namespaced per query to avoid collisions.
+Each run replays one produce of the events topic (a
+session.artifact_dir artifact). Its checkpoint and file-sink directories
+are fresh per run (session.scratch_dir), so the cursor restarts at
+Earliest and re-runs are idempotent, while the previous run's sink stays
+readable for a DataFrame that run returned. Memory-sink table names are
+namespaced per query to avoid collisions.
 
 Scale notes: these exact pipelines run unchanged against an unbounded
 source — availableNow is swapped for a processing-time trigger and the
@@ -19,46 +22,14 @@ aggregation state is O(windows×keys); dedup state is watermark-evicted).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pulsar_lunar_spark.queries.registry import register
-from pulsar_lunar_spark.session import artifact, artifact_dir, load_table
+from pulsar_lunar_spark.session import artifact, artifact_dir, load_table, scratch_dir
 from pulsar_lunar_spark.sources.log import MessageLog
 from pulsar_lunar_spark.streaming import run_available_now, stateful_sessionize
-
-
-def _tmp_root() -> str:
-    """Prefer tmpfs (/dev/shm) for the log + checkpoints: the streaming
-    harness is IO-bound on tiny files, and none of it needs durability.
-    Honors the SPARK_GRAFT_SPOOL_DIR cluster override (r12) — root
-    selection lives in session.spool_base_dir."""
-    from pulsar_lunar_spark.session import spool_base_dir
-
-    return spool_base_dir()
-
-
-def _sf_tag(sf_dir: str) -> str:
-    # per-(dataset, process) path segment: two concurrent harnesses (pytest
-    # + the driver on the same sf) must never rmtree a checkpoint or sink
-    # directory the other is mid-read on, and two sf_dirs sharing a
-    # basename must never share one (the tag hashes the resolved path)
-    from pulsar_lunar_spark.session import sf_cache_tag
-
-    return sf_cache_tag(sf_dir)
-
-
-def _pid_root(sf_dir: str) -> str:
-    """This process's streaming scratch root, removed at process exit
-    (tmpfs-backed — abandoned pid dirs would otherwise accumulate in
-    RAM across harness runs)."""
-    from pulsar_lunar_spark.session import scratch_at_exit
-
-    return scratch_at_exit(
-        os.path.join(_tmp_root(), "pulsar_lunar_streamq", _sf_tag(sf_dir))
-    )
 
 
 def _shared_log(spark: SparkSession, sf_dir: str, copies: int = 1) -> MessageLog:
@@ -89,16 +60,6 @@ def _shared_log(spark: SparkSession, sf_dir: str, copies: int = 1) -> MessageLog
     )
 
 
-def _fresh_checkpoint(sf_dir: str, tag: str) -> str:
-    """A fresh checkpoint per run — the cursor must restart at Earliest so
-    the replay is complete (a stale checkpoint would skip it)."""
-    import shutil
-
-    ck = os.path.join(_pid_root(sf_dir), "ck", tag)
-    shutil.rmtree(ck, ignore_errors=True)
-    return ck
-
-
 def _events_max_us(spark: SparkSession, sf_dir: str) -> int:
     """max(ts) of the events table, in epoch micros — an artifact (the
     scan is a whole batch job that deterministic end-of-stream cutoffs
@@ -111,15 +72,6 @@ def _events_max_us(spark: SparkSession, sf_dir: str) -> int:
         .agg(F.unix_micros(F.max("ts")).alias("m"))
         .head()["m"],
     )
-
-
-def _fresh_dir(sf_dir: str, tag: str) -> str:
-    """A fresh output directory (for file sinks) per run."""
-    import shutil
-
-    out = os.path.join(_pid_root(sf_dir), "out", tag)
-    shutil.rmtree(out, ignore_errors=True)
-    return out
 
 
 @register(
@@ -160,7 +112,7 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         windowed.writeStream.format("memory")
         .queryName("q_stream_tumbling_sink")
         .outputMode("complete"),
-        _fresh_checkpoint(sf_dir, "tumbling"),
+        scratch_dir("pl_streamq_ck_tumbling", sf_dir),
         state_partitions=4,
         no_data_batches=False,  # complete-mode agg: trailing watermark batch changes nothing
     )
@@ -206,7 +158,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         windowed.writeStream.format("memory")
         .queryName("q_stream_sliding_sink")
         .outputMode("complete"),
-        _fresh_checkpoint(sf_dir, "sliding"),
+        scratch_dir("pl_streamq_ck_sliding", sf_dir),
         state_partitions=4,
         no_data_batches=False,  # complete-mode agg
     )
@@ -239,10 +191,10 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 100 TB pattern — dedup into a table), never funneling rows through
     # the driver; state_partitions sizes the dedup state stores to the
     # state volume instead of the session's 32-way scan parallelism
-    out = _fresh_dir(sf_dir, "dedup")
+    out = scratch_dir("pl_streamq_out_dedup", sf_dir)
     run_available_now(
         deduped.writeStream.format("parquet").option("path", out).outputMode("append"),
-        _fresh_checkpoint(sf_dir, "dedup"),
+        scratch_dir("pl_streamq_ck_dedup", sf_dir),
         state_partitions=4,
         no_data_batches=False,  # dropDuplicates emits on first sight
     )
@@ -283,10 +235,10 @@ def q_stream_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["sequence_id"])
         .select("sequence_id")
     )
-    out = _fresh_dir(sf_dir, "dedupttl")
+    out = scratch_dir("pl_streamq_out_dedupttl", sf_dir)
     q = run_available_now(
         deduped.writeStream.format("parquet").option("path", out).outputMode("append"),
-        _fresh_checkpoint(sf_dir, "dedupttl"),
+        scratch_dir("pl_streamq_ck_dedupttl", sf_dir),
         state_partitions=4,
         state_store="rocksdb",
     )
@@ -364,14 +316,14 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     # complete-mode result lands DISTRIBUTED via foreachBatch overwrite —
     # a memory sink would pull every session row through the driver once
     # per batch (~95k rows at sf0.1), which is the anti-pattern at scale
-    out = _fresh_dir(sf_dir, "session_out")
+    out = scratch_dir("pl_streamq_out_session", sf_dir)
 
     def write_complete(bdf: DataFrame, batch_id: int) -> None:
         bdf.write.mode("overwrite").parquet(out)
 
     run_available_now(
         sessions.writeStream.foreachBatch(write_complete).outputMode("complete"),
-        _fresh_checkpoint(sf_dir, "session"),
+        scratch_dir("pl_streamq_ck_session", sf_dir),
         state_partitions=4,
         no_data_batches=False,  # complete-mode session agg
     )
@@ -424,10 +376,10 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # file sink + right-sized join state stores: the joined pairs land
     # distributed, and 4 state partitions cut the per-batch store IO 8x
     # (each side of a stream-stream join keeps one store per partition)
-    out = _fresh_dir(sf_dir, "ssjoin")
+    out = scratch_dir("pl_streamq_out_ssjoin", sf_dir)
     run_available_now(
         pairs.writeStream.format("parquet").option("path", out).outputMode("append"),
-        _fresh_checkpoint(sf_dir, "ssjoin"),
+        scratch_dir("pl_streamq_ck_ssjoin", sf_dir),
         state_partitions=4,
         no_data_batches=False,  # inner join emits on match, never on eviction
     )
@@ -503,10 +455,10 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "left_outer",
     ).select("c_user", "c_ts", "p_ts")
-    out = _fresh_dir(sf_dir, "ssouter")
+    out = scratch_dir("pl_streamq_out_ssouter", sf_dir)
     run_available_now(
         pairs.writeStream.format("parquet").option("path", out).outputMode("append"),
-        _fresh_checkpoint(sf_dir, "ssouter"),
+        scratch_dir("pl_streamq_ck_ssouter", sf_dir),
         state_partitions=4,
     )
     # deterministic eviction cutoff over the events table — an artifact
@@ -593,7 +545,7 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream.writeStream.format("memory")
         .queryName("q_stream_enrich_sink")
         .outputMode("append"),
-        _fresh_checkpoint(sf_dir, "enrich"),
+        scratch_dir("pl_streamq_ck_enrich", sf_dir),
         no_data_batches=False,  # stateless stream-static join
     )
     q.awaitTermination(300)
@@ -634,7 +586,7 @@ def q_stream_stateful_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         counted.writeStream.format("memory")
         .queryName("q_stream_stateful_sink")
         .outputMode("update"),
-        _fresh_checkpoint(sf_dir, "stateful"),
+        scratch_dir("pl_streamq_ck_stateful", sf_dir),
         state_partitions=4,
         no_data_batches=False,  # NoTimeout state fn: trailing batch calls nothing
     )
@@ -698,10 +650,10 @@ def q_stream_custom_session(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("payload.value").alias("value"),
     )
     sessions = stateful_sessionize(stream, "user_id", "ts", "value", gap_s=1800)
-    out = _fresh_dir(sf_dir, "customsession")
+    out = scratch_dir("pl_streamq_out_customsession", sf_dir)
     run_available_now(
         sessions.writeStream.format("parquet").option("path", out).outputMode("append"),
-        _fresh_checkpoint(sf_dir, "customsession"),
+        scratch_dir("pl_streamq_ck_customsession", sf_dir),
         # python-stateful ops invert the usual rule: wall-clock is bound
         # by PYTHON WORKER parallelism over per-key group overhead, not
         # state-store IO — 16 partitions measured ~25% faster than 4
@@ -750,10 +702,10 @@ def q_stream_backpressure(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = log.subscribe("events", max_files_per_trigger=per_trigger).select(
         "sequence_id"
     )
-    out = _fresh_dir(sf_dir, "backpressure")
+    out = scratch_dir("pl_streamq_out_backpressure", sf_dir)
     q = run_available_now(
         stream.writeStream.format("parquet").option("path", out).outputMode("append"),
-        _fresh_checkpoint(sf_dir, "backpressure"),
+        scratch_dir("pl_streamq_ck_backpressure", sf_dir),
         no_data_batches=False,  # stateless paced drain; batch count ignores 0-row batches
     )
     q.awaitTermination(300)
@@ -948,7 +900,7 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("u"))
         .alias("op"),
     )
-    target = _fresh_dir(sf_dir, "cdc_target")
+    target = scratch_dir("pl_streamq_out_cdc_target", sf_dir)
 
     def apply_batch(bdf: DataFrame, batch_id: int) -> None:
         # version_cols ends in event_id — UNIQUE per row — so cdc_apply's
@@ -966,7 +918,7 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     run_available_now(
         changes.writeStream.foreachBatch(apply_batch),
-        _fresh_checkpoint(sf_dir, "cdcapply"),
+        scratch_dir("pl_streamq_ck_cdcapply", sf_dir),
         no_data_batches=False,  # stateless apply: the table is the state
     )
     return (
@@ -1034,7 +986,7 @@ def q_stream_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = run_available_now(
         obs.writeStream.format("noop"),
-        _fresh_checkpoint(sf_dir, "observed"),
+        scratch_dir("pl_streamq_ck_observed", sf_dir),
         no_data_batches=False,  # metrics ride data batches only
     )
     q.awaitTermination(300)
@@ -1103,7 +1055,7 @@ def q_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("key").cast("long").alias("user_id"),
         F.floor(F.col("payload.value") * 100 + 0.5).cast("long").alias("cents"),
     )
-    mv = _fresh_dir(sf_dir, "mv")
+    mv = scratch_dir("pl_streamq_out_mv", sf_dir)
 
     def refresh(bdf: DataFrame, batch_id: int) -> None:
         incremental_agg_refresh(
@@ -1112,7 +1064,7 @@ def q_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     run_available_now(
         stream.writeStream.foreachBatch(refresh),
-        _fresh_checkpoint(sf_dir, "incmv"),
+        scratch_dir("pl_streamq_ck_incmv", sf_dir),
         no_data_batches=False,  # stateless refresh: the view is the state
     )
     return (
@@ -1176,14 +1128,14 @@ def q_txn_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sequence_id").alias("event_id"),
         F.floor(F.col("payload.value") * 100 + 0.5).cast("long").alias("cents"),
     )
-    sink = _fresh_dir(sf_dir, "txn_sink")
-    ledger = _fresh_dir(sf_dir, "txn_ledger")
+    sink = scratch_dir("pl_streamq_out_txn_sink", sf_dir)
+    ledger = scratch_dir("pl_streamq_out_txn_ledger", sf_dir)
     fn = idempotent_foreach_batch(
         lambda df: df.write.mode("append").parquet(sink), ledger
     )
     run_available_now(
         stream.writeStream.foreachBatch(fn),
-        _fresh_checkpoint(sf_dir, "txn"),
+        scratch_dir("pl_streamq_ck_txn", sf_dir),
         no_data_batches=False,  # stateless sink: the ledger is the state
     )
     committed = sorted(
@@ -1261,8 +1213,8 @@ def q_dlq_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     log = MessageLog(spark, artifact_dir(spark, sf_dir, "pl_streamq_dlqprobe", produce))
     payload = StructType([StructField("value", DoubleType())])
-    dlq_dir = _fresh_dir(sf_dir, "dlq_out")
-    retry_dir = _fresh_dir(sf_dir, "dlq_ledger")
+    dlq_dir = scratch_dir("pl_streamq_out_dlq", sf_dir)
+    retry_dir = scratch_dir("pl_streamq_out_dlq_ledger", sf_dir)
     fn = foreach_batch_with_dlq(
         process=lambda df: None,  # good-path exactly-once is q_txn_sink's job
         is_poison=F.col("payload.value") > 190.0,
@@ -1291,7 +1243,7 @@ def q_dlq_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         run_available_now(
             stream.writeStream.foreachBatch(fn),
-            _fresh_checkpoint(sf_dir, f"dlq{delivery}"),
+            scratch_dir(f"pl_streamq_ck_dlq{delivery}", sf_dir),
             no_data_batches=False,  # stateless routing: the ledger is the state
         )
     return (
@@ -1382,7 +1334,7 @@ def q_stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream.writeStream.format("memory")
         .queryName("q_stream_psi_sink")
         .outputMode("complete"),
-        _fresh_checkpoint(sf_dir, "psidrift"),
+        scratch_dir("pl_streamq_ck_psidrift", sf_dir),
         state_partitions=4,
         no_data_batches=False,  # complete-mode agg
     )
@@ -1483,7 +1435,7 @@ def q_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     # then exposes — the projected column keeps the state schema named.
     typed = stream.select(F.col("payload.event_type").alias("event_type"))
     counts = typed.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    ckpt = _fresh_checkpoint(sf_dir, "statestore")
+    ckpt = scratch_dir("pl_streamq_ck_statestore", sf_dir)
     q = run_available_now(
         counts.writeStream.format("memory").queryName(
             "pl_state_store_read"

@@ -176,9 +176,11 @@ def scratch_root(kind: str, sf_dir: str | None = None) -> str:
     """The per-(kind, dataset, process) scratch directory, registered
     for removal at process exit: ``$SPARK_GRAFT_SPOOL_DIR/<kind>/<tag>``
     when the override is set, else ``/dev/shm/<kind>/<tag>`` (falling
-    back to the system tempdir when /dev/shm is unwritable). The single
-    home of the root-selection + scratch_at_exit + tag idiom that fixture
-    caches share — fix root selection here, not at call sites.
+    back to the system tempdir when /dev/shm is unwritable). With
+    :func:`scratch_dir` and :func:`artifact_dir` on top of it, this is
+    the single home of the root selection, the tag and the exit cleanup
+    of every engine working directory — fix them here, not at call
+    sites.
 
     Root selection (incl. the ``SPARK_GRAFT_SPOOL_DIR`` cluster
     override) lives in :func:`spool_base_dir`."""
@@ -191,6 +193,52 @@ def scratch_root(kind: str, sf_dir: str | None = None) -> str:
     else:
         parts.append(str(os.getpid()))
     return scratch_at_exit(os.path.join(*parts))
+
+
+def scratch_dir(kind: str, sf_dir: str | None = None) -> str:
+    """A fresh per-call working directory (a checkpoint, a sink, a
+    fixture copy, a small result spool): ``<scratch_root>/v-<n>``, not
+    yet created. The one way engine code gets a directory of its own.
+
+    Every call returns a new path, so a stream restarts from an empty
+    checkpoint and a write never lands on a stale copy. The previous
+    call's directory is kept (keep-last-2, :func:`versioned_slot`), so a
+    DataFrame returned by the previous call still reads; older ones are
+    deleted, and the whole root at process exit. ``kind`` names the
+    directory in scratch listings; two different uses must not share
+    one."""
+    return versioned_slot(scratch_root(kind, sf_dir), "v")
+
+
+def replace_dir(path: str, write) -> None:
+    """Replace directory ``path`` (created if absent) with what
+    ``write(tmp)`` puts into a fresh sibling ``tmp`` — the rewrite rule
+    of every table maintenance step (compaction, MERGE, CDC apply,
+    retention, ledger compaction).
+
+    If ``write`` raises, ``tmp`` is removed and ``path`` is left as it
+    was. Otherwise ``path`` is renamed aside, ``tmp`` is renamed into
+    place and the old copy is deleted, so the live path is never
+    deleted before its replacement is complete. Sibling names start
+    with ``.``, which Spark's file listing skips, so a partitioned
+    table's reader never sees a half-written partition."""
+    import shutil
+    import uuid
+
+    parent, name = os.path.split(os.path.normpath(path))
+    tmp = os.path.join(parent, f".{name}.__tmp_{uuid.uuid4().hex[:8]}")
+    try:
+        write(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    if not os.path.exists(path):
+        os.rename(tmp, path)
+        return
+    old = os.path.join(parent, f".{name}.__old_{uuid.uuid4().hex[:8]}")
+    os.rename(path, old)
+    os.rename(tmp, path)
+    shutil.rmtree(old)
 
 
 _SLOT_COUNTERS: dict[tuple[str, str], int] = {}
@@ -305,8 +353,8 @@ def artifact(spark: SparkSession, sf_dir: str, kind, build, *, rebuild: bool = F
 
 def artifact_dir(spark: SparkSession, sf_dir: str, kind: str, write) -> str:
     """The on-disk form of :func:`artifact`: ``write(path)`` fills a
-    fresh ``versioned_slot`` under ``scratch_root(kind, sf_dir)`` and the
-    slot path is returned to every later call with the same key.
+    fresh :func:`scratch_dir` and that path is returned to every later
+    call with the same key.
 
     The path is recorded only after ``write`` returns, so a failed or
     interrupted write is never served; a fresh slot per build means a
@@ -314,7 +362,7 @@ def artifact_dir(spark: SparkSession, sf_dir: str, kind: str, write) -> str:
     lists; and a recorded directory that has since vanished rebuilds."""
 
     def build() -> str:
-        path = versioned_slot(scratch_root(kind, sf_dir), "v")
+        path = scratch_dir(kind, sf_dir)
         write(path)
         return path
 

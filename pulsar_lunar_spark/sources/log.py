@@ -45,6 +45,7 @@ from pulsar_lunar_spark.functions.envelope import (
     to_envelope,
 )
 from pulsar_lunar_spark.operators.compaction import compacted_latest_by_key
+from pulsar_lunar_spark.session import replace_dir
 
 
 #: One ack-ledger row: the BitSet of acked sequence ids in one
@@ -358,7 +359,8 @@ class MessageLog:
         every ``__pdate`` directory strictly before the cutoff DATE is
         DROPPED whole (no read, no rewrite — retention on a 3-year log
         touches only directory metadata), and only the cutoff's own day
-        is rewritten filtered (bounded by one day of data, atomic swap).
+        is rewritten filtered (bounded by one day of data, swapped in by
+        session.replace_dir).
         On an unpartitioned topic the whole log is rewritten filtered —
         documented fallback, linear in the topic.
 
@@ -395,17 +397,13 @@ class MessageLog:
                         .parquet(full)
                         .filter(F.col("publish_time") >= F.lit(cutoff))
                     )
-                    tmp = full + ".__ret_tmp"
-                    day.write.mode("overwrite").parquet(tmp)
-                    shutil.rmtree(full)
-                    os.rename(tmp, full)
+                    replace_dir(full, day.write.mode("overwrite").parquet)
         else:
             kept = df.filter(F.col("publish_time") >= F.lit(cutoff))
-            tmp = path + ".__ret_tmp"
             # keep the __partition directory layout: seeks prune on it
-            kept.write.partitionBy("__partition").mode("overwrite").parquet(tmp)
-            shutil.rmtree(path)
-            os.rename(tmp, path)
+            replace_dir(
+                path, kept.write.partitionBy("__partition").mode("overwrite").parquet
+            )
         return dropped
 
     # -- individual ack / sparse replay --------------------------------
@@ -478,14 +476,10 @@ class MessageLog:
         acks = self._acks(topic, subscription)
         if acks is None:
             return
-        path = self.ack_path(topic, subscription)
-        tmp = path + ".compact"
         folded = acks.groupBy("partition", "block_id").agg(F.bit_or("bits").alias("bits"))
-        folded.write.mode("overwrite").parquet(tmp)
-        import shutil
-
-        shutil.rmtree(path)
-        os.rename(tmp, path)
+        replace_dir(
+            self.ack_path(topic, subscription), folded.write.mode("overwrite").parquet
+        )
 
     def unsubscribe(self, topic: str, subscription: str) -> bool:
         """Drop a subscription: delete its durable cursor (the streaming

@@ -3,42 +3,12 @@ sf0.001 (the driver runs the same comparison at sf0.01)."""
 
 from __future__ import annotations
 
-import hashlib
-
 import pytest
 
 from pulsar_lunar_spark.queries import all_queries
+from tools.parity import value_hash
 
 SPECS = all_queries()
-
-
-def _canon(v):
-    # Type-class preserving: an int 25 and a float 25.0 must NOT collapse to
-    # the same canonical string — the driver's value hash distinguishes them
-    # (the r2 q_math_funcs red: Spark FLOOR -> BIGINT vs DuckDB FLOOR ->
-    # DOUBLE hashed differently while every value was identical). Floats get
-    # an explicit "f" suffix and bools a "b" prefix so any engine-side output
-    # dtype skew fails HERE at sf0.001, before the driver sees it.
-    if v is None:
-        return "<null>"
-    if isinstance(v, bool):
-        return "b" + str(int(v))
-    if isinstance(v, float):
-        if v != v:
-            return "nan"
-        s = f"{v:.6g}" if v == int(v) else repr(round(v, 6))
-        return s + "f"
-    return str(v)
-
-
-def _value_hash(rows, colnames) -> str:
-    order = sorted(range(len(colnames)), key=lambda i: colnames[i])
-    lines = sorted("|".join(_canon(r[i]) for i in order) for r in rows)
-    h = hashlib.sha256()
-    for line in lines:
-        h.update(line.encode())
-        h.update(b"\n")
-    return h.hexdigest()
 
 
 @pytest.mark.parametrize("name", sorted(SPECS))
@@ -59,4 +29,4 @@ def test_query_matches_oracle(name, spark, duck, sf_dir):
 
     assert sorted(scols) == sorted(ocols), f"{name}: column names differ"
     assert len(srows) == len(orows), f"{name}: row count differs"
-    assert _value_hash(srows, scols) == _value_hash(orows, ocols), f"{name}: value hash differs"
+    assert value_hash(srows, scols) == value_hash(orows, ocols), f"{name}: value hash differs"

@@ -2,13 +2,17 @@
 override (r12, VERDICT r11 item 6) must be honored by every scratch
 path the engine derives — on a real cluster executors cannot read the
 driver's /dev/shm, so all spooled artifacts must be placeable on a
-shared mount via one env var. Also the artifact store's build rules:
-one build per key under racing threads, and only complete on-disk
-writes are recorded."""
+shared mount via one env var. Also the artifact store's build rules
+(one build per key under racing threads, and only complete on-disk
+writes are recorded), the per-call working directory rule (a query's
+previous result survives its next call) and the in-place rewrite rule
+(a failed replace_dir write leaves the target as it was)."""
 
 from __future__ import annotations
 
 import os
+
+import pytest
 
 from pulsar_lunar_spark.session import scratch_root, spool_base_dir
 
@@ -81,8 +85,6 @@ def test_artifact_builds_once_under_racing_threads(tmp_path):
 def test_artifact_dir_records_only_complete_writes(tmp_path, monkeypatch):
     import shutil
 
-    import pytest
-
     from pulsar_lunar_spark.session import artifact_dir
 
     monkeypatch.setenv("SPARK_GRAFT_SPOOL_DIR", str(tmp_path / "spool"))
@@ -102,3 +104,84 @@ def test_artifact_dir_records_only_complete_writes(tmp_path, monkeypatch):
     shutil.rmtree(first)  # a vanished slot rebuilds into a fresh one
     again = artifact_dir(spark, sf, "pl_dir_test", write)
     assert again != first and os.path.isdir(again)
+
+
+def _tree(pattern: str) -> set[str]:
+    import glob
+
+    return {
+        os.path.join(root, name)
+        for top in glob.glob(pattern)
+        for root, dirs, files in os.walk(top)
+        for name in dirs + files
+    }
+
+
+def test_query_scratch_honors_spool_override(spark, sf_dir, tmp_path, monkeypatch):
+    import tempfile
+
+    from pulsar_lunar_spark.queries import all_queries
+
+    monkeypatch.setenv("SPARK_GRAFT_SPOOL_DIR", str(tmp_path))
+    legacy = os.path.join(tempfile.gettempdir(), "pulsar_lunar_*")
+    before = _tree(legacy)
+    specs = all_queries()
+    for name in ("q_csv_roundtrip", "q_partitioned_prune", "q_merge_upsert"):
+        specs[name].fn(spark, sf_dir).collect()
+    assert _tree(legacy) <= before
+    kinds = set(os.listdir(tmp_path))
+    assert {"pl_formats_csv", "pl_partitioned", "pl_maint_merge_target"} <= kinds
+
+
+def test_replace_dir_failed_write_leaves_target_untouched(tmp_path):
+    from pulsar_lunar_spark.session import replace_dir
+    from pulsar_lunar_spark.sources.log import MessageLog
+
+    log = MessageLog(None, str(tmp_path))
+    target = log.topic_path("events")
+    os.makedirs(os.path.join(target, "__partition=0"))
+    part = os.path.join(target, "__partition=0", "part-0.parquet")
+    with open(part, "wb") as fh:
+        fh.write(b"pristine bytes")
+
+    def failing(tmp):
+        os.makedirs(tmp)
+        with open(os.path.join(tmp, "part-0.parquet"), "wb") as fh:
+            fh.write(b"half")
+        raise OSError("disk full")
+
+    with pytest.raises(OSError):
+        replace_dir(target, failing)
+    assert os.listdir(os.path.dirname(target)) == ["events"]
+    assert log.topics() == ["events"]
+    with open(part, "rb") as fh:
+        assert fh.read() == b"pristine bytes"
+
+    def write(tmp):
+        os.makedirs(tmp)
+        with open(os.path.join(tmp, "part-0.parquet"), "wb") as fh:
+            fh.write(b"new")
+
+    replace_dir(target, write)
+    assert os.listdir(os.path.dirname(target)) == ["events"]
+    assert os.listdir(target) == ["part-0.parquet"]
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q_partitioned_prune",
+        "q_csv_roundtrip",
+        "q_merge_upsert",
+        "q_dlq_routing",
+        "q_stream_session",
+        "q_ann_topk",  # control: already on a per-call slot
+    ],
+)
+def test_previous_result_survives_next_call(name, spark, sf_dir):
+    from pulsar_lunar_spark.queries import all_queries
+
+    fn = all_queries()[name].fn
+    first = fn(spark, sf_dir)
+    second = fn(spark, sf_dir)
+    assert sorted(map(tuple, first.collect())) == sorted(map(tuple, second.collect()))

@@ -22,10 +22,11 @@ from pulsar_lunar_spark.session import TABLE_NAMES, get_spark
 
 
 def _canon(v):
-    # Type-class preserving (kept in lockstep with tests/test_parity.py):
-    # an int 25 and a float 25.0 must NOT collapse to the same canonical
-    # string — the driver's hash distinguishes them (the r2 q_math_funcs
-    # red), so an output-dtype skew must fail HERE, not at the driver.
+    # Type-class preserving (the one canon: tests/test_parity.py and
+    # perfbench/oracle.py import value_hash from here): an int 25 and a
+    # float 25.0 must NOT collapse to the same canonical string — the
+    # driver's hash distinguishes them (the r2 q_math_funcs red), so an
+    # output-dtype skew must fail HERE, not at the driver.
     if v is None:
         return "<null>"
     if isinstance(v, bool):

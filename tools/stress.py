@@ -27,7 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, functions as F
 
-from pulsar_lunar_spark.session import get_spark, load_table
+from pulsar_lunar_spark.session import artifact_dir, get_spark, load_table, scratch_dir
 
 
 def multiply(df: DataFrame, key_cols: list[str], mult: int) -> DataFrame:
@@ -190,20 +190,17 @@ def probes(spark, sf_dir: str, mult: int):
         # proves per-key state cost stays linear as the store multiplies.
         # Source parquet is written outside the timed region; each run
         # uses a fresh checkpoint (the cursor must replay everything).
-        import uuid
-
         from pulsar_lunar_spark.streaming.ops import run_available_now
 
         events = multiply(
             load_table(spark, sf_dir, "events"), ["event_id", "user_id"], mult
         )
-        base = _stream_scratch()
-        src = os.path.join(base, f"src_x{mult}")
-        if not os.path.isdir(os.path.join(src, "_done")):
-            events.select("user_id", "ts", "value").write.mode(
-                "overwrite"
-            ).parquet(src)
-            os.makedirs(os.path.join(src, "_done"), exist_ok=True)
+        src = artifact_dir(
+            spark,
+            sf_dir,
+            f"pl_stress_session_src_x{mult}",
+            events.select("user_id", "ts", "value").write.mode("overwrite").parquet,
+        )
         schema = "user_id bigint, ts timestamp, value double"
         sessions = (
             spark.readStream.schema(schema)
@@ -212,7 +209,7 @@ def probes(spark, sf_dir: str, mult: int):
             .groupBy(F.session_window("ts", "30 minutes").alias("s"), "user_id")
             .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("v"))
         )
-        out = os.path.join(base, f"out_{uuid.uuid4().hex}")
+        out = scratch_dir("pl_stress_session_out", sf_dir)
 
         def write_complete(bdf, batch_id):
             bdf.write.mode("overwrite").parquet(out)
@@ -221,7 +218,7 @@ def probes(spark, sf_dir: str, mult: int):
             sessions.writeStream.foreachBatch(write_complete).outputMode(
                 "complete"
             ),
-            os.path.join(base, f"ck_{uuid.uuid4().hex}"),
+            scratch_dir("pl_stress_session_ck", sf_dir),
             state_partitions=8,
             state_store="rocksdb",
             no_data_batches=False,
@@ -395,20 +392,17 @@ def probes(spark, sf_dir: str, mult: int):
         # two-sided join store scales like the session-window store.
         # Source parquet written outside the timed region; fresh
         # checkpoint per run (the cursor must replay everything).
-        import uuid
-
         from pulsar_lunar_spark.streaming.ops import run_available_now
 
         events = multiply(
             load_table(spark, sf_dir, "events"), ["event_id", "user_id"], mult
         )
-        base = _stream_scratch()
-        src = os.path.join(base, f"jsrc_x{mult}")
-        if not os.path.isdir(os.path.join(src, "_done")):
-            events.select("user_id", "ts", "event_type").write.mode(
-                "overwrite"
-            ).parquet(src)
-            os.makedirs(os.path.join(src, "_done"), exist_ok=True)
+        src = artifact_dir(
+            spark,
+            sf_dir,
+            f"pl_stress_join_src_x{mult}",
+            events.select("user_id", "ts", "event_type").write.mode("overwrite").parquet,
+        )
         schema = "user_id bigint, ts timestamp, event_type string"
 
         def typed(etype, alias):
@@ -435,12 +429,12 @@ def probes(spark, sf_dir: str, mult: int):
             ),
             "left_outer",
         ).select("c_user", "c_ts", "p_ts")
-        out = os.path.join(base, f"jout_{uuid.uuid4().hex}")
+        out = scratch_dir("pl_stress_join_out", sf_dir)
         q = run_available_now(
             pairs.writeStream.format("parquet").option("path", out).outputMode(
                 "append"
             ),
-            os.path.join(base, f"jck_{uuid.uuid4().hex}"),
+            scratch_dir("pl_stress_join_ck", sf_dir),
             state_partitions=8,
             state_store="rocksdb",
         )
@@ -812,16 +806,6 @@ def probes(spark, sf_dir: str, mult: int):
         "band_postings": band_postings_shape,
         "ingest_store_probe": ingest_store_probe_shape,
     }
-
-
-def _stream_scratch() -> str:
-    from pulsar_lunar_spark.session import scratch_at_exit
-
-    shm = "/dev/shm"
-    base = shm if os.path.isdir(shm) and os.access(shm, os.W_OK) else "/tmp"
-    return scratch_at_exit(
-        os.path.join(base, "pulsar_lunar_stress_stream", str(os.getpid()))
-    )
 
 
 def main() -> None:
