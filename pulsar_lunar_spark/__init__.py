@@ -22,8 +22,16 @@ replay — see ``/root/reference/src/entity/producer.rs:19-54`` and
 Everything here is built on public Apache Spark APIs only.
 """
 
-from pulsar_lunar_spark.session import get_spark, tables, load_table
-
 __all__ = ["get_spark", "tables", "load_table"]
 
 __version__ = "0.1.0"
+
+
+def __getattr__(name):
+    # Lazy, so that importing the package (as the Python worker daemon
+    # ``pulsar_lunar_spark._daemon`` does first) imports no pyspark.
+    if name in __all__:
+        from pulsar_lunar_spark import session
+
+        return getattr(session, name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pulsar_lunar_spark.queries.registry import register
-from pulsar_lunar_spark.session import load_table
+from pulsar_lunar_spark.session import load_table, local_rows, scoped_confs
 
 
 def _supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -133,31 +133,15 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     same-session A/B at sf0.1: plain 1.79 s median-of-5, scoped 1.51 s
     (reps down to 1.43). At cluster scale the scoped values are a no-op
     posture: AQE coalesce already right-sizes real data volumes.
-    End-to-end (execution + one-slice localization, ~0.17 s) the query
+    End-to-end (execution + localization of the result) the query
     reads ~1.7-1.9 s under ambient 2-4 — the scoped-vs-plain execution
     gap is the part that holds.
     """
-    prev = {k: spark.conf.get(k, None) for k in _TRI_CONFS}
-    for k, v in _TRI_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_confs(spark, _TRI_CONFS):
         df = _triangle_df(spark, sf_dir)
         rows = df.collect()  # optimize + execute while the confs are live
         schema = df.schema
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    # one-slice localization: bare createDataFrame slices even a 1-row
-    # result into defaultParallelism pickled partitions (a 32-task job,
-    # ~0.3 s/collect), and coalesce(1) is WORSE (one task evaluates all
-    # 32 slices' Python round-trips sequentially, ~3.8 s); parallelize
-    # with numSlices=1 collects in ~0.17 s (r8 A/B, all three measured)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema
-    )
+    return local_rows(spark, rows, schema)
 
 
 @register(

@@ -60,7 +60,7 @@ from pyspark.sql import functions as F
 
 from pulsar_lunar_spark.operators.dedup import normalize_text
 from pulsar_lunar_spark.queries.registry import register
-from pulsar_lunar_spark.session import ensure_parallelism, load_table
+from pulsar_lunar_spark.session import ensure_parallelism, load_table, local_rows
 
 _NORM = "REGEXP_REPLACE(TRIM(LOWER(text)), '\\s+', ' ', 'g')"
 
@@ -1654,12 +1654,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             else:
                 new[node] = lab
         labels = new
-    out = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(n, labels[n]) for n in node_ids], 1
-        ),
-        "node long, label long",
-    )
+    out = local_rows(spark, [(n, labels[n]) for n in node_ids], "node long, label long")
     return (
         out.join(F.broadcast(na), out.node == na.n_nationkey)
         .select(
@@ -1809,13 +1804,9 @@ def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
                 raw[e.src] += e.w * a[e.dst]
         mx = max(max(raw.values()), 1)
         h = {n: (1_000_000 * v) // mx for n, v in raw.items()}
-    # one-slice literal frame (the q_triangle_count r8 A/B: a bare
-    # createDataFrame slices 25 rows into defaultParallelism pickled
-    # partitions — a 32-task job)
-    scores = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(n, h[n], a[n]) for n in node_ids], 1
-        ),
+    scores = local_rows(
+        spark,
+        [(n, h[n], a[n]) for n in node_ids],
         "node long, hub_ppm long, auth_ppm long",
     )
     return (

@@ -67,6 +67,7 @@ from pulsar_lunar_spark.session import (
     artifact,
     artifact_dir,
     load_table,
+    local_rows,
     scratch_dir,
 )
 from pulsar_lunar_spark.sources.log import MessageLog
@@ -350,8 +351,8 @@ def q_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not os.path.isdir(pairs) or not any(
         f.endswith(".parquet") for f in os.listdir(pairs)
     ):
-        return spark.createDataFrame(
-            [], "day_found long, id_lo long, id_hi long, jaccard double"
+        return local_rows(
+            spark, [], "day_found long, id_lo long, id_hi long, jaccard double"
         )
     return spark.read.parquet(pairs).orderBy("id_lo", "id_hi")
 
@@ -462,7 +463,8 @@ def q_unigram_lm_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     covered = all(
         c in vocab_chars for p in seed for c in (p if len(p) == 1 else "")
     )
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(
             seed_top,
             int(seed[seed_top]),
@@ -1308,7 +1310,8 @@ def q_stream_media_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not os.path.isdir(pairs) or not any(
         f.endswith(".parquet") for f in os.listdir(pairs)
     ):
-        return spark.createDataFrame(
+        return local_rows(
+            spark,
             [],
             "day_found long, id_a string, id_b string, shared_sigs long,"
             " n_sigs_a long, n_sigs_b long, match_ppm long",
@@ -1502,7 +1505,8 @@ def q_stream_audio_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not os.path.isdir(pairs) or not any(
         f.endswith(".parquet") for f in os.listdir(pairs)
     ):
-        return spark.createDataFrame(
+        return local_rows(
+            spark,
             [],
             "day_found long, id_a string, id_b string, n_match long,"
             " n_windows_a long, n_windows_b long, match_ppm long",
@@ -1683,7 +1687,7 @@ def q_stream_image_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not os.path.isdir(pairs) or not any(
         f.endswith(".parquet") for f in os.listdir(pairs)
     ):
-        return spark.createDataFrame(
-            [], "day_found long, id_a string, id_b string, hamming long"
+        return local_rows(
+            spark, [], "day_found long, id_a string, id_b string, hamming long"
         )
     return spark.read.parquet(pairs).orderBy("id_a", "id_b")

@@ -24,7 +24,7 @@ from pulsar_lunar_spark.operators import ml as M
 from pulsar_lunar_spark.operators import text as T
 from pulsar_lunar_spark.operators.partitioning import zorder_key, zorder_sql
 from pulsar_lunar_spark.queries.registry import register
-from pulsar_lunar_spark.session import ensure_parallelism, load_table
+from pulsar_lunar_spark.session import ensure_parallelism, load_table, local_rows
 
 _NORM = "REGEXP_REPLACE(TRIM(LOWER(text)), '\\s+', ' ', 'g')"
 _WORDS = f"STRING_SPLIT({_NORM}, ' ')"
@@ -525,7 +525,7 @@ def q_source_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     weights = [("src0", "14"), ("src1", "29"), ("src2", "52"), ("src3", "7f"), ("src4", "cc")]
     d = load_table(spark, sf_dir, "documents")
     thr = F.broadcast(
-        spark.createDataFrame(weights, "source string, thr string")
+        local_rows(spark, weights, "source string, thr string")
     )
     # per-source threshold variant of corpus.sample_flag (same md5-prefix key)
     prefix = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)

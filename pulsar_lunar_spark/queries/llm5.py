@@ -23,7 +23,7 @@ from pulsar_lunar_spark.operators import ml as M
 from pulsar_lunar_spark.operators import similarity as S
 from pulsar_lunar_spark.operators.dedup import normalize_text
 from pulsar_lunar_spark.queries.registry import register
-from pulsar_lunar_spark.session import ensure_parallelism, load_table
+from pulsar_lunar_spark.session import ensure_parallelism, load_table, local_rows
 
 _NORM = "REGEXP_REPLACE(TRIM(LOWER(text)), '\\s+', ' ', 'g')"
 _WORDS = f"STRING_SPLIT({_NORM}, ' ')"
@@ -478,12 +478,7 @@ def q_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
             if e.src in rank and e.dst in inc:
                 inc[e.dst] += rank[e.src] * e.w // out_w[e.src]
         rank = {n: base + 85 * inc[n] // 100 for n in node_ids}
-    ranks = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(n, rank[n]) for n in node_ids], 1
-        ),
-        "node long, rank long",
-    )
+    ranks = local_rows(spark, [(n, rank[n]) for n in node_ids], "node long, rank long")
     return (
         ranks.join(F.broadcast(na), ranks.node == na.n_nationkey)
         .select(

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from pulsar_lunar_spark.operators import corpus as C
 from pulsar_lunar_spark.queries.registry import register
-from pulsar_lunar_spark.session import ensure_parallelism, load_table
+from pulsar_lunar_spark.session import ensure_parallelism, load_table, local_rows
 
 
 @register(
@@ -68,7 +68,8 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     monotone = all(x >= y for x, y in zip(counts, counts[1:]))
     distinct = len({a + b for (_, a, b, _) in merges}) == len(merges)
     _, a0, b0, n0 = merges[0]
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(len(merges), a0, b0, n0, monotone, distinct)],
         "n_merges int, first_left string, first_right string, "
         "first_count long, freq_monotone_ok boolean, merged_distinct_ok boolean",

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from pulsar_lunar_spark.operators import similarity as S
 from pulsar_lunar_spark.operators import text as T
 from pulsar_lunar_spark.queries.registry import register
-from pulsar_lunar_spark.session import ensure_parallelism, load_table
+from pulsar_lunar_spark.session import ensure_parallelism, load_table, local_rows
 
 _NORM = "REGEXP_REPLACE(TRIM(LOWER(text)), '\\s+', ' ', 'g')"
 
@@ -449,8 +449,8 @@ def q_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         (rank + 1, vid, labels[vid], rels[vid])
         for rank, vid in enumerate(selected)
     ]
-    return spark.createDataFrame(
-        rows, "mmr_rank long, vec_id long, label int, rel_ppm long"
+    return local_rows(
+        spark, rows, "mmr_rank long, vec_id long, label int, rel_ppm long"
     )
 
 

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import udtf
 
 from pulsar_lunar_spark.queries.registry import register
-from pulsar_lunar_spark.session import load_table, tables
+from pulsar_lunar_spark.session import load_table, local_rows, tables
 
 
 @register(
@@ -507,7 +507,8 @@ def q_catalog_ctas(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).head()
     spark.sql("DROP TABLE pl_ctas_nation")
     dropped = not spark.catalog.tableExists("pl_ctas_nation")
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(row["n_rows"], row["key_sum"], listed, dropped)],
         "n_rows long, key_sum long, table_listed boolean, dropped boolean",
     )

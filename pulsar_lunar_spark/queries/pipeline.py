@@ -16,7 +16,13 @@ from pyspark.sql import functions as F
 
 from pulsar_lunar_spark.operators.partitioning import stable_row_ids
 from pulsar_lunar_spark.queries.registry import register
-from pulsar_lunar_spark.session import ensure_parallelism, load_table, scratch_dir
+from pulsar_lunar_spark.session import (
+    ensure_parallelism,
+    load_table,
+    local_rows,
+    scoped_confs,
+    scratch_dir,
+)
 
 
 @register(
@@ -205,27 +211,11 @@ def q_bloom_join_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_pipeline.py). Executed under scoped confs and returned as
     a localized result so the threshold overrides never leak into other
     queries' plans."""
-    prev = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
-    for k, v in _BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_confs(spark, _BLOOM_CONFS):
         df = _bloom_join_df(spark, sf_dir)
         rows = df.collect()  # optimize + execute while the confs are live
         schema = df.schema
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    # one-slice localization: bare createDataFrame slices even a 1-row
-    # result into defaultParallelism pickled partitions (a 32-task job,
-    # ~0.3 s/collect), and coalesce(1) is WORSE (one task evaluates all
-    # 32 slices' Python round-trips sequentially, ~3.8 s); parallelize
-    # with numSlices=1 collects in ~0.17 s (r8 A/B, all three measured)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema
-    )
+    return local_rows(spark, rows, schema)
 
 
 @register(
@@ -440,10 +430,7 @@ def q_aqe_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster scale) and returned localized so the overrides never leak;
     the 'AQEShuffleRead ... skewed' node is plan-asserted in
     tests/test_pipeline.py."""
-    prev = {k: spark.conf.get(k, None) for k in _SKEW_CONFS}
-    for k, v in _SKEW_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_confs(spark, _SKEW_CONFS):
         df = _skew_join_df(spark, sf_dir)
         # _skew_join_df ends in a global aggregate: the join output never
         # leaves the executors — the only thing collected here is the
@@ -451,20 +438,7 @@ def q_aqe_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the action costs nothing at any scale.
         rows = df.collect()
         schema = df.schema
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    # one-slice localization: bare createDataFrame slices even a 1-row
-    # result into defaultParallelism pickled partitions (a 32-task job,
-    # ~0.3 s/collect), and coalesce(1) is WORSE (one task evaluates all
-    # 32 slices' Python round-trips sequentially, ~3.8 s); parallelize
-    # with numSlices=1 collects in ~0.17 s (r8 A/B, all three measured)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema
-    )
+    return local_rows(spark, rows, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -566,24 +540,8 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # by the round-5 self-review; fixture is cached, so this is free on
     # every later call)
     _bucketed_fixture(spark, sf_dir)
-    prev = {k: spark.conf.get(k, None) for k in _BUCKET_CONFS}
-    for k, v in _BUCKET_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_confs(spark, _BUCKET_CONFS):
         df = _bucketed_join_df(spark, sf_dir)
         rows = df.collect()  # 5 priority rows — the join never leaves executors
         schema = df.schema
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    # one-slice localization: bare createDataFrame slices even a 1-row
-    # result into defaultParallelism pickled partitions (a 32-task job,
-    # ~0.3 s/collect), and coalesce(1) is WORSE (one task evaluates all
-    # 32 slices' Python round-trips sequentially, ~3.8 s); parallelize
-    # with numSlices=1 collects in ~0.17 s (r8 A/B, all three measured)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema
-    )
+    return local_rows(spark, rows, schema)

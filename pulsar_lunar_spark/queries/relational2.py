@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pulsar_lunar_spark.session import load_table
+from pulsar_lunar_spark.session import load_table, local_rows
 from pulsar_lunar_spark.queries.registry import register
 
 
@@ -407,12 +407,14 @@ def q_intersect_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_inline_values_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inline literal lookup table joined broadcast-style (config/dimension
-    seeding pattern — createDataFrame + broadcast)."""
+    seeding pattern — session.local_rows + broadcast)."""
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region")
     m = F.broadcast(
-        spark.createDataFrame(
-            [("ASIA", 2.0), ("EUROPE", 1.5), ("AMERICA", 1.0)], "rname string, mult double"
+        local_rows(
+            spark,
+            [("ASIA", 2.0), ("EUROPE", 1.5), ("AMERICA", 1.0)],
+            "rname string, mult double",
         )
     )
     return (

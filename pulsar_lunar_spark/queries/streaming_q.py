@@ -27,7 +27,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pulsar_lunar_spark.queries.registry import register
-from pulsar_lunar_spark.session import artifact, artifact_dir, load_table, scratch_dir
+from pulsar_lunar_spark.session import (
+    artifact,
+    artifact_dir,
+    load_table,
+    local_rows,
+    scratch_dir,
+)
 from pulsar_lunar_spark.sources.log import MessageLog
 from pulsar_lunar_spark.streaming import run_available_now, stateful_sessionize
 
@@ -199,8 +205,8 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         no_data_batches=False,  # dropDuplicates emits on first sight
     )
     raw = log.read("events").count()
-    return spark.createDataFrame(
-        [(spark.read.parquet(out).count(), raw)], "n_unique long, n_raw long"
+    return local_rows(
+        spark, [(spark.read.parquet(out).count(), raw)], "n_unique long, n_raw long"
     )
 
 
@@ -248,7 +254,8 @@ def q_stream_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     state_rows = (
         progress["stateOperators"][0]["numRowsTotal"] if progress else n_unique
     )
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(n_unique, n_raw, bool(state_rows < n_unique))],
         "n_unique long, n_raw long, state_evicted boolean",
     )
@@ -710,7 +717,8 @@ def q_stream_backpressure(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination(300)
     n_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(spark.read.parquet(out).count(), n_batches >= 2)],
         "n_messages long, multi_batch boolean",
     )
@@ -793,7 +801,8 @@ def q_topics_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     # message_id struct per SURVEY §1.4: entry_id carries the sequence id
     last = log.last_message_id("events")
     n = log.read("events").count()
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [("events", n, int(last["entry_id"]), listed)],
         "topic string, n_messages long, last_sequence_id long, listed boolean",
     )
@@ -1004,7 +1013,8 @@ def q_stream_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_messages += d["n"]
         total_cents += d["cents"]
         max_seq = d["max_seq"] if max_seq is None else max(max_seq, d["max_seq"])
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(n_messages, total_cents, max_seq, n_batches >= 2)],
         "n_messages long, total_cents long, max_seq long, multi_batch boolean",
     )

@@ -569,6 +569,8 @@ def run_available_now(
     observability, event-time-timeout session closure."""
     from pyspark.sql import SparkSession
 
+    from pulsar_lunar_spark.session import scoped_confs
+
     writer = writer.option("checkpointLocation", checkpoint).trigger(availableNow=True)
     overrides: dict[str, str] = {}
     if state_partitions is not None:
@@ -598,19 +600,9 @@ def run_available_now(
         raise ValueError(f"unknown state_store: {state_store}")
     if not overrides:
         return writer.start()
-    spark = SparkSession.getActiveSession()
-    prev = {k: spark.conf.get(k, None) for k in overrides}
-    for k, v in overrides.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_confs(SparkSession.getActiveSession(), overrides):
         q = writer.start()
         q.awaitTermination(600)
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return q
 
 

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+from contextlib import contextmanager
 
 import duckdb
 import pytest
@@ -33,3 +34,28 @@ def duck():
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     yield con
     con.close()
+
+
+@pytest.fixture
+def no_job_submitted(spark):
+    """``with no_job_submitted(group):`` fails if the body submits a Spark
+    job. A control job in a second group runs after the body; the
+    listener bus is ordered, so once the control job is visible, any job
+    the body submitted is too."""
+
+    @contextmanager
+    def check(group: str):
+        sc = spark.sparkContext
+        try:
+            sc.setJobGroup(group, "must submit no job")
+            yield
+            sc.setJobGroup(f"{group}-control", "control action")
+            assert spark.range(3).count() == 3
+            tracker = sc.statusTracker()
+            assert tracker.getJobIdsForGroup(f"{group}-control")
+            assert tracker.getJobIdsForGroup(group) == []
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    return check

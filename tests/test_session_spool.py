@@ -185,3 +185,48 @@ def test_previous_result_survives_next_call(name, spark, sf_dir):
     first = fn(spark, sf_dir)
     second = fn(spark, sf_dir)
     assert sorted(map(tuple, first.collect())) == sorted(map(tuple, second.collect()))
+
+
+def test_warm_spool_read_submits_no_job(spark, sf_dir, no_job_submitted):
+    from pulsar_lunar_spark.operators.graph import trade_edges
+
+    cold = trade_edges(spark, sf_dir)
+    with no_job_submitted("warm-spool"):
+        warm = trade_edges(spark, sf_dir)
+    assert warm.count() == cold.count() > 0
+
+
+_EXIT_PROBE = """
+import os, sys
+sys.path.insert(0, {root!r})
+from pulsar_lunar_spark.session import scratch_root
+os.makedirs(scratch_root("pl_exit_kind"))
+"""
+
+
+@pytest.mark.parametrize("neighbour", [False, True])
+def test_exit_removes_empty_kind_dir(neighbour, tmp_path):
+    """At exit a process removes its own ``<root>/<kind>/<tag>`` and then
+    the kind directory if that is empty; another process's tag under the
+    same kind survives, and so does the kind directory holding it."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    kind = tmp_path / "pl_exit_kind"
+    other = kind / "other-process-tag"
+    if neighbour:
+        other.mkdir(parents=True)
+    env = dict(os.environ, SPARK_GRAFT_SPOOL_DIR=str(tmp_path))
+    proc = subprocess.run(
+        [sys.executable, "-c", _EXIT_PROBE.format(root=root)],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    if neighbour:
+        assert os.listdir(kind) == ["other-process-tag"]
+    else:
+        assert not kind.exists()
