@@ -48,10 +48,11 @@ split (the q_bpe_merges precedent).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Sequence
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pulsar_lunar_spark.operators import dedup as D
@@ -78,7 +79,7 @@ from pulsar_lunar_spark.streaming import run_available_now
 # Streaming ingest near-dup dedup (MinHash-LSH against a persisted store)
 # ---------------------------------------------------------------------------
 
-_INGEST_DAYS = 3  # ingest day = doc_id % 3 — the deterministic batch split
+_INGEST_DAYS = 3  # ingest day = doc_id % 3 — the deterministic batch split (_ingest_day)
 
 
 def _overlap_store_probe(batch_df, store_dir: str, probe) -> None:
@@ -141,27 +142,118 @@ def _overlap_store_probe(batch_df, store_dir: str, probe) -> None:
         batch_df.unpersist()
 
 
-def _docs_topics(spark: SparkSession, sf_dir: str) -> MessageLog:
-    """Produce the ``docs`` topic ONCE (an artifact) as THREE
-    sequential appends — ingest day k (doc_id % 3 == k) lands as its own
+def _media_doc_id(media_id: str | Column) -> Column:
+    """The document id a media id (``m<doc_id>...``) was built from."""
+    return F.regexp_extract(media_id, "^m([0-9]+)", 1).cast("long")
+
+
+def _ingest_day(doc_id: Column, stride: int) -> Column:
+    """A document's ingest day: (doc_id div stride) % 3. Text and video
+    use stride 1; the audio fixture's ids are all ≡1 mod 3 and the image
+    fixture's all ≡0 mod 3, so those lanes use stride 3."""
+    return (doc_id / stride).cast("long") % _INGEST_DAYS
+
+
+def _day_found(id_a: Column, id_b: Column, stride: int) -> Column:
+    """A pair's discovery day: the later ingest day of its two documents,
+    derived from the ids, so ANY micro-batch split of the stream stamps
+    the same day."""
+    return F.greatest(
+        _ingest_day(id_a, stride), _ingest_day(id_b, stride)
+    ).alias("day_found")
+
+
+def _day_topic(
+    spark: SparkSession,
+    sf_dir: str,
+    topic: str,
+    source: Callable[[], DataFrame],
+    doc_id: Column,
+    stride: int,
+) -> MessageLog:
+    """Produce ``topic`` ONCE (an artifact) as THREE sequential appends —
+    ingest day k (``_ingest_day(doc_id, stride) == k``) lands as its own
     produce, so the file source's (mtime, path) ordering serves the days
     oldest-first to a single continuous subscription — the crawl-drop
-    timeline. Deterministic function of the immutable documents table,
-    so every call (and every bench rep) replays the same topic."""
+    timeline. ``source()`` returns the payload columns, key first;
+    ``doc_id`` is the sequence id. Deterministic function of an immutable
+    table or fixture, so every call (and every bench rep) replays the
+    same topic."""
 
     def produce(root: str) -> None:
         log = MessageLog(spark, root)
-        d = load_table(spark, sf_dir, "documents")
+        rows = source()
         for k in range(_INGEST_DAYS):
             log.produce(
-                d.filter(F.col("doc_id") % _INGEST_DAYS == k),
-                topic="docs",
-                payload_cols=["doc_id", "text"],
-                key="doc_id",
-                sequence_id="doc_id",
+                rows.filter(_ingest_day(doc_id, stride) == k),
+                topic=topic,
+                payload_cols=rows.columns,
+                key=rows.columns[0],
+                sequence_id=doc_id,
             )
 
-    return MessageLog(spark, artifact_dir(spark, sf_dir, "pl_ingest_topics", produce))
+    return MessageLog(spark, artifact_dir(spark, sf_dir, f"pl_{topic}_topic", produce))
+
+
+def _ingest_lane(
+    spark: SparkSession,
+    sf_dir: str,
+    topic: str,
+    source: Callable[[], DataFrame],
+    doc_id: Column,
+    stride: int,
+    batch_rows: Callable[[DataFrame, int], DataFrame],
+    probe: Callable[[DataFrame, DataFrame], DataFrame],
+    result_ddl: str,
+    sort_keys: Sequence[str],
+) -> DataFrame:
+    """The shell every streaming ingest lane runs: ONE continuous
+    availableNow subscription drains the day-split ``topic``
+    (``_day_topic``) day-batch by day-batch, and every foreachBatch
+
+    1. turns the batch's decoded payload columns into store rows
+       (``batch_rows(payload, batch_id)``),
+    2. appends them to the lane's persisted store while probing the store
+       with them (``_overlap_store_probe``; ``probe(batch, full_store)``
+       returns the batch's newly found pairs), and
+    3. appends those pairs to the pair sink.
+
+    Returns the drained pair set sorted by ``sort_keys``, typed as
+    ``result_ddl`` (empty when no batch found a pair). All batch jobs
+    run on foreachBatch's cloned session (8 shuffle partitions for the
+    tiny per-batch aggregates, scoped by run_available_now to this query
+    only)."""
+    log = _day_topic(spark, sf_dir, topic, source, doc_id, stride)
+    run = scratch_dir(f"pl_ingest_{topic}", sf_dir)
+    store = os.path.join(run, "store")
+    pairs = os.path.join(run, "pairs")
+    os.makedirs(pairs)
+
+    def ingest(bdf: DataFrame, batch_id: int) -> None:
+        _overlap_store_probe(
+            batch_rows(bdf.select("payload.*"), batch_id),
+            store,
+            lambda b, full: probe(b, full).write.mode("append").parquet(pairs),
+        )
+
+    # one produce writes <= DEFAULT_NUM_PARTITIONS files; capping the
+    # trigger at that count makes each micro-batch one day's drop under
+    # the file source's (mtime, path) order (sequential produces have
+    # strictly increasing mtimes). Correctness does NOT depend on the
+    # alignment — only the marginal-cost story does. The payload decodes
+    # with the schema the produce registered (GetSchema).
+    run_available_now(
+        log.subscribe(topic, max_files_per_trigger=8)
+        .writeStream.foreachBatch(ingest)
+        .outputMode("append"),
+        os.path.join(run, "ck"),
+        state_partitions=8,
+        no_data_batches=False,  # stateless foreachBatch pipeline
+    )
+    # The pair sink is read with the lane's result schema: no
+    # schema-inference job, and a drain that found no pair (a sink with
+    # no parquet part, or only empty ones) reads as the typed empty result.
+    return spark.read.schema(result_ddl).parquet(pairs).orderBy(*sort_keys)
 
 
 _INGEST_ORACLE = f"""
@@ -202,12 +294,11 @@ def q_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     store — the continuous-crawl composition: ONE continuous availableNow
     subscription drains the docs topic day-batch by day-batch
     (max_files_per_trigger = one produce's file count, so each micro-batch
-    is one ingest day's drop), and every foreachBatch
+    is one ingest day's drop), and every foreachBatch (``_ingest_lane``)
 
-    1. appends the batch's shingle sets to the store (one pass computes
-       them; the bucket stage reads them back materialized),
-    2. appends the batch's 32-band md5-portable MinHash bucket rows,
-    3. probes the store's bucket table with the batch's buckets
+    1. appends the batch's store rows — shingle set + 32-band
+       md5-portable MinHash bucket ids, one combined row per doc,
+    2. probes the store's bucket postings with the batch's buckets
        (band+bucket equi-join — shuffle O(batch x bands + store x bands),
        never all-pairs), verifies candidates with exact shingle Jaccard,
        and appends the verified pairs (day_found, id_lo, id_hi, jaccard).
@@ -222,139 +313,99 @@ def q_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     written, never the pair set or its day stamp) — exactly what the
     oracle replays in SQL.
 
-    Scale shape: the store is an append-only derived dataset (at 100
-    TB/day it is bucket-partitioned parquet so each probe prunes to the
-    batch's buckets; here it is a flat tmpfs dir), the probe join is the
-    asymmetric-LSH join from minhash_incremental_pairs, and the per-batch
-    cost is O(batch) hashing + one store probe — the marginal-cost shape
-    a daily crawl needs. All batch jobs run on foreachBatch's cloned
-    session (8 shuffle partitions for the tiny per-batch aggregates,
-    scoped by run_available_now to this query only)."""
-    log = _docs_topics(spark, sf_dir)
-    run = scratch_dir("pl_ingest_dedup", sf_dir)
-    store_sh = os.path.join(run, "store_shingles")
-    pairs = os.path.join(run, "pairs")
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    Scale shape: the store is an append-only derived dataset (a flat
+    parquet dir), the probe join is the asymmetric-LSH join from
+    minhash_incremental_pairs, and the per-batch hashing is O(batch).
+    The probe is NOT pruned: _overlap_store_probe reads every history
+    file and the probe posexplodes the whole store's bands, so each
+    batch costs O(store) and a stream's total cost grows quadratically
+    with its length (the slope is unmeasured — ROADMAP E)."""
 
-    payload = StructType(
-        [StructField("doc_id", LongType()), StructField("text", StringType())]
-    )
-
-    def ingest(bdf: DataFrame, batch_id: int) -> None:
-        docs = bdf.select(
-            F.col("payload.doc_id").alias("__id"),
-            F.col("payload.text").alias("text"),
-        )
-        # ONE combined store row per doc: shingle set + the 32 banded
-        # bucket ids (vectorized sig UDF over the staged base hashes —
-        # the LSH pipeline's fast lane) — one store sink per batch
-        # instead of separate shingle/bucket sinks. bid is store
-        # bookkeeping only; day attribution on output rows derives
-        # from the ids, so ANY batch split stays correct.
+    # ONE combined store row per doc: shingle set + the 32 banded bucket
+    # ids (vectorized sig UDF over the staged base hashes — the LSH
+    # pipeline's fast lane) — one store sink per batch instead of
+    # separate shingle/bucket sinks. bid is store bookkeeping only; day
+    # attribution on output rows derives from the ids, so ANY batch
+    # split stays correct.
+    def batch_rows(docs: DataFrame, batch_id: int) -> DataFrame:
         sh = docs.select(
-            "__id", D.shingles(F.col("text"), 3).alias("__sh")
+            F.col("doc_id").alias("__id"), D.shingles(F.col("text"), 3).alias("__sh")
         )
         staged = sh.select(
             "__id", "__sh",
             F.transform("__sh", lambda t: D._base_hash(t, "md5")).alias("__base"),
         )
-        batch_rows = staged.select(
+        return staged.select(
             "__id", "__sh",
             D._minhash_sig_udf(128, 42, bands=32)("__base").alias("__buckets"),
             F.lit(batch_id).cast("long").alias("bid"),
         )
 
-        # probe the store with this batch's buckets + exact verify: both
-        # sides posexplode the stored bucket arrays — no second derived
-        # table, no recompute; runs CONCURRENTLY with the store append
-        # (_overlap_store_probe — batch rows pinned in memory, history
-        # from the committed files).
-        #
-        # r12 NEGATIVE RESULT (VERDICT r11 item 3): the image-lane
-        # inline-verify pattern was ported here and measured a clear
-        # REGRESSION — carrying the shingle payload on every one of the
-        # 32 band postings (even as 60-bit hash arrays) inflates the
-        # Generate/join input far past what the two pair-keyed re-joins
-        # cost. Interleaved noop A/B on a static day-3 store at sf0.1:
-        # this shape 0.61 s med vs 3.22 s (string arrays carried) vs
-        # 1.23 s (hashed arrays carried); whole-lane cross-process A/B
-        # med 4.09 vs 4.75 s. The pattern pays only when the carried
-        # payload is a few ints (image dHash bands); plan dumps of the
-        # rejected form in plans/r12/. The distinct-then-join shape is
-        # KEPT deliberately.
-        def probe(batch_b: DataFrame, sh_all: DataFrame) -> None:
-            def bk_of(df):
-                return df.select(
-                    "__id",
-                    F.posexplode("__buckets").alias("band", "bucket"),
-                )
-            cand = (
-                bk_of(batch_b)
-                .alias("n")
-                .join(
-                    bk_of(sh_all).alias("h"),
-                    (F.col("n.band") == F.col("h.band"))
-                    & (F.col("n.bucket") == F.col("h.bucket"))
-                    & (F.col("n.__id") != F.col("h.__id")),
-                )
-                .select(
-                    F.least("n.__id", "h.__id").alias("id_lo"),
-                    F.greatest("n.__id", "h.__id").alias("id_hi"),
-                )
-                .distinct()
+    # probe the store with this batch's buckets + exact verify: both
+    # sides posexplode the stored bucket arrays — no second derived
+    # table, no recompute.
+    #
+    # r12 NEGATIVE RESULT (VERDICT r11 item 3): the image-lane
+    # inline-verify pattern was ported here and measured a clear
+    # REGRESSION — carrying the shingle payload on every one of the
+    # 32 band postings (even as 60-bit hash arrays) inflates the
+    # Generate/join input far past what the two pair-keyed re-joins
+    # cost. Interleaved noop A/B on a static day-3 store at sf0.1:
+    # this shape 0.61 s med vs 3.22 s (string arrays carried) vs
+    # 1.23 s (hashed arrays carried); whole-lane cross-process A/B
+    # med 4.09 vs 4.75 s. The pattern pays only when the carried
+    # payload is a few ints (image dHash bands); plan dumps of the
+    # rejected form in plans/r12/. The distinct-then-join shape is
+    # KEPT deliberately.
+    def probe(batch_b: DataFrame, sh_all: DataFrame) -> DataFrame:
+        def bk_of(df):
+            return df.select(
+                "__id",
+                F.posexplode("__buckets").alias("band", "bucket"),
             )
-            a = sh_all.select(F.col("__id").alias("id_lo"), F.col("__sh").alias("sh_a"))
-            b = sh_all.select(F.col("__id").alias("id_hi"), F.col("__sh").alias("sh_b"))
-            inter = F.size(F.array_intersect("sh_a", "sh_b"))
-            union = F.size(F.array_union("sh_a", "sh_b"))
-            (
-                cand.join(a, "id_lo")
-                .join(b, "id_hi")
-                .select(
-                    F.greatest(
-                        F.col("id_lo") % _INGEST_DAYS,
-                        F.col("id_hi") % _INGEST_DAYS,
-                    ).cast("long").alias("day_found"),
-                    "id_lo",
-                    "id_hi",
-                    F.round(inter / union, 6).alias("jaccard"),
-                )
-                .filter(F.col("jaccard") >= 0.3)
-                .write.mode("append")
-                .parquet(pairs)
+        cand = (
+            bk_of(batch_b)
+            .alias("n")
+            .join(
+                bk_of(sh_all).alias("h"),
+                (F.col("n.band") == F.col("h.band"))
+                & (F.col("n.bucket") == F.col("h.bucket"))
+                & (F.col("n.__id") != F.col("h.__id")),
             )
-
-        _overlap_store_probe(batch_rows, store_sh, probe)
-
-    # one produce writes <= DEFAULT_NUM_PARTITIONS files; capping the
-    # trigger at that count makes each micro-batch one day's drop under
-    # the file source's (mtime, path) order (sequential produces have
-    # strictly increasing mtimes). Correctness does NOT depend on the
-    # alignment — only the marginal-cost story does.
-    stream = log.subscribe(
-        "docs", payload_schema=payload, max_files_per_trigger=8
-    )
-    run_available_now(
-        stream.writeStream.foreachBatch(ingest).outputMode("append"),
-        os.path.join(run, "ck"),
-        state_partitions=8,
-        no_data_batches=False,  # stateless foreachBatch pipeline
-    )
-    # A corpus with NO near-dup pairs writes no parquet parts at all
-    # (an empty-frame append emits only _SUCCESS) — return the typed
-    # empty result instead of letting schema inference fail.
-    if not os.path.isdir(pairs) or not any(
-        f.endswith(".parquet") for f in os.listdir(pairs)
-    ):
-        return local_rows(
-            spark, [], "day_found long, id_lo long, id_hi long, jaccard double"
+            .select(
+                F.least("n.__id", "h.__id").alias("id_lo"),
+                F.greatest("n.__id", "h.__id").alias("id_hi"),
+            )
+            .distinct()
         )
-    return spark.read.parquet(pairs).orderBy("id_lo", "id_hi")
+        a = sh_all.select(F.col("__id").alias("id_lo"), F.col("__sh").alias("sh_a"))
+        b = sh_all.select(F.col("__id").alias("id_hi"), F.col("__sh").alias("sh_b"))
+        inter = F.size(F.array_intersect("sh_a", "sh_b"))
+        union = F.size(F.array_union("sh_a", "sh_b"))
+        return (
+            cand.join(a, "id_lo")
+            .join(b, "id_hi")
+            .select(
+                _day_found(F.col("id_lo"), F.col("id_hi"), 1),
+                "id_lo",
+                "id_hi",
+                F.round(inter / union, 6).alias("jaccard"),
+            )
+            .filter(F.col("jaccard") >= 0.3)
+        )
+
+    return _ingest_lane(
+        spark,
+        sf_dir,
+        "docs",
+        source=lambda: load_table(spark, sf_dir, "documents").select("doc_id", "text"),
+        doc_id=F.col("doc_id"),
+        stride=1,
+        batch_rows=batch_rows,
+        probe=probe,
+        result_ddl="day_found long, id_lo long, id_hi long, jaccard double",
+        sort_keys=("id_lo", "id_hi"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1096,41 +1147,6 @@ def q_spec_decode_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _clips_topic(spark: SparkSession, sf_dir: str):
-    """Produce the ``clips`` topic ONCE (an artifact) as three
-    sequential day appends (day = base doc_id % 3; a clip's planted
-    variants land the same day) from the SAME materialized vdup fixture
-    q_video_neardup decodes — real AVI bytes ride the envelope payload
-    (base64 through the JSON serde, lossless).
-
-    INVARIANT (ADVICE r11): each clip is exactly ONE topic row — its
-    whole AVI (and therefore its whole shot-signature set) arrives in a
-    single envelope in a single day-batch. q_stream_media_ingest's
-    store rows stamp ``n_sigs`` from the batch-local window, which
-    equals the global per-clip aggregate ONLY under this one-row-per-
-    clip producer invariant; a producer that ever split a clip across
-    envelope rows would make stored n_sigs values disagree between
-    batches and split the (id_a, id_b, n_sigs_a, n_sigs_b) pair
-    groups."""
-    from pulsar_lunar_spark.queries.media import _vdup_fixture
-
-    def produce(root: str) -> None:
-        log = MessageLog(spark, root)
-        vids = _vdup_fixture(spark, sf_dir).withColumn(
-            "did", F.regexp_extract("media_id", "^m([0-9]+)", 1).cast("long")
-        )
-        for k in range(_INGEST_DAYS):
-            log.produce(
-                vids.filter(F.col("did") % _INGEST_DAYS == k),
-                topic="clips",
-                payload_cols=["media_id", "content"],
-                key="media_id",
-                sequence_id="did",
-            )
-
-    return MessageLog(spark, artifact_dir(spark, sf_dir, "pl_clips_topic", produce))
-
-
 def _stream_media_oracle() -> str:
     from pulsar_lunar_spark.queries.media import _VDUP_MATCH_PPM, _vdup_cte
 
@@ -1180,33 +1196,19 @@ def q_stream_media_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the signature-bucket equi-join (pair mass bounded by agreement,
     the band_postings stress-probe shape); per-clip signature-set sizes
     come from one store aggregate, never a re-decode."""
-    log = _clips_topic(spark, sf_dir)
-    run = scratch_dir("pl_media_ingest", sf_dir)
-    store_sigs = os.path.join(run, "store_sigs")
-    pairs = os.path.join(run, "pairs")
-    from pyspark.sql.types import (
-        BinaryType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    from pyspark.sql.window import Window
 
     from pulsar_lunar_spark.operators import multimodal as M
-    from pulsar_lunar_spark.queries.media import _CUT_PER_PIXEL, _VDUP_MATCH_PPM
-
-    payload = StructType(
-        [
-            StructField("media_id", StringType()),
-            StructField("content", BinaryType()),
-        ]
+    from pulsar_lunar_spark.queries.media import (
+        _CUT_PER_PIXEL,
+        _VDUP_MATCH_PPM,
+        _vdup_fixture,
     )
-    def ingest(bdf: DataFrame, batch_id: int) -> None:
-        clips = bdf.select(
-            F.col("payload.media_id").alias("media_id"),
-            F.col("payload.content").alias("content"),
-            F.lit("video").alias("media_type"),
-        )
-        ff = M.video_frame_features(clips).filter(F.col("decode_ok"))
+
+    def batch_rows(clips: DataFrame, batch_id: int) -> DataFrame:
+        ff = M.video_frame_features(
+            clips.withColumn("media_type", F.lit("video"))
+        ).filter(F.col("decode_ok"))
         starts = ff.filter(F.col("frame_index") == 0).unionByName(
             ff.filter(
                 (F.col("frame_index") >= 1)
@@ -1227,9 +1229,7 @@ def q_stream_media_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         # exchanges per batch, plans/r11/
         # q_stream_media_ingest_probe_{before,after}.txt); the append and
         # the probe then run concurrently (_overlap_store_probe).
-        from pyspark.sql.window import Window
-
-        batch_rows = (
+        return (
             starts.select(
                 "media_id", "b0", "b1", "b2", "b3",
                 F.lit(batch_id).cast("long").alias("bid"),
@@ -1243,110 +1243,83 @@ def q_stream_media_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-        # probe the store with this batch's signatures + verify: both
-        # sides' n_sigs ride the match join; the distinct gains two
-        # pair-constant columns, so its cardinality (and the emitted
-        # pair set) is unchanged.
-        def probe(batch_b: DataFrame, sg: DataFrame) -> None:
-            n_lt_h = F.col("n.media_id") < F.col("h.media_id")
-            matched = (
-                batch_b
-                .alias("n")
-                .join(
-                    sg.alias("h"),
-                    (F.col("n.b0") == F.col("h.b0"))
-                    & (F.col("n.b1") == F.col("h.b1"))
-                    & (F.col("n.b2") == F.col("h.b2"))
-                    & (F.col("n.b3") == F.col("h.b3"))
-                    & (F.col("n.media_id") != F.col("h.media_id")),
-                )
-                .select(
-                    F.least("n.media_id", "h.media_id").alias("id_a"),
-                    F.greatest("n.media_id", "h.media_id").alias("id_b"),
-                    F.when(n_lt_h, F.col("n.n_sigs"))
-                    .otherwise(F.col("h.n_sigs"))
-                    .cast("long")
-                    .alias("n_sigs_a"),
-                    F.when(n_lt_h, F.col("h.n_sigs"))
-                    .otherwise(F.col("n.n_sigs"))
-                    .cast("long")
-                    .alias("n_sigs_b"),
-                    F.col("n.b0").alias("b0"), F.col("n.b1").alias("b1"),
-                    F.col("n.b2").alias("b2"), F.col("n.b3").alias("b3"),
-                )
-                .distinct()
+    # probe the store with this batch's signatures + verify: both
+    # sides' n_sigs ride the match join; the distinct gains two
+    # pair-constant columns, so its cardinality (and the emitted
+    # pair set) is unchanged.
+    def probe(batch_b: DataFrame, sg: DataFrame) -> DataFrame:
+        n_lt_h = F.col("n.media_id") < F.col("h.media_id")
+        matched = (
+            batch_b
+            .alias("n")
+            .join(
+                sg.alias("h"),
+                (F.col("n.b0") == F.col("h.b0"))
+                & (F.col("n.b1") == F.col("h.b1"))
+                & (F.col("n.b2") == F.col("h.b2"))
+                & (F.col("n.b3") == F.col("h.b3"))
+                & (F.col("n.media_id") != F.col("h.media_id")),
             )
-            (
-                matched.groupBy("id_a", "id_b", "n_sigs_a", "n_sigs_b")
-                .agg(F.count(F.lit(1)).cast("long").alias("shared_sigs"))
-                .select(
-                    F.greatest(
-                        F.regexp_extract(F.col("id_a"), "^m([0-9]+)", 1)
-                        .cast("long") % _INGEST_DAYS,
-                        F.regexp_extract(F.col("id_b"), "^m([0-9]+)", 1)
-                        .cast("long") % _INGEST_DAYS,
-                    ).cast("long").alias("day_found"),
-                    "id_a", "id_b", "shared_sigs", "n_sigs_a", "n_sigs_b",
-                    F.expr(
-                        "(1000000 * shared_sigs) div least(n_sigs_a, n_sigs_b)"
-                    ).cast("long").alias("match_ppm"),
-                )
-                .filter(F.col("match_ppm") >= _VDUP_MATCH_PPM)
-                .write.mode("append")
-                .parquet(pairs)
+            .select(
+                F.least("n.media_id", "h.media_id").alias("id_a"),
+                F.greatest("n.media_id", "h.media_id").alias("id_b"),
+                F.when(n_lt_h, F.col("n.n_sigs"))
+                .otherwise(F.col("h.n_sigs"))
+                .cast("long")
+                .alias("n_sigs_a"),
+                F.when(n_lt_h, F.col("h.n_sigs"))
+                .otherwise(F.col("n.n_sigs"))
+                .cast("long")
+                .alias("n_sigs_b"),
+                F.col("n.b0").alias("b0"), F.col("n.b1").alias("b1"),
+                F.col("n.b2").alias("b2"), F.col("n.b3").alias("b3"),
             )
-
-        _overlap_store_probe(batch_rows, store_sigs, probe)
-
-    stream = log.subscribe(
-        "clips", payload_schema=payload, max_files_per_trigger=8
-    )
-    run_available_now(
-        stream.writeStream.foreachBatch(ingest).outputMode("append"),
-        os.path.join(run, "ck"),
-        state_partitions=8,
-        no_data_batches=False,  # stateless foreachBatch pipeline
-    )
-    if not os.path.isdir(pairs) or not any(
-        f.endswith(".parquet") for f in os.listdir(pairs)
-    ):
-        return local_rows(
-            spark,
-            [],
-            "day_found long, id_a string, id_b string, shared_sigs long,"
-            " n_sigs_a long, n_sigs_b long, match_ppm long",
+            .distinct()
         )
-    return spark.read.parquet(pairs).orderBy("id_a", "id_b")
+        return (
+            matched.groupBy("id_a", "id_b", "n_sigs_a", "n_sigs_b")
+            .agg(F.count(F.lit(1)).cast("long").alias("shared_sigs"))
+            .select(
+                _day_found(_media_doc_id("id_a"), _media_doc_id("id_b"), 1),
+                "id_a", "id_b", "shared_sigs", "n_sigs_a", "n_sigs_b",
+                F.expr(
+                    "(1000000 * shared_sigs) div least(n_sigs_a, n_sigs_b)"
+                ).cast("long").alias("match_ppm"),
+            )
+            .filter(F.col("match_ppm") >= _VDUP_MATCH_PPM)
+        )
+
+    # The topic replays the SAME materialized vdup fixture q_video_neardup
+    # decodes — real AVI bytes ride the envelope payload (base64 through
+    # the JSON serde, lossless). A clip's planted variants share its doc
+    # id, so they land the same day.
+    #
+    # INVARIANT (ADVICE r11): each clip is exactly ONE topic row — its
+    # whole AVI (and therefore its whole shot-signature set) arrives in a
+    # single envelope in a single day-batch. The store rows stamp
+    # ``n_sigs`` from the batch-local window, which equals the global
+    # per-clip aggregate ONLY under this one-row-per-clip producer
+    # invariant; a producer that ever split a clip across envelope rows
+    # would make stored n_sigs values disagree between batches and split
+    # the (id_a, id_b, n_sigs_a, n_sigs_b) pair groups.
+    return _ingest_lane(
+        spark,
+        sf_dir,
+        "clips",
+        source=lambda: _vdup_fixture(spark, sf_dir).select("media_id", "content"),
+        doc_id=_media_doc_id("media_id"),
+        stride=1,
+        batch_rows=batch_rows,
+        probe=probe,
+        result_ddl="day_found long, id_a string, id_b string, shared_sigs long,"
+        " n_sigs_a long, n_sigs_b long, match_ppm long",
+        sort_keys=("id_a", "id_b"),
+    )
 
 
 # ---------------------------------------------------------------------------
 # Streaming AUDIO ingest near-dup dedup (completes tri-modal streaming)
 # ---------------------------------------------------------------------------
-
-
-def _audio_topic(spark: SparkSession, sf_dir: str):
-    """Produce the ``audio`` topic ONCE (an artifact) as three
-    sequential day appends — the audio lane's doc_ids are all ≡1 mod 3,
-    so its ingest day is (doc_id div 3) % 3 — from the SAME materialized
-    fixture q_audio_fingerprint_dedup decodes (real WAV bytes through
-    the envelope)."""
-    from pulsar_lunar_spark.queries.media import _afp_fixture
-
-    def produce(root: str) -> None:
-        log = MessageLog(spark, root)
-        clips = _afp_fixture(spark, sf_dir).withColumn(
-            "did", F.regexp_extract("media_id", "^m([0-9]+)", 1).cast("long")
-        )
-        for k in range(_INGEST_DAYS):
-            log.produce(
-                clips.filter((F.col("did") / 3).cast("long") % _INGEST_DAYS == k),
-                topic="audio",
-                payload_cols=["media_id", "content"],
-                key="media_id",
-                sequence_id="did",
-            )
-
-    return MessageLog(spark, artifact_dir(spark, sf_dir, "pl_audio_topic", produce))
 
 
 def _stream_audio_oracle() -> str:
@@ -1388,41 +1361,27 @@ def q_stream_audio_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_audio_fingerprint_dedup rule discovered incrementally. Pair-found-
     once and id-derived day attribution follow the text lane's argument
     (the audio lane's ids are ≡1 mod 3, so its day is (id div 3) % 3).
+    The topic replays the SAME materialized fixture
+    q_audio_fingerprint_dedup decodes (real WAV bytes through the
+    envelope).
 
     Scale shape: decode+fingerprint is map-only Arrow per batch; the
     store is append-only postings; the probe is the LSH postings join
     (pair mass bounded by fingerprint agreement); per-clip window counts
     ride the same store aggregate."""
-    log = _audio_topic(spark, sf_dir)
-    run = scratch_dir("pl_audio_ingest", sf_dir)
-    store_pp = os.path.join(run, "store_postings")
-    pairs = os.path.join(run, "pairs")
-    from pyspark.sql.types import (
-        BinaryType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from pulsar_lunar_spark.operators import multimodal as M
     from pulsar_lunar_spark.operators.corpus import md5_int
-    from pulsar_lunar_spark.queries.media import _AFP_MATCH_PPM, _AFP_WINDOW
-
-    payload = StructType(
-        [
-            StructField("media_id", StringType()),
-            StructField("content", BinaryType()),
-        ]
+    from pulsar_lunar_spark.queries.media import (
+        _AFP_MATCH_PPM,
+        _AFP_WINDOW,
+        _afp_fixture,
     )
 
-    def ingest(bdf: DataFrame, batch_id: int) -> None:
-        clips = bdf.select(
-            F.col("payload.media_id").alias("media_id"),
-            F.col("payload.content").alias("content"),
-            F.lit("audio").alias("media_type"),
-        )
-        batch_rows = (
-            M.audio_fingerprints(clips, window=_AFP_WINDOW)
+    def batch_rows(clips: DataFrame, batch_id: int) -> DataFrame:
+        return (
+            M.audio_fingerprints(
+                clips.withColumn("media_type", F.lit("audio")), window=_AFP_WINDOW
+            )
             .filter(F.col("decode_ok"))
             .select(
                 F.col("media_id").alias("clip_id"),
@@ -1432,115 +1391,75 @@ def q_stream_audio_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(batch_id).cast("long").alias("bid"),
             )
         )
-        day_of = lambda c: (  # noqa: E731
-            (F.regexp_extract(F.col(c), "^m([0-9]+)", 1).cast("long") / 3)
-            .cast("long") % _INGEST_DAYS
+
+    # r11 optimization (guide §2.4): n_windows is a CONSTANT column on
+    # every store row of a clip (audio_fingerprints stamps it per row,
+    # and a clip's rows land in exactly one batch), so both sides'
+    # window counts ride the match join directly — the per-clip
+    # n_windows aggregate and its two re-joins are gone (4->2 store
+    # scans, 7->3 exchanges per batch, plans/r11/
+    # q_stream_audio_ingest_probe_{before,after}.txt). The distinct
+    # gains two pair-constant columns, so its cardinality is unchanged
+    # and the emitted rows are identical. The store append and this
+    # probe run concurrently (_overlap_store_probe; measured
+    # 3.9 -> 2.7 s solo for the whole query).
+    def probe(batch_b: DataFrame, pp: DataFrame) -> DataFrame:
+        a_lt_b = F.col("a.clip_id") < F.col("b.clip_id")
+        matched = (
+            batch_b
+            .alias("a")
+            .join(
+                pp.alias("b"),
+                (F.col("a.win") == F.col("b.win"))
+                & (F.col("a.fp") == F.col("b.fp"))
+                & (F.col("a.clip_id") != F.col("b.clip_id")),
+            )
+            .select(
+                F.least("a.clip_id", "b.clip_id").alias("id_a"),
+                F.greatest("a.clip_id", "b.clip_id").alias("id_b"),
+                F.when(a_lt_b, F.col("a.n_windows"))
+                .otherwise(F.col("b.n_windows"))
+                .cast("long")
+                .alias("n_windows_a"),
+                F.when(a_lt_b, F.col("b.n_windows"))
+                .otherwise(F.col("a.n_windows"))
+                .cast("long")
+                .alias("n_windows_b"),
+                F.col("a.win").alias("win"),
+            )
+            .distinct()
+        )
+        return (
+            matched.groupBy("id_a", "id_b", "n_windows_a", "n_windows_b")
+            .agg(F.count(F.lit(1)).cast("long").alias("n_match"))
+            .select(
+                _day_found(_media_doc_id("id_a"), _media_doc_id("id_b"), 3),
+                "id_a", "id_b", "n_match", "n_windows_a", "n_windows_b",
+                F.expr(
+                    "(1000000L * n_match) div least(n_windows_a, n_windows_b)"
+                ).cast("long").alias("match_ppm"),
+            )
+            .filter(F.col("match_ppm") >= _AFP_MATCH_PPM)
         )
 
-        # r11 optimization (guide §2.4): n_windows is a CONSTANT column on
-        # every store row of a clip (audio_fingerprints stamps it per row,
-        # and a clip's rows land in exactly one batch), so both sides'
-        # window counts ride the match join directly — the per-clip
-        # n_windows aggregate and its two re-joins are gone (4->2 store
-        # scans, 7->3 exchanges per batch, plans/r11/
-        # q_stream_audio_ingest_probe_{before,after}.txt). The distinct
-        # gains two pair-constant columns, so its cardinality is unchanged
-        # and the emitted rows are identical. The store append and this
-        # probe run concurrently (_overlap_store_probe; measured
-        # 3.9 -> 2.7 s solo for the whole query).
-        def probe(batch_b: DataFrame, pp: DataFrame) -> None:
-            a_lt_b = F.col("a.clip_id") < F.col("b.clip_id")
-            matched = (
-                batch_b
-                .alias("a")
-                .join(
-                    pp.alias("b"),
-                    (F.col("a.win") == F.col("b.win"))
-                    & (F.col("a.fp") == F.col("b.fp"))
-                    & (F.col("a.clip_id") != F.col("b.clip_id")),
-                )
-                .select(
-                    F.least("a.clip_id", "b.clip_id").alias("id_a"),
-                    F.greatest("a.clip_id", "b.clip_id").alias("id_b"),
-                    F.when(a_lt_b, F.col("a.n_windows"))
-                    .otherwise(F.col("b.n_windows"))
-                    .cast("long")
-                    .alias("n_windows_a"),
-                    F.when(a_lt_b, F.col("b.n_windows"))
-                    .otherwise(F.col("a.n_windows"))
-                    .cast("long")
-                    .alias("n_windows_b"),
-                    F.col("a.win").alias("win"),
-                )
-                .distinct()
-            )
-            (
-                matched.groupBy("id_a", "id_b", "n_windows_a", "n_windows_b")
-                .agg(F.count(F.lit(1)).cast("long").alias("n_match"))
-                .select(
-                    F.greatest(day_of("id_a"), day_of("id_b"))
-                    .cast("long")
-                    .alias("day_found"),
-                    "id_a", "id_b", "n_match", "n_windows_a", "n_windows_b",
-                    F.expr(
-                        "(1000000L * n_match) div least(n_windows_a, n_windows_b)"
-                    ).cast("long").alias("match_ppm"),
-                )
-                .filter(F.col("match_ppm") >= _AFP_MATCH_PPM)
-                .write.mode("append")
-                .parquet(pairs)
-            )
-
-        _overlap_store_probe(batch_rows, store_pp, probe)
-
-    stream = log.subscribe(
-        "audio", payload_schema=payload, max_files_per_trigger=8
+    return _ingest_lane(
+        spark,
+        sf_dir,
+        "audio",
+        source=lambda: _afp_fixture(spark, sf_dir).select("media_id", "content"),
+        doc_id=_media_doc_id("media_id"),
+        stride=3,
+        batch_rows=batch_rows,
+        probe=probe,
+        result_ddl="day_found long, id_a string, id_b string, n_match long,"
+        " n_windows_a long, n_windows_b long, match_ppm long",
+        sort_keys=("id_a", "id_b"),
     )
-    run_available_now(
-        stream.writeStream.foreachBatch(ingest).outputMode("append"),
-        os.path.join(run, "ck"),
-        state_partitions=8,
-        no_data_batches=False,  # stateless foreachBatch pipeline
-    )
-    if not os.path.isdir(pairs) or not any(
-        f.endswith(".parquet") for f in os.listdir(pairs)
-    ):
-        return local_rows(
-            spark,
-            [],
-            "day_found long, id_a string, id_b string, n_match long,"
-            " n_windows_a long, n_windows_b long, match_ppm long",
-        )
-    return spark.read.parquet(pairs).orderBy("id_a", "id_b")
 
 
 # ---------------------------------------------------------------------------
 # Streaming IMAGE ingest near-dup dedup (every near-dup modality streams)
 # ---------------------------------------------------------------------------
-
-
-def _image_topic(spark: SparkSession, sf_dir: str):
-    """Produce the ``images`` topic ONCE (an artifact) as three
-    sequential day appends (the image lane's ids are ≡0 mod 3, so its
-    day is (doc_id div 3) % 3) from the SAME materialized fixture
-    q_image_phash_dedup decodes (real BMP bytes through the envelope)."""
-    from pulsar_lunar_spark.queries.media import _dhash_fixture
-
-    def produce(root: str) -> None:
-        log = MessageLog(spark, root)
-        imgs = _dhash_fixture(spark, sf_dir).withColumn(
-            "did", F.regexp_extract("media_id", "^m([0-9]+)", 1).cast("long")
-        )
-        for k in range(_INGEST_DAYS):
-            log.produce(
-                imgs.filter((F.col("did") / 3).cast("long") % _INGEST_DAYS == k),
-                topic="images",
-                payload_cols=["media_id", "content"],
-                key="media_id",
-                sequence_id="did",
-            )
-
-    return MessageLog(spark, artifact_dir(spark, sf_dir, "pl_image_topic", produce))
 
 
 def _stream_image_oracle() -> str:
@@ -1581,113 +1500,81 @@ def q_stream_image_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (band_index, band_value) postings — the q_image_phash_dedup LSH
     unit — and emits pairs at Hamming distance <= 6 over the carried
     64-bit hashes. Pair-found-once and id-derived day attribution follow
-    the text lane's argument; the Hamming verify needs only the two hash
-    rows, both already in the store.
+    the text lane's argument (the image lane's ids are ≡0 mod 3, so its
+    day is (id div 3) % 3); the Hamming verify needs only the two hash
+    rows, both already in the store. The topic replays the SAME
+    materialized fixture q_image_phash_dedup decodes (real BMP bytes
+    through the envelope).
 
     Scale shape: decode+hash is map-only Arrow per batch; the store is
     one 4-column row per image; the probe explodes 4 band postings per
     side (shuffle O(4 x images), pair mass bounded by band agreement —
     the band_postings stress-probe shape)."""
-    log = _image_topic(spark, sf_dir)
-    run = scratch_dir("pl_image_ingest", sf_dir)
-    store_h = os.path.join(run, "store_hashes")
-    pairs = os.path.join(run, "pairs")
-    from pyspark.sql.types import (
-        BinaryType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from pulsar_lunar_spark.operators import multimodal as M
-    from pulsar_lunar_spark.queries.media import _DHASH_HAMMING_MAX
+    from pulsar_lunar_spark.queries.media import _DHASH_HAMMING_MAX, _dhash_fixture
 
-    payload = StructType(
-        [
-            StructField("media_id", StringType()),
-            StructField("content", BinaryType()),
-        ]
-    )
-
-    def ingest(bdf: DataFrame, batch_id: int) -> None:
-        imgs = bdf.select(
-            F.col("payload.media_id").alias("media_id"),
-            F.col("payload.content").alias("content"),
-            F.lit("image").alias("media_type"),
-        )
-        batch_rows = M.image_dhash(imgs).filter(F.col("decode_ok")).select(
+    def batch_rows(imgs: DataFrame, batch_id: int) -> DataFrame:
+        return M.image_dhash(
+            imgs.withColumn("media_type", F.lit("image"))
+        ).filter(F.col("decode_ok")).select(
             "media_id", "b0", "b1", "b2", "b3",
             F.lit(batch_id).cast("long").alias("bid"),
         )
 
-        # Each image has exactly ONE store row, so the full 64-bit hash can
-        # ride the 4 band postings and the Hamming verify happens INLINE on
-        # the banding join's output — no re-join against the hash table.
-        # r11 optimization (guide §2.4/§3): the prior shape was
-        # postings⋈postings → distinct → ⋈hashes(id_a) → ⋈hashes(id_b);
-        # this one is postings⋈postings → verify → distinct: 4→2 parquet
-        # scans, 4→2 exchanges per batch (plans/r11/
-        # q_stream_image_ingest_probe_{before,after}.txt), identical pair
-        # set (hamming is a function of the pair; filter-before-distinct
-        # commutes). The store append and the probe run concurrently
-        # (_overlap_store_probe).
-        def postings(df: DataFrame) -> DataFrame:
-            return df.select(
-                "media_id", "b0", "b1", "b2", "b3",
-                F.posexplode(F.array("b0", "b1", "b2", "b3")).alias("k", "bv"),
-            )
-
-        hamming = sum(
-            F.bit_count(F.col(f"a.b{k}").bitwiseXOR(F.col(f"b.b{k}")))
-            for k in range(4)
-        ).cast("long")
-        day_of = lambda c: (  # noqa: E731
-            (F.regexp_extract(F.col(c), "^m([0-9]+)", 1).cast("long") / 3)
-            .cast("long") % _INGEST_DAYS
+    # Each image has exactly ONE store row, so the full 64-bit hash can
+    # ride the 4 band postings and the Hamming verify happens INLINE on
+    # the banding join's output — no re-join against the hash table.
+    # r11 optimization (guide §2.4/§3): the prior shape was
+    # postings⋈postings → distinct → ⋈hashes(id_a) → ⋈hashes(id_b);
+    # this one is postings⋈postings → verify → distinct: 4→2 parquet
+    # scans, 4→2 exchanges per batch (plans/r11/
+    # q_stream_image_ingest_probe_{before,after}.txt), identical pair
+    # set (hamming is a function of the pair; filter-before-distinct
+    # commutes). The store append and the probe run concurrently
+    # (_overlap_store_probe).
+    def postings(df: DataFrame) -> DataFrame:
+        return df.select(
+            "media_id", "b0", "b1", "b2", "b3",
+            F.posexplode(F.array("b0", "b1", "b2", "b3")).alias("k", "bv"),
         )
 
-        def probe(batch_b: DataFrame, hs: DataFrame) -> None:
-            (
-                postings(batch_b)
-                .alias("a")
-                .join(
-                    postings(hs).alias("b"),
-                    (F.col("a.k") == F.col("b.k"))
-                    & (F.col("a.bv") == F.col("b.bv"))
-                    & (F.col("a.media_id") != F.col("b.media_id")),
-                )
-                .select(
-                    F.least("a.media_id", "b.media_id").alias("id_a"),
-                    F.greatest("a.media_id", "b.media_id").alias("id_b"),
-                    hamming.alias("hamming"),
-                )
-                .filter(F.col("hamming") <= _DHASH_HAMMING_MAX)
-                .distinct()
-                .select(
-                    F.greatest(day_of("id_a"), day_of("id_b"))
-                    .cast("long")
-                    .alias("day_found"),
-                    "id_a", "id_b", "hamming",
-                )
-                .write.mode("append")
-                .parquet(pairs)
+    hamming = sum(
+        F.bit_count(F.col(f"a.b{k}").bitwiseXOR(F.col(f"b.b{k}")))
+        for k in range(4)
+    ).cast("long")
+
+    def probe(batch_b: DataFrame, hs: DataFrame) -> DataFrame:
+        return (
+            postings(batch_b)
+            .alias("a")
+            .join(
+                postings(hs).alias("b"),
+                (F.col("a.k") == F.col("b.k"))
+                & (F.col("a.bv") == F.col("b.bv"))
+                & (F.col("a.media_id") != F.col("b.media_id")),
             )
-
-        _overlap_store_probe(batch_rows, store_h, probe)
-
-    stream = log.subscribe(
-        "images", payload_schema=payload, max_files_per_trigger=8
-    )
-    run_available_now(
-        stream.writeStream.foreachBatch(ingest).outputMode("append"),
-        os.path.join(run, "ck"),
-        state_partitions=8,
-        no_data_batches=False,  # stateless foreachBatch pipeline
-    )
-    if not os.path.isdir(pairs) or not any(
-        f.endswith(".parquet") for f in os.listdir(pairs)
-    ):
-        return local_rows(
-            spark, [], "day_found long, id_a string, id_b string, hamming long"
+            .select(
+                F.least("a.media_id", "b.media_id").alias("id_a"),
+                F.greatest("a.media_id", "b.media_id").alias("id_b"),
+                hamming.alias("hamming"),
+            )
+            .filter(F.col("hamming") <= _DHASH_HAMMING_MAX)
+            .distinct()
+            .select(
+                _day_found(_media_doc_id("id_a"), _media_doc_id("id_b"), 3),
+                "id_a", "id_b", "hamming",
+            )
         )
-    return spark.read.parquet(pairs).orderBy("id_a", "id_b")
+
+    return _ingest_lane(
+        spark,
+        sf_dir,
+        "images",
+        source=lambda: _dhash_fixture(spark, sf_dir).select("media_id", "content"),
+        doc_id=_media_doc_id("media_id"),
+        stride=3,
+        batch_rows=batch_rows,
+        probe=probe,
+        result_ddl="day_found long, id_a string, id_b string, hamming long",
+        sort_keys=("id_a", "id_b"),
+    )

@@ -21,6 +21,7 @@ aggregation state is O(windows×keys); dedup state is watermark-evicted).
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -64,6 +65,19 @@ def _shared_log(spark: SparkSession, sf_dir: str, copies: int = 1) -> MessageLog
     return MessageLog(
         spark, artifact_dir(spark, sf_dir, f"pl_streamq_log_x{copies}", produce)
     )
+
+
+def _files_per_trigger(log: MessageLog, topic: str, batches: int) -> int:
+    """``max_files_per_trigger`` that splits ``topic``'s log files into
+    about ``batches`` micro-batches (source rate limiting, the CommandFlow
+    permit knob)."""
+    n_files = sum(
+        1
+        for _r, _d, fs in os.walk(log.topic_path(topic))
+        for f in fs
+        if f.endswith(".parquet")
+    )
+    return max(1, math.ceil(n_files / batches))
 
 
 def _events_max_us(spark: SparkSession, sf_dir: str) -> int:
@@ -548,14 +562,13 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.floor(F.col("value") * 100 + 0.5)).cast("long").alias("cents"),
         )
     )
-    q = run_available_now(
+    run_available_now(
         stream.writeStream.format("memory")
         .queryName("q_stream_enrich_sink")
         .outputMode("append"),
         scratch_dir("pl_streamq_ck_enrich", sf_dir),
         no_data_batches=False,  # stateless stream-static join
     )
-    q.awaitTermination(300)
     return (
         spark.table("q_stream_enrich_sink")
         .groupBy("segment")
@@ -697,25 +710,16 @@ def q_stream_backpressure(spark: SparkSession, sf_dir: str) -> DataFrame:
     span MULTIPLE micro-batches, and the oracle pins (a) not one message
     lost or duplicated across batch boundaries and (b) that throttling
     actually produced >= 2 non-empty batches (the multi_batch flag)."""
-    import math
-    import os as _os
-
     log = _shared_log(spark, sf_dir)
-    topic_dir = log.topic_path("events")
-    n_files = sum(
-        1 for _r, _d, fs in _os.walk(topic_dir) for f in fs if f.endswith(".parquet")
-    )
-    per_trigger = max(1, math.ceil(n_files / 4))  # => ~4 micro-batches
-    stream = log.subscribe("events", max_files_per_trigger=per_trigger).select(
-        "sequence_id"
-    )
+    stream = log.subscribe(
+        "events", max_files_per_trigger=_files_per_trigger(log, "events", 4)
+    ).select("sequence_id")
     out = scratch_dir("pl_streamq_out_backpressure", sf_dir)
     q = run_available_now(
         stream.writeStream.format("parquet").option("path", out).outputMode("append"),
         scratch_dir("pl_streamq_ck_backpressure", sf_dir),
         no_data_batches=False,  # stateless paced drain; batch count ignores 0-row batches
     )
-    q.awaitTermination(300)
     n_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
     return local_rows(
         spark,
@@ -964,24 +968,15 @@ def q_stream_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, sum of per-batch cent-sums = table sum, max of per-batch max
     positions = the last message id — not one message lost, duplicated,
     or double-counted across batch boundaries."""
-    import math
-    import os as _os
-
     from pulsar_lunar_spark.streaming.ops import observe_stats
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     log = _shared_log(spark, sf_dir)
-    n_files = sum(
-        1
-        for _r, _d, fs in _os.walk(log.topic_path("events"))
-        for f in fs
-        if f.endswith(".parquet")
-    )
     payload = StructType([StructField("value", DoubleType())])
     stream = log.subscribe(
         "events",
         payload_schema=payload,
-        max_files_per_trigger=max(1, math.ceil(n_files / 3)),
+        max_files_per_trigger=_files_per_trigger(log, "events", 3),
     ).select(
         F.floor(F.col("payload.value") * 100 + 0.5).cast("long").alias("cents"),
         "sequence_id",
@@ -998,7 +993,6 @@ def q_stream_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         scratch_dir("pl_streamq_ck_observed", sf_dir),
         no_data_batches=False,  # metrics ride data batches only
     )
-    q.awaitTermination(300)
     n_messages = total_cents = 0
     max_seq = None
     n_batches = 0
@@ -1043,24 +1037,15 @@ def q_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: this is how a 100 TB fact table keeps a serving aggregate
     fresh — the stream carries deltas, the view is the state, and the
     refresh shuffle is keyed on the view's own grain."""
-    import math
-    import os as _os
-
     from pulsar_lunar_spark.operators.maintenance import incremental_agg_refresh
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     log = _shared_log(spark, sf_dir)
-    n_files = sum(
-        1
-        for _r, _d, fs in _os.walk(log.topic_path("events"))
-        for f in fs
-        if f.endswith(".parquet")
-    )
     payload = StructType([StructField("value", DoubleType())])
     stream = log.subscribe(
         "events",
         payload_schema=payload,
-        max_files_per_trigger=max(1, math.ceil(n_files / 3)),
+        max_files_per_trigger=_files_per_trigger(log, "events", 3),
     ).select(
         F.col("key").cast("long").alias("user_id"),
         F.floor(F.col("payload.value") * 100 + 0.5).cast("long").alias("cents"),
@@ -1116,24 +1101,15 @@ def q_txn_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the ledger is O(batches) tiny markers (a transactional table
     at scale, same contract); the sink write is the stream's own
     parallelism — nothing here is per-row driver work."""
-    import math
-    import os as _os
-
     from pulsar_lunar_spark.streaming.ops import idempotent_foreach_batch
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     log = _shared_log(spark, sf_dir)
-    n_files = sum(
-        1
-        for _r, _d, fs in _os.walk(log.topic_path("events"))
-        for f in fs
-        if f.endswith(".parquet")
-    )
     payload = StructType([StructField("value", DoubleType())])
     stream = log.subscribe(
         "events",
         payload_schema=payload,
-        max_files_per_trigger=max(1, math.ceil(n_files / 2)),
+        max_files_per_trigger=_files_per_trigger(log, "events", 2),
     ).select(
         F.col("sequence_id").alias("event_id"),
         F.floor(F.col("payload.value") * 100 + 0.5).cast("long").alias("cents"),
@@ -1150,7 +1126,7 @@ def q_txn_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     committed = sorted(
         int(f.split("-")[1].split(".")[0])
-        for f in _os.listdir(ledger)
+        for f in os.listdir(ledger)
         if f.endswith(".committed")
     )
     n_before = spark.read.parquet(sink).count()
@@ -1161,7 +1137,7 @@ def q_txn_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         fn(replay_df, bid)
     sunk = spark.read.parquet(sink)
     n_after = sunk.count()
-    markers_after = sum(1 for f in _os.listdir(ledger) if f.endswith(".committed"))
+    markers_after = sum(1 for f in os.listdir(ledger) if f.endswith(".committed"))
     return sunk.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         F.countDistinct("event_id").cast("bigint").alias("n_distinct"),
@@ -1446,7 +1422,7 @@ def q_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     typed = stream.select(F.col("payload.event_type").alias("event_type"))
     counts = typed.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     ckpt = scratch_dir("pl_streamq_ck_statestore", sf_dir)
-    q = run_available_now(
+    run_available_now(
         counts.writeStream.format("memory").queryName(
             "pl_state_store_read"
         ).outputMode("complete"),
@@ -1454,8 +1430,6 @@ def q_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         state_partitions=8,
         no_data_batches=False,  # complete-mode agg: no eviction semantics
     )
-    # run_available_now with state_partitions set already awaited
-    # termination; q is a terminated query here.
     # The state VALUE struct carries the aggregation buffer's physical
     # field name (`count`), not the query-level alias — the reader
     # exposes the checkpoint's truth, not the analyzed plan's.

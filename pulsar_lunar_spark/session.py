@@ -321,9 +321,10 @@ def sf_cache_tag(sf_dir: str) -> str:
 # produced topic). Registry guard only (dict mutations); each key builds
 # under its OWN RLock, so cold builds of unrelated keys never serialize on
 # each other (ADVICE r10). Same-key re-entry from the owning thread must
-# not deadlock; cross-kind builds (a topic produce reads load_table,
-# _clips_topic reads _vdup_fixture) take a DIFFERENT key's lock — safe
-# because the kind dependency graph is acyclic by construction.
+# not deadlock; cross-kind builds (a topic produce reads load_table, the
+# clips topic's _day_topic produce reads _vdup_fixture) take a DIFFERENT
+# key's lock — safe because the kind dependency graph is acyclic by
+# construction.
 _ARTIFACTS: dict[tuple, object] = {}
 _ARTIFACTS_LOCK = threading.Lock()
 _ARTIFACT_KEYLOCKS: dict[tuple, threading.RLock] = {}

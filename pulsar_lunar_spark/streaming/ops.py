@@ -417,6 +417,9 @@ _ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
 
+# Upper bound, in seconds, on one bounded drain (run_available_now).
+_DRAIN_TIMEOUT_S = 600
+
 
 def stateful_sessionize(
     stream: DataFrame,
@@ -537,8 +540,16 @@ def run_available_now(
     state_store: str | None = None,
     no_data_batches: bool = True,
 ):
-    """Start a bounded run (end-of-topic semantics, PulsarApi.proto:548-550):
+    """Run a bounded drain (end-of-topic semantics, PulsarApi.proto:548-550):
     trigger(availableNow) drains everything currently in the log and stops.
+
+    One contract for every call: the query is started and awaited here,
+    and the returned query is always terminated. A failed micro-batch
+    (a ``foreachBatch`` that raises, a refused checkpoint) raises here as
+    ``StreamingQueryException``. A drain still running after
+    ``_DRAIN_TIMEOUT_S`` seconds is stopped and raises ``TimeoutError``,
+    so a partial drain never reads as a finished one. Callers never
+    await the query themselves.
 
     ``state_partitions`` overrides ``spark.sql.shuffle.partitions`` for this
     query only: a stateful stream materializes one state-store instance per
@@ -547,10 +558,9 @@ def run_available_now(
     count, not the row count, dominates. A streaming query pins the number
     at first checkpoint anyway (it can never change for the checkpoint's
     lifetime), so it must be sized to the STATE volume, not the session's
-    scan parallelism. When set, the query is run to completion here (the
-    session conf must stay overridden until the stream thread clones it,
-    so the restore can only happen after termination) and the returned
-    query is already terminated.
+    scan parallelism. Overrides stay set until the query terminates (the
+    stream thread clones the session conf when it starts); with none, no
+    conf is read or set.
 
     ``state_store="rocksdb"`` selects the RocksDB provider with changelog
     checkpointing — the 100 TB lever: state lives off-heap on local SSD
@@ -598,11 +608,14 @@ def run_available_now(
         ] = "true"
     elif state_store is not None:
         raise ValueError(f"unknown state_store: {state_store}")
-    if not overrides:
-        return writer.start()
     with scoped_confs(SparkSession.getActiveSession(), overrides):
         q = writer.start()
-        q.awaitTermination(600)
+        if not q.awaitTermination(_DRAIN_TIMEOUT_S):
+            q.stop()
+            raise TimeoutError(
+                f"availableNow drain ({checkpoint}) still running after "
+                f"{_DRAIN_TIMEOUT_S} s; stopped"
+            )
     return q
 
 

@@ -395,3 +395,62 @@ def test_stream_image_ingest_matches_batch_twin(spark):
             (int(_re.match(r"m(\d+)", k[1]).group(1)) // 3) % 3,
         )
         assert g["day_found"] == day
+
+
+def test_ingest_lane_empty_pair_set_is_typed_and_runs_no_job(
+    spark, sf_dir, no_job_submitted
+):
+    """A drain whose probe finds no pair: the shared ingest-lane runner
+    returns an empty frame with the lane's result schema (the text
+    lane's here), and building it runs no schema-inference job on the
+    pair sink (the drain's own jobs run in the stream's job group)."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import (
+        DoubleType,
+        LongType,
+        StructField,
+        StructType,
+    )
+
+    from pulsar_lunar_spark.queries.llm18 import _day_topic, _ingest_lane
+    from pulsar_lunar_spark.session import load_table
+
+    topic = dict(
+        topic="docs_nopairs",
+        source=lambda: load_table(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .limit(30),
+        doc_id=F.col("doc_id"),
+        stride=1,
+    )
+    _day_topic(spark, sf_dir, **topic)  # produce outside the checked block
+
+    def probe(batch, full):
+        return batch.select(
+            F.lit(0).cast("long").alias("day_found"),
+            F.col("__id").alias("id_lo"),
+            F.col("__id").alias("id_hi"),
+            F.lit(1.0).alias("jaccard"),
+        ).filter(F.col("id_lo") < F.col("id_hi"))
+
+    with no_job_submitted("ingest-lane-empty"):
+        out = _ingest_lane(
+            spark,
+            sf_dir,
+            **topic,
+            batch_rows=lambda docs, bid: docs.select(
+                F.col("doc_id").alias("__id")
+            ),
+            probe=probe,
+            result_ddl="day_found long, id_lo long, id_hi long, jaccard double",
+            sort_keys=("id_lo", "id_hi"),
+        )
+    assert out.collect() == []
+    assert out.schema == StructType(
+        [
+            StructField("day_found", LongType()),
+            StructField("id_lo", LongType()),
+            StructField("id_hi", LongType()),
+            StructField("jaccard", DoubleType()),
+        ]
+    )

@@ -71,6 +71,64 @@ def test_produce_subscribe_roundtrip(spark, log, tmp_path):
     assert abs(got["total"] - direct) < 1e-6
 
 
+def test_run_available_now_returns_terminated_query(spark, log, tmp_path):
+    """With no conf override the drain is awaited too: the returned query
+    has stopped, and it read the whole topic."""
+    q = run_available_now(
+        log.subscribe("events").writeStream.format("noop"),
+        str(tmp_path / "ck"),
+    )
+    assert q.isActive is False
+    assert sum(p["numInputRows"] for p in q.recentProgress) == 1000
+
+
+@pytest.mark.parametrize(
+    "overrides", [{}, {"state_partitions": 2, "no_data_batches": False}]
+)
+def test_run_available_now_raises_on_failed_batch(spark, log, tmp_path, overrides):
+    """A foreachBatch that raises makes run_available_now itself raise,
+    whether or not it scoped conf overrides, and the overrides are
+    restored."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+
+    def fail(bdf, batch_id):
+        raise ValueError("sink refused the batch")
+
+    with pytest.raises(StreamingQueryException, match="sink refused the batch"):
+        run_available_now(
+            log.subscribe("events").writeStream.foreachBatch(fail),
+            str(tmp_path / "ck"),
+            **overrides,
+        )
+    assert spark.conf.get("spark.sql.shuffle.partitions") == partitions
+
+
+def test_run_available_now_stops_and_raises_on_timeout(
+    spark, log, tmp_path, monkeypatch
+):
+    """A drain still running at the drain time limit is stopped, and
+    run_available_now raises instead of returning a partial drain."""
+    import time
+
+    from pulsar_lunar_spark.streaming import ops
+
+    monkeypatch.setattr(ops, "_DRAIN_TIMEOUT_S", 0.5)
+
+    def slow(bdf, batch_id):
+        time.sleep(3)
+
+    with pytest.raises(TimeoutError):
+        run_available_now(
+            log.subscribe("events")
+            .writeStream.queryName("slow_drain")
+            .foreachBatch(slow),
+            str(tmp_path / "ck"),
+        )
+    assert not [q for q in spark.streams.active if q.name == "slow_drain"]
+
+
 def test_subscription_cursor_resumes(spark, log, sf_dir, tmp_path):
     """A named subscription (checkpoint) consumes new messages exactly once:
     second availableNow run after a second produce() sees only the delta."""

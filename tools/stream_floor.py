@@ -62,18 +62,21 @@ def main() -> None:
     spark = get_spark("stream_floor")
 
     import pulsar_lunar_spark.streaming.ops as ops
-    import pulsar_lunar_spark.queries.streaming_q as sq
 
     orig = ops.run_available_now
+    # every engine module that binds the function (ops, the streaming
+    # package, each query module that imported it)
+    binders = [
+        m
+        for name, m in list(sys.modules.items())
+        if name.startswith("pulsar_lunar_spark")
+        and getattr(m, "run_available_now", None) is orig
+    ]
     captured: list[dict] = []
 
     def capture(writer, checkpoint, **kw):
         t0 = time.perf_counter()
         q = orig(writer, checkpoint, **kw)
-        try:
-            q.awaitTermination(600)
-        except Exception:
-            pass
         wall = time.perf_counter() - t0
         progress = [json.loads(p.json) if hasattr(p, "json") else p for p in q.recentProgress]
         # recentProgress is a ring buffer capped at
@@ -95,16 +98,15 @@ def main() -> None:
         spec = specs[name]
         spec.fn(spark, sf_dir).count()  # warm: topic produce, JIT, codegen
         captured.clear()
-        # patch both the defining module and the importing module's binding
-        ops.run_available_now = capture
-        sq.run_available_now = capture
+        for m in binders:
+            m.run_available_now = capture
         try:
             t0 = time.perf_counter()
             spec.fn(spark, sf_dir).collect()
             total = time.perf_counter() - t0
         finally:
-            ops.run_available_now = orig
-            sq.run_available_now = orig
+            for m in binders:
+                m.run_available_now = orig
         drains = len(captured)
         batches = add_ms = trig_ms = 0
         stream_wall = 0.0
