@@ -1,17 +1,19 @@
 """Corpus-level training-data pipeline operators (SURVEY §2B north star):
-Gopher-style repetition/quality stats, near-dup clustering (connected
-components -> canonical doc selection), deterministic stratified sampling,
-TF-IDF term weighting, BM25 retrieval scoring, benchmark-contamination
-n-gram checks.
+near-dup clustering (connected components), deterministic stratified
+sampling, TF-IDF term weighting, BM25 retrieval scoring,
+benchmark-contamination n-gram counts, token-window chunking, portable
+md5/bloom hashing, hashed n-gram importance selection and tokenizer
+training (BPE merges, Kneser-Ney bigrams, unigram-LM). The Gopher
+repetition counters are the q_quality_gopher Arrow lane
+(`queries/llm3.py`).
 
 These complete the dedup story of `operators/dedup.py`: pair detection
 (MinHash-LSH / SimHash) emits edges; `connected_components` turns edges
-into dup clusters; `canonical_ids` picks one keeper per cluster.
+into dup clusters whose component id (the MIN doc id) is the keeper.
 
 Scale notes (100 TB): everything here is exploded-token / edge-list
 relational work — shuffles are O(tokens) or O(edges * log n), never
-O(n^2). Repetition stats are per-row JVM HOF expressions (no shuffle at
-all). No Python UDF anywhere in this module.
+O(n^2). No Python UDF anywhere in this module.
 """
 
 from __future__ import annotations
@@ -20,63 +22,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pulsar_lunar_spark.operators.dedup import normalize_text
-
-
-# ---------------------------------------------------------------------------
-# Gopher-style repetition stats (quality pre-filters)
-# ---------------------------------------------------------------------------
-
-def repetition_counts(col: Column) -> dict[str, Column]:
-    """Integer repetition counters for one document (all JVM HOFs).
-
-    Returned counters are INTEGERS so callers can aggregate them as sums
-    and take ratios-of-sums afterwards — order-independent, so corpus
-    aggregates hash-match a sequential oracle exactly (doubles averaged
-    across partitions would not).
-
-    - total_words / distinct_words: duplicate-word mass = 1 - distinct/total
-    - top_word_count: occurrences of the single most frequent word
-      (Gopher's "top word share" numerator)
-    - total_2grams / distinct_2grams: duplicate-2gram mass
-    """
-    words = F.split(normalize_text(col), " ")
-    total = F.size(words)
-    uniq = F.array_distinct(words)
-    # top word count = longest run in the sorted array: one O(n) fold with a
-    # (prev, run, best) accumulator instead of the O(distinct·n)
-    # filter-per-distinct-word form (HOF lambdas evaluate interpreted, so
-    # the asymptotic term dominates; measured ~3x on the corpus scan).
-    top = F.aggregate(
-        F.array_sort(words),
-        F.struct(
-            F.lit("").alias("prev"), F.lit(0).alias("run"), F.lit(0).alias("best")
-        ),
-        lambda acc, w: F.struct(
-            w.alias("prev"),
-            F.when(w == acc.getField("prev"), acc.getField("run") + 1)
-            .otherwise(F.lit(1))
-            .alias("run"),
-            F.greatest(
-                acc.getField("best"),
-                F.when(w == acc.getField("prev"), acc.getField("run") + 1).otherwise(
-                    F.lit(1)
-                ),
-            ).alias("best"),
-        ),
-        lambda acc: acc.getField("best"),
-    )
-    grams2 = F.transform(
-        F.sequence(F.lit(0), total - 2),
-        lambda i: F.concat_ws(" ", F.slice(words, i + 1, 2)),
-    )
-    grams2 = F.when(total >= 2, grams2).otherwise(F.array().cast("array<string>"))
-    return {
-        "total_words": total,
-        "distinct_words": F.size(uniq),
-        "top_word_count": top,
-        "total_2grams": F.size(grams2),
-        "distinct_2grams": F.size(F.array_distinct(grams2)),
-    }
 
 
 # ---------------------------------------------------------------------------
@@ -261,12 +206,6 @@ def connected_components_star(
     )
 
 
-def canonical_ids(components: DataFrame) -> DataFrame:
-    """One keeper per dup cluster: the component id itself (MIN doc id in
-    the cluster, by construction of `connected_components`)."""
-    return components.select(F.col("component").alias("keeper_id")).distinct()
-
-
 # ---------------------------------------------------------------------------
 # Deterministic stratified sampling
 # ---------------------------------------------------------------------------
@@ -385,22 +324,6 @@ def bm25_scores(
 # ---------------------------------------------------------------------------
 # Benchmark contamination (n-gram overlap vs a held-out set)
 # ---------------------------------------------------------------------------
-
-def contamination_hits(
-    corpus_shingles: DataFrame, bench_shingles: DataFrame
-) -> DataFrame:
-    """(bench_id, corpus_id) pairs sharing >= 1 shingle — the inverted-index
-    join used for benchmark-decontamination. Inputs are (id, shingle-array)
-    tables; both are exploded and joined on the shingle value, so the
-    shuffle is O(total shingles), never pairwise."""
-    c = corpus_shingles.select(
-        F.col("__id").alias("corpus_id"), F.explode("__sh").alias("sh")
-    )
-    s = bench_shingles.select(
-        F.col("__id").alias("bench_id"), F.explode("__sh").alias("sh")
-    )
-    return c.join(s, "sh").select("bench_id", "corpus_id").distinct()
-
 
 def contamination_counts(
     corpus_shingles: DataFrame, bench_shingles: DataFrame

@@ -92,25 +92,6 @@ def _hash_coefficients(n_hashes: int, seed: int) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_signature(
-    shingle_col: Column, n_hashes: int = 64, seed: int = 42
-) -> Column:
-    """n-permutation MinHash signature (array<bigint>) of a shingle array.
-
-    h_i(s) = (a_i * (xxhash64(s) mod p) + b_i) mod p with p = 2^31-1;
-    signature_i = min over shingles. Pure JVM expressions: one base-hash
-    pass + n array_min folds, all inside whole-stage codegen.
-    """
-    base = F.transform(shingle_col, lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE_31)))
-    sig = [
-        F.array_min(
-            F.transform(base, lambda h: (F.lit(a) * h + F.lit(b)) % _MERSENNE_31)
-        )
-        for a, b in _hash_coefficients(n_hashes, seed)
-    ]
-    return F.array(*sig)
-
-
 # Polynomial band-bucket fold constant (< 2^31 so (acc*K + s) stays < 2^62
 # before each mod — exact in int64 on both the JVM and numpy paths).
 _BAND_K = 1_000_003

@@ -1,22 +1,19 @@
 """Graph operators over relational edge lists (SURVEY §2B north star,
-corpus-curation family): integer-arithmetic PageRank for link/host-graph
-ranking — the quality prior a web-scale curation pipeline assigns to
-domains before sampling documents from them.
+corpus-curation family).
+
+- ``trade_edges``: the nation trade graph, aggregated once per (dataset,
+  process) and spooled — the link graph every graph query reads.
+- ``pagerank``: integer-arithmetic PageRank for link/host-graph ranking,
+  the quality prior a web-scale curation pipeline assigns to domains
+  before sampling documents from them. Ranks are integer micro-units
+  (1e6 = 1.0) and each update is integer multiply + floor division, so
+  the engine and any SQL oracle agree bit-for-bit — no floating
+  accumulation anywhere.
+- Triangle counting: degree-ordered orientation (``orient_edges``), the
+  oriented adjacency table, and the edge-iterator count over it.
 
 Complements `corpus.connected_components` (dup clustering): components
 answer "which nodes are the same", PageRank answers "which nodes matter".
-
-Determinism discipline: ranks are kept in integer micro-units (1e6 = 1.0)
-and every per-iteration update is BIGINT multiply + floor division, so
-Spark and any SQL oracle agree bit-for-bit regardless of partial-sum
-order — no floating accumulation anywhere.
-
-Scale notes (100 TB): each iteration is one join of the rank vector onto
-the edge list (rank side is O(nodes) — broadcast when nodes are hosts,
-shuffle-join on src when nodes are pages) plus one groupBy(dst) integer
-sum. Cost per iteration is O(edges) shuffle bytes; the rank vector is
-localCheckpoint-ed per round so the logical plan stays constant-size
-(see memory: iterative loops double the plan otherwise).
 """
 
 from __future__ import annotations
@@ -67,65 +64,40 @@ def trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def pagerank(
-    nodes: DataFrame,
-    edges: DataFrame,
+    node_ids: list[int],
+    edges: list[tuple[int, int, int]],
     iterations: int = 3,
     damping_pct: int = 85,
-    checkpoint_edges: bool = True,
-) -> DataFrame:
-    """Fixed-iteration PageRank in integer micro-units.
+) -> dict[int, int]:
+    """Fixed-iteration PageRank in integer micro-units over a bounded graph
+    held on the driver (collect the aggregated edge table once, iterate
+    here — no per-round jobs).
 
-    nodes: (node BIGINT) — the full vertex set (isolated nodes keep the
-    teleport mass). edges: (src, dst, w BIGINT) positive integer weights.
-    Returns (node, rank BIGINT micro-units).
+    node_ids: the full vertex set (isolated nodes keep the teleport mass).
+    edges: (src, dst, w) with positive integer weights. Returns
+    {node: rank micro-units}.
 
-    Update rule (all BIGINT, `DIV` = floor division on non-negatives):
-        contrib(e)   = rank[src] * w  DIV  out_w[src]
-        rank'[node]  = (100 - damping_pct) * MICRO DIV 100
-                       + damping_pct * sum(contrib into node) DIV 100
+    Update rule (all integer, floor division on non-negatives — the SQL
+    oracle's BIGINT ``DIV``):
+        contrib(e)   = rank[src] * w  //  out_w[src]
+        rank'[node]  = (100 - damping_pct) * MICRO // 100
+                       + damping_pct * sum(contrib into node) // 100
     Dangling-node mass is dropped (documented deviation — standard for
-    fixed-iteration curation scoring; totals are not renormalized).
+    fixed-iteration curation scoring; totals are not renormalized). An
+    edge with an endpoint outside ``node_ids`` contributes nothing.
     """
-    n = nodes.select(F.col("node").cast("long").alias("node"))
-    out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
-    ew = edges.join(out_w, "src").select(
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-        F.col("w").cast("long").alias("w"),
-        F.col("out_w").cast("long").alias("out_w"),
-    )
-    if checkpoint_edges:
-        # Truncate the edge pipeline's lineage so each iteration's join
-        # re-reads materialized rows, not the upstream build. Callers
-        # whose edges are ALREADY a spooled table (trade_edges) pass
-        # False: re-evaluating a tiny-parquet scan + out_w agg per
-        # iteration is cheaper than the extra eager checkpoint job.
-        ew = ew.localCheckpoint(eager=True)
+    out_w: dict[int, int] = {}
+    for src, _dst, w in edges:
+        out_w[src] = out_w.get(src, 0) + w
     base = (100 - damping_pct) * MICRO // 100
-    ranks = n.select("node", F.lit(MICRO).cast("long").alias("rank"))
+    rank = {n: MICRO for n in node_ids}
     for _ in range(iterations):
-        contrib = (
-            ew.join(ranks, ew.src == ranks.node)
-            .select(
-                F.col("dst"),
-                F.expr("rank * w DIV out_w").cast("long").alias("contrib"),
-            )
-        )
-        incoming = contrib.groupBy("dst").agg(F.sum("contrib").alias("inc"))
-        ranks = (
-            n.join(incoming, n.node == incoming.dst, "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.expr(f"{damping_pct}L * coalesce(inc, 0L) DIV 100")
-                )
-                .cast("long")
-                .alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks
+        inc = {n: 0 for n in node_ids}
+        for src, dst, w in edges:
+            if src in rank and dst in inc:
+                inc[dst] += rank[src] * w // out_w[src]
+        rank = {n: base + damping_pct * inc[n] // 100 for n in node_ids}
+    return rank
 
 
 def orient_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -162,29 +134,6 @@ def orient_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFr
     )
 
 
-def triangle_count_oriented(oriented: DataFrame) -> DataFrame:
-    """Exact triangle count over an already-oriented edge list (a, b).
-
-    Every triangle appears exactly once as a directed wedge u->v, v->w
-    closed by u->w — the orientation bounds the join fan-out by the MAX
-    OUT-DEGREE, which degree ordering keeps near sqrt(edges) even on
-    power-law graphs (a hub's adjacency never explodes: its edges all
-    point INTO it). Three hash equi-joins, no cartesian; returns a 1-row
-    DataFrame (n_triangles BIGINT).
-
-    `oriented` is consumed THREE times (e1/e2/e3) — the caller must
-    materialize it (persist + eager fill, or a written-once spool) or the
-    whole edge-building subtree re-executes per consumer (the round-6
-    judge measured 38 FileScans / 72 shuffles / 0 ReusedExchange on the
-    unmaterialized form).
-    """
-    e1 = oriented.select(F.col("a").alias("u"), F.col("b").alias("v"))
-    e2 = oriented.select(F.col("a").alias("v"), F.col("b").alias("w"))
-    e3 = oriented.select(F.col("a").alias("u"), F.col("b").alias("w"))
-    wedges = e1.join(e2, "v").select("u", "w")
-    return wedges.join(e3, ["u", "w"]).agg(F.count(F.lit(1)).alias("n_triangles"))
-
-
 def oriented_adjacency(oriented: DataFrame) -> DataFrame:
     """Per-node out-adjacency over an oriented edge list (a, b): one row
     (a, nb ARRAY) per non-sink node. Safe to collect_set ONLY because the
@@ -209,11 +158,9 @@ def triangle_count_adjacency(adj: DataFrame) -> DataFrame:
     edge): one job, no separate count. The intersection is JVM-codegen
     hash-set `array_intersect`, O(|nb_u| + |nb_w|) per edge.
 
-    Trade-off vs the wedge-join form (`triangle_count_oriented`): this
-    shuffles O(V) adjacency rows instead of the O(sum out-deg^2) wedge
-    stream; the adjacency row size is bounded by orientation (see
-    `oriented_adjacency`). Prefer this form unless per-node adjacency
-    (~sqrt(E) elements) outgrows executor row limits.
+    It shuffles O(V) adjacency rows, not the O(sum out-deg^2) stream a
+    wedge self-join would; the adjacency row size is bounded by
+    orientation (see `oriented_adjacency`).
     """
     probe = adj.select(
         F.col("a").alias("u"), F.col("nb").alias("nb_u"), F.explode("nb").alias("w")
@@ -230,8 +177,8 @@ def triangle_count_adjacency(adj: DataFrame) -> DataFrame:
             "left",
         ).agg(
             # outer coalesce: SUM over ZERO rows (edgeless adjacency) is
-            # NULL — an empty graph must yield (0, 0) like the other
-            # triangle forms, not (NULL, 0) (ADVICE r7).
+            # NULL — an empty graph must yield (0, 0), not (NULL, 0)
+            # (ADVICE r7).
             F.coalesce(
                 F.sum(
                     F.coalesce(F.size(F.array_intersect("nb_u", "nb_w")), F.lit(0))
@@ -245,15 +192,3 @@ def triangle_count_adjacency(adj: DataFrame) -> DataFrame:
     )
 
 
-def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """Exact triangle count via degree-ordered edge orientation.
-
-    `edges`: undirected distinct pairs, one row per edge (either direction,
-    no duplicates). Convenience composition of `orient_edges` +
-    `triangle_count_oriented` — callers with a non-trivial edge subtree
-    should call the stages themselves and materialize the oriented list
-    (or the `oriented_adjacency` table, which is O(V) rows and cheaper to
-    spool) in between; see `triangle_count_adjacency` for the
-    fewest-stages form.
-    """
-    return triangle_count_oriented(orient_edges(edges, src, dst))

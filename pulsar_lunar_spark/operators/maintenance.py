@@ -15,7 +15,6 @@ PulsarApi.proto:317-319, applied to storage instead of a broker).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -130,10 +129,10 @@ def cdc_apply(
     a deleted key — the classic CDC tombstone hazard. With them, version
     precedence makes the apply idempotent under replayed batches and
     correct under out-of-order delivery across batches. Read the serving
-    view through :func:`cdc_live` (filters tombstones out); at scale,
-    vacuum tombstones older than the source's maximum redelivery horizon
-    (the same age-based GC Kafka compaction applies to its null
-    records).
+    view through :func:`cdc_live` (filters tombstones out). Tombstones
+    are kept: expiring those older than the source's maximum redelivery
+    horizon (the age-based GC Kafka compaction applies to its null
+    records) is not implemented.
 
     One union + per-key max-struct aggregate + session.replace_dir; at
     scale, bucketing the target by the key makes the rewrite
@@ -179,27 +178,8 @@ def cdc_live(spark: SparkSession, target_path: str, op_col: str = "op") -> DataF
     return spark.read.parquet(target_path).filter(F.col(op_col) != "d").drop(op_col)
 
 
-def cdc_vacuum_tombstones(
-    spark: SparkSession,
-    target_path: str,
-    version_col: str,
-    horizon,
-    op_col: str = "op",
-) -> None:
-    """Drop tombstones whose version is at or below ``horizon`` — safe
-    once the source can no longer redeliver changes that old (the
-    redelivery/retention horizon), exactly like compacted-log null-record
-    expiry. Tombstones NEWER than the horizon stay: they are still
-    guarding against in-flight stale upserts. The rewrite replaces the
-    directory through session.replace_dir."""
-    kept = spark.read.parquet(target_path).filter(
-        (F.col(op_col) != "d") | (F.col(version_col) > F.lit(horizon))
-    )
-    replace_dir(target_path, kept.write.mode("overwrite").parquet)
-
-
 # ---------------------------------------------------------------------------
-# Snapshot versioning: time travel + vacuum over plain parquet
+# Snapshot versioning: time travel over plain parquet
 # ---------------------------------------------------------------------------
 
 def snapshot_versions(path: str) -> list[int]:
@@ -239,19 +219,6 @@ def read_snapshot(spark: SparkSession, path: str, version: int | None = None) ->
     if v not in vs:
         raise FileNotFoundError(f"version {v} not in {vs}")
     return spark.read.parquet(os.path.join(path, f"v={v}"))
-
-
-def vacuum_snapshots(path: str, keep_last: int = 2) -> list[int]:
-    """Delete all but the newest `keep_last` snapshots (retention GC);
-    returns the versions removed. Refuses keep_last < 1 — the latest
-    snapshot is never vacuumable."""
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    vs = snapshot_versions(path)
-    doomed = vs[:-keep_last] if keep_last < len(vs) else []
-    for v in doomed:
-        shutil.rmtree(os.path.join(path, f"v={v}"))
-    return doomed
 
 
 # ---------------------------------------------------------------------------

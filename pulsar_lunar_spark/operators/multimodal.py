@@ -15,9 +15,8 @@ mu-law), and uncompressed RIFF AVI video (encode_avi/decode_avi —
 that genuinely need external libraries (mp3/flac -> soundfile,
 compressed video -> ffmpeg, progressive/subsampled JPEG -> PIL) raise
 NotImplementedError and are flagged ``decode_ok=false`` instead of
-crashing the batch; 'fake' keeps a deterministic stub for plumbing
-tests. The Spark-side schema, UDF signature and Arrow batch shape are
-identical across all paths.
+crashing the batch. The Spark-side schema, UDF signature and Arrow batch
+shape are identical across all paths.
 """
 
 from __future__ import annotations
@@ -63,11 +62,6 @@ AUDIO_FEATURES_SCHEMA = (
     "rms double, decode_ok boolean"
 )
 
-#: Output schema of video frame sampling.
-FRAME_SAMPLE_SCHEMA = (
-    "media_id string, frame_index int, frame_ms int, frame bytes"
-).replace("bytes", "binary")
-
 #: Output schema of REAL (decoded) video frame sampling.
 AVI_FRAME_SCHEMA = (
     "media_id string, frame_index int, frame_ms int, width int, height int, "
@@ -111,12 +105,10 @@ def encode_bmp(pixels: "np.ndarray | int", width: int | None = None, height: int
     return header + info + body
 
 
-def decode_bmp(content: bytes) -> tuple[int, int, float]:
-    """Decode a 24-bpp uncompressed BMP: (width, height, mean_luma).
-
-    mean_luma is the mean over all B,G,R channel bytes (== the gray level
-    for grayscale content). Raises ValueError for corrupt bytes and
-    NotImplementedError for BMP variants beyond 24-bpp BI_RGB."""
+def _bmp_bgr(content: bytes) -> tuple[np.ndarray, int, int, bool]:
+    """Parse a 24-bpp uncompressed BMP (BI_RGB): its (h, w*3) B,G,R byte
+    grid with the row padding stripped, in FILE row order, plus (w, h)
+    and whether the file stores rows bottom-up. Errors as decode_bmp."""
     if len(content) < 54 or content[:2] != b"BM":
         raise ValueError("not a BMP file")
     (data_offset,) = struct.unpack_from("<I", content, 10)
@@ -130,7 +122,16 @@ def decode_bmp(content: bytes) -> tuple[int, int, float]:
     if data_offset + row_size * h > len(content):
         raise ValueError("truncated BMP pixel data")
     px = np.frombuffer(content, np.uint8, count=row_size * h, offset=data_offset)
-    px = px.reshape(h, row_size)[:, : w * 3]  # strip row padding
+    return px.reshape(h, row_size)[:, : w * 3], w, h, h_signed > 0
+
+
+def decode_bmp(content: bytes) -> tuple[int, int, float]:
+    """Decode a 24-bpp uncompressed BMP: (width, height, mean_luma).
+
+    mean_luma is the mean over all B,G,R channel bytes (== the gray level
+    for grayscale content). Raises ValueError for corrupt bytes and
+    NotImplementedError for BMP variants beyond 24-bpp BI_RGB."""
+    px, w, h, _ = _bmp_bgr(content)
     return (w, h, float(px.mean()) if px.size else 0.0)
 
 
@@ -138,21 +139,9 @@ def decode_bmp_pixels(content: bytes) -> np.ndarray:
     """Decode a 24-bpp BMP to its (h, w) uint8 luma grid in TOP-DOWN row
     order (un-flips the file's bottom-up storage). Grayscale content has
     B == G == R, so the blue channel is the luma exactly."""
-    if len(content) < 54 or content[:2] != b"BM":
-        raise ValueError("not a BMP file")
-    (data_offset,) = struct.unpack_from("<I", content, 10)
-    w, h_signed = struct.unpack_from("<ii", content, 18)
-    _, bpp = struct.unpack_from("<HH", content, 26)
-    (compression,) = struct.unpack_from("<I", content, 30)
-    if bpp != 24 or compression != 0:
-        raise NotImplementedError(f"BMP {bpp}-bpp compression={compression} unsupported")
-    h = abs(h_signed)
-    row_size = (w * 3 + 3) // 4 * 4
-    if data_offset + row_size * h > len(content):
-        raise ValueError("truncated BMP pixel data")
-    px = np.frombuffer(content, np.uint8, count=row_size * h, offset=data_offset)
-    luma = px.reshape(h, row_size)[:, : w * 3].reshape(h, w, 3)[:, :, 0]
-    return luma[::-1] if h_signed > 0 else luma  # bottom-up files flip back
+    px, w, h, bottom_up = _bmp_bgr(content)
+    luma = px.reshape(h, w, 3)[:, :, 0]
+    return luma[::-1] if bottom_up else luma
 
 
 def resize_images(df: DataFrame, out_w: int = 8, out_h: int = 8) -> DataFrame:
@@ -484,12 +473,10 @@ def encode_wav_mulaw(samples: np.ndarray, rate: int = 8000) -> bytes:
     return riff + fmt + struct.pack("<4sI", b"data", len(data)) + data
 
 
-def decode_wav(content: bytes) -> tuple[int, float]:
-    """Decode a PCM WAV: (duration_ms, rms) over the 16-bit samples.
-
-    Walks RIFF chunks (fmt /data may be in any order, odd sizes padded).
-    Raises ValueError for corrupt bytes, NotImplementedError for non-PCM
-    or non-16-bit encodings (those need ffmpeg/soundfile)."""
+def _wav_chunks(content: bytes) -> tuple[int, int, int, int, bytes]:
+    """Walk a WAV file's RIFF chunks (fmt /data may be in any order, odd
+    sizes padded): (audio_fmt, channels, rate, bits, data). Raises
+    ValueError for corrupt bytes."""
     if len(content) < 12 or content[:4] != b"RIFF" or content[8:12] != b"WAVE":
         raise ValueError("not a WAV file")
     audio_fmt = channels = rate = bits = None
@@ -507,15 +494,27 @@ def decode_wav(content: bytes) -> tuple[int, float]:
         pos += 8 + size + (size & 1)  # chunks are word-aligned
     if audio_fmt is None or data is None:
         raise ValueError("WAV missing fmt/data chunk")
-    if audio_fmt == 7 and bits == 8:  # G.711 mu-law: expand, then as PCM
-        samples = mulaw_decode(np.frombuffer(data, np.uint8)).astype(np.float64)
-        n_frames = len(samples) // max(channels, 1)
-        duration_ms = int(n_frames * 1000 // rate) if rate else 0
-        rms = float(np.sqrt(np.mean(samples**2))) if samples.size else 0.0
-        return (duration_ms, rms)
+    return audio_fmt, channels, rate, bits, data
+
+
+def _pcm16(audio_fmt: int, bits: int, data: bytes) -> np.ndarray:
+    """The int16 samples of a 16-bit PCM data chunk; NotImplementedError
+    for any other encoding (those need ffmpeg/soundfile)."""
     if audio_fmt != 1 or bits != 16:
         raise NotImplementedError(f"WAV fmt={audio_fmt} bits={bits} needs soundfile")
-    samples = np.frombuffer(data[: len(data) // 2 * 2], "<i2").astype(np.float64)
+    return np.frombuffer(data[: len(data) // 2 * 2], "<i2")
+
+
+def decode_wav(content: bytes) -> tuple[int, float]:
+    """Decode a PCM (16-bit) or G.711 mu-law (8-bit) WAV: (duration_ms,
+    rms) over the samples. Raises ValueError for corrupt bytes,
+    NotImplementedError for other encodings."""
+    audio_fmt, channels, rate, bits, data = _wav_chunks(content)
+    if audio_fmt == 7 and bits == 8:  # G.711 mu-law: expand, then as PCM
+        samples = mulaw_decode(np.frombuffer(data, np.uint8))
+    else:
+        samples = _pcm16(audio_fmt, bits, data)
+    samples = samples.astype(np.float64)
     n_frames = len(samples) // max(channels, 1)
     duration_ms = int(n_frames * 1000 // rate) if rate else 0
     rms = float(np.sqrt(np.mean(samples**2))) if samples.size else 0.0
@@ -525,27 +524,10 @@ def decode_wav(content: bytes) -> tuple[int, float]:
 def decode_wav_samples(content: bytes) -> np.ndarray:
     """Decode a 16-bit PCM WAV to its raw int64 sample vector (the
     fingerprinting input — exact integers, unlike decode_wav's float
-    rms). Same RIFF walk and error contract as decode_wav."""
-    if len(content) < 12 or content[:4] != b"RIFF" or content[8:12] != b"WAVE":
-        raise ValueError("not a WAV file")
-    audio_fmt = bits = None
-    data = None
-    pos = 12
-    while pos + 8 <= len(content):
-        cid = content[pos : pos + 4]
-        (size,) = struct.unpack_from("<I", content, pos + 4)
-        body = content[pos + 8 : pos + 8 + size]
-        if cid == b"fmt " and len(body) >= 16:
-            audio_fmt, _, _ = struct.unpack_from("<HHI", body, 0)
-            (bits,) = struct.unpack_from("<H", body, 14)
-        elif cid == b"data":
-            data = body
-        pos += 8 + size + (size & 1)
-    if audio_fmt is None or data is None:
-        raise ValueError("WAV missing fmt/data chunk")
-    if audio_fmt != 1 or bits != 16:
-        raise NotImplementedError(f"WAV fmt={audio_fmt} bits={bits} needs soundfile")
-    return np.frombuffer(data[: len(data) // 2 * 2], "<i2").astype(np.int64)
+    rms). Same RIFF walk as decode_wav; mu-law raises
+    NotImplementedError here."""
+    audio_fmt, _, _, bits, data = _wav_chunks(content)
+    return _pcm16(audio_fmt, bits, data).astype(np.int64)
 
 
 def audio_fingerprints(df: DataFrame, window: int = 32) -> DataFrame:
@@ -656,10 +638,9 @@ def frame_deltas(df: DataFrame) -> DataFrame:
 
 
 def _decode_image(content: bytes, fmt: str) -> tuple[int, int, float]:
-    """Dispatch image decode: BMP and PNG are decoded for real (pure
-    python — PNG does the full zlib inflate + scanline unfilter); 'fake'
-    keeps the deterministic stub for plumbing tests; jpeg honestly
-    requires PIL (absent from this container)."""
+    """Dispatch image decode: BMP, PNG and baseline JPEG are decoded for
+    real (pure python — PNG does the full zlib inflate + scanline
+    unfilter); any other codec needs PIL."""
     if fmt == "bmp":
         return decode_bmp(content)
     if fmt == "png":
@@ -668,19 +649,14 @@ def _decode_image(content: bytes, fmt: str) -> tuple[int, int, float]:
         from pulsar_lunar_spark.operators.jpeg import decode_jpeg
 
         return decode_jpeg(content)
-    if fmt == "fake":
-        h = len(content)
-        return (h % 640 + 1, h % 480 + 1, float(sum(content[:64]) % 256) if content else 0.0)
     raise NotImplementedError(f"image codec '{fmt}' requires PIL (not in container)")
 
 
 def _decode_audio(content: bytes, fmt: str) -> tuple[int, float]:
-    """Dispatch audio decode: WAV is decoded for real; 'fake' keeps the
-    deterministic stub; anything else needs soundfile/ffmpeg."""
+    """Dispatch audio decode: WAV is decoded for real; anything else needs
+    soundfile/ffmpeg."""
     if fmt == "wav":
         return decode_wav(content)
-    if fmt == "fake":
-        return (len(content) * 8, float((content[0] if content else 0) / 255.0))
     raise NotImplementedError(f"audio codec '{fmt}' requires soundfile (not in container)")
 
 
@@ -749,37 +725,6 @@ def audio_features(df: DataFrame) -> DataFrame:
     )
 
 
-def sample_frames(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame sampling: one output row per sampled frame.
-
-    STUB: frames are deterministic byte slices of the source (a real
-    deployment decodes with ffmpeg). The fan-out shape (1 video row ->
-    N frame rows out of mapInPandas) is the real, tested contract.
-    """
-
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                content = bytes(r["content"]) if r["content"] is not None else b""
-                dur = int(r["duration_ms"]) if r["duration_ms"] is not None else 0
-                for i, ms in enumerate(range(0, max(dur, 1), every_ms)):
-                    lo = (i * 16) % max(len(content), 1)
-                    rows.append(
-                        {
-                            "media_id": r["media_id"],
-                            "frame_index": i,
-                            "frame_ms": ms,
-                            "frame": content[lo : lo + 16],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=["media_id", "frame_index", "frame_ms", "frame"])
-
-    return df.filter(F.col("media_type") == "video").mapInPandas(
-        _sample, schema=FRAME_SAMPLE_SCHEMA
-    )
-
-
 def sample_avi_frames(df: DataFrame, every_ms: int = 1000) -> DataFrame:
     """REAL video frame sampling over uncompressed AVI content: decode the
     RIFF container (decode_avi), pick every k-th frame where
@@ -822,14 +767,6 @@ def sample_avi_frames(df: DataFrame, every_ms: int = 1000) -> DataFrame:
     )
 
 
-def with_media_stats(df: DataFrame) -> DataFrame:
-    """JVM-side media stats that need no decode: byte size, format counts —
-    always prefer these (free at scan speed) before any Python decode."""
-    return df.withColumn("n_bytes", F.length("content")).withColumn(
-        "has_content", F.col("content").isNotNull() & (F.length("content") > 0)
-    )
-
-
 #: Output schema of image difference-hash (dHash) extraction.
 IMAGE_DHASH_SCHEMA = (
     "media_id string, b0 long, b1 long, b2 long, b3 long, decode_ok boolean"
@@ -841,7 +778,7 @@ def _dhash_bands(src: "np.ndarray", rows: int = 8, cols: int = 9) -> list[int]:
     rows x cols (src[(i*h)//rows, (j*w)//cols]), one bit per horizontally
     adjacent pair (left < right), packed into rows//2 16-bit band ints —
     shared by the image lane (image_dhash) and the video shot-signature
-    lane (video_frame_dhash); exact integer indexing and comparisons."""
+    lane (video_frame_features); exact integer indexing and comparisons."""
     h, w = src.shape
     yi = (np.arange(rows) * h) // rows
     xi = (np.arange(cols) * w) // cols
@@ -890,53 +827,6 @@ def image_dhash(df: DataFrame, rows: int = 8, cols: int = 9) -> DataFrame:
     )
 
 
-#: Output schema of per-frame video dHash extraction.
-VIDEO_FRAME_DHASH_SCHEMA = (
-    "media_id string, frame_index int, n_frames int, "
-    "b0 long, b1 long, b2 long, b3 long, decode_ok boolean"
-)
-
-
-def video_frame_dhash(df: DataFrame, rows: int = 8, cols: int = 9) -> DataFrame:
-    """Per-frame perceptual dHash over REAL AVI content: decode frames,
-    apply the image lane's difference hash (_dhash_bands — NN resample,
-    horizontal-neighbor bits, four 16-bit band ints) to every frame.
-    Joined against scene-cut shot boundaries downstream, this yields the
-    per-shot signature sequence that video near-dup matching LSH-joins
-    (q_video_neardup) — the standard video-dedup composition of shot
-    segmentation x perceptual frame hashing. Map-only Arrow stage; a
-    zero-frame clip emits the decode_ok=false sentinel so it stays
-    visible in per-video aggregates."""
-
-    def _vdh(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                content = bytes(content) if content is not None else b""
-                try:
-                    _w, _h, _usec, frames = decode_avi(content)
-                except (ValueError, NotImplementedError):
-                    out.append((mid, -1, -1, -1, -1, -1, -1, False))
-                    continue
-                if not frames:
-                    out.append((mid, -1, -1, -1, -1, -1, -1, False))
-                    continue
-                for t, fr in enumerate(frames):
-                    bands = _dhash_bands(np.asarray(fr), rows, cols)
-                    out.append((mid, t, len(frames), *bands, True))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "frame_index", "n_frames",
-                    "b0", "b1", "b2", "b3", "decode_ok",
-                ],
-            )
-
-    return df.filter(F.col("media_type") == "video").mapInPandas(
-        _vdh, schema=VIDEO_FRAME_DHASH_SCHEMA
-    )
-
-
 #: Output schema of combined per-frame video features (delta + dHash).
 VIDEO_FRAME_FEATURES_SCHEMA = (
     "media_id string, frame_index int, n_frames int, width int, height int, "
@@ -952,9 +842,9 @@ def video_frame_features(df: DataFrame, rows: int = 8, cols: int = 9) -> DataFra
     needs both — video near-dup matching cuts shots from deltas and
     fingerprints each shot's first frame — pays bytes-across-Arrow once
     instead of twice, and the keyframe hash needs no join back (the cut
-    row already carries its frame's bands). Values are identical to the
-    frame_deltas / video_frame_dhash pair by construction (shared math);
-    pytest pins it."""
+    row already carries its frame's bands). The deltas equal frame_deltas'
+    and the bands equal the image lane's (shared _dhash_bands); pytest
+    pins both."""
 
     def _vff(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -48,21 +48,6 @@ def write_bucketed(
     if path is not None:
         w = w.option("path", path)
     w.saveAsTable(table)
-
-
-def bucketed_join(
-    spark: SparkSession,
-    left_table: str,
-    right_table: str,
-    on: Sequence[str],
-    how: str = "inner",
-) -> DataFrame:
-    """Join two same-bucketed catalog tables — plans with no shuffle.
-
-    Verify with .explain(): no Exchange above either scan (asserted in
-    tests/test_partitioning.py).
-    """
-    return spark.table(left_table).join(spark.table(right_table), list(on), how)
 
 
 def salted_join(

@@ -1,14 +1,13 @@
 """Embedding similarity search (SURVEY §2B north star).
 
-- Brute-force cosine top-k against ONE query vector: broadcast literal,
-  JVM zip_with dot product — a single scan, no shuffle but the final top-k.
-- ANN via random-hyperplane LSH: sign-bit bucket join — candidate set is
-  bucket-bounded, shuffle O(n * tables), never the O(n^2) cross join.
-- knn_join: top-k neighbors for EVERY query row against a big corpus, the
-  broadcast-capable path for moderate query sets.
-
-All vector math stays in whole-stage codegen (zip_with / aggregate over
-array<double>); no Python in the scan path.
+- Column math (``dot`` / ``l2_norm`` / ``cosine``): JVM zip_with +
+  aggregate folds over array<double>, for one-row-per-pair expressions.
+- ANN via random-hyperplane LSH: ``ann_cosine_scored`` computes the
+  sign-bit bucket flag and the query cosine for every vector in one
+  Arrow GEMM pass.
+- Matrix-shaped work (near-dup pairs within blocks, k-NN and
+  hard-negative joins for a bounded query batch) runs as Arrow-batched
+  BLAS: one GEMM per batch or block, local top-k before the shuffle.
 """
 
 from __future__ import annotations
@@ -34,63 +33,12 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
-def dot_lit(vec: Column, query: list[float]) -> Column:
-    """Dot product against a LITERAL query vector, unrolled to a flat sum
-    of products. Value-identical to ``dot`` (same left-to-right add order)
-    but compiles into whole-stage codegen as scalar bytecode — the HOF
-    fold evaluates interpreted at ~µs/element, which dominates scans that
-    compute dozens of projections per row (LSH plane batteries)."""
-    out: Column = F.lit(0.0)
-    for i, x in enumerate(query):
-        out = out + vec[i] * float(x)
-    return out
-
-
-def dot_self_lit(vec: Column, dim: int) -> Column:
-    """Σ vec[i]² unrolled for codegen; value-identical to dot(vec, vec)."""
-    out: Column = F.lit(0.0)
-    for i in range(dim):
-        out = out + vec[i] * vec[i]
-    return out
-
-
-def cosine_lit(vec: Column, query: list[float]) -> Column:
-    """Cosine against a literal query, fully codegen-able; the query's own
-    norm folds to a Python constant at plan-build time."""
-    qnorm = math.sqrt(sum(x * x for x in query)) or 1.0
-    return dot_lit(vec, query) / (F.sqrt(dot_self_lit(vec, len(query))) * F.lit(qnorm))
-
-
 def l2_norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-def cosine_topk(
-    df: DataFrame,
-    vec_col: str,
-    query: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Exact cosine top-k vs a single query vector.
-
-    The query is a broadcast literal array; the scan computes one fused
-    dot/norm per row and TakeOrderedAndProject keeps k rows per partition —
-    the correct baseline plan at any corpus size.
-    """
-    emb = _as_double(F.col(vec_col))
-    return (
-        df.select(
-            F.col(id_col),
-            F.round(cosine_lit(emb, [float(x) for x in query]), 6).alias("cosine_sim"),
-        )
-        .orderBy(F.desc("cosine_sim"), F.asc(id_col))
-        .limit(k)
-    )
 
 
 def _random_hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -106,10 +54,9 @@ def _random_hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]
 def _plane_battery(dim: int, n_planes: int, n_tables: int, seed: int):
     """The shared LSH battery: all tables' hyperplanes stacked as ONE
     (n_tables*n_planes) x dim numpy matrix plus the per-table bit weights.
-    Both ann_cosine_topk and ann_cosine_scored derive their buckets from
-    THIS function, which is what makes their bit/ulp behavior identical —
-    a plane dot within an ulp of zero flips (or not) the same way on the
-    query side and the corpus side in both operators."""
+    The query side and the corpus side of ann_cosine_scored both derive
+    their buckets from THIS function, so a plane dot within an ulp of
+    zero flips (or not) the same way on both sides."""
     import numpy as np
 
     planes_mat = np.array(
@@ -147,60 +94,6 @@ def _batch_in_query_bucket(vm, planes_mat, weights, qbuckets, n_planes: int, n_t
     return (buckets == qbuckets[None, :]).any(axis=1)
 
 
-def ann_cosine_topk(
-    df: DataFrame,
-    vec_col: str,
-    query: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    n_planes: int = 4,
-    n_tables: int = 12,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate cosine top-k: probe only rows sharing an LSH bucket with
-    the query in >= 1 of ``n_tables`` hash tables, then exact-rank those.
-
-    At 100 TB the bucketed table is precomputed and partitioned by
-    (table, bucket) so a query touches ~n_tables/2^n_planes of the data.
-    """
-    import numpy as np
-    import pandas as pd
-
-    dim = len(query)
-    emb = _as_double(F.col(vec_col))
-
-    # all tables' planes as one (n_tables*n_planes) x dim matrix: the
-    # bucket battery is a single GEMM per Arrow batch. 48 interpreted HOF
-    # dot-folds per row cost ~ms/row; one BLAS multiply costs ~ns/row.
-    # (An unrolled scalar expression was tried and is WORSE: ~6k-term
-    # trees overflow whole-stage codegen into interpreted nested Adds.)
-    planes_mat, weights = _plane_battery(dim, n_planes, n_tables, seed)
-    qarr = np.asarray([float(x) for x in query])
-    # query bits via the SAME numpy path as the corpus bits (the shared
-    # _plane_battery/_signs_to_buckets kernel), so the query's own row
-    # always lands in its own buckets
-    qbuckets = _signs_to_buckets(
-        ((planes_mat @ qarr) >= 0)[None, :], weights, n_planes, n_tables
-    )[0]
-
-    @F.pandas_udf("boolean", F.PandasUDFType.SCALAR)
-    def _in_query_bucket(v):
-        vm = np.array(v.tolist(), dtype=np.float64)  # batch x dim
-        return pd.Series(
-            _batch_in_query_bucket(vm, planes_mat, weights, qbuckets, n_planes, n_tables)
-        )
-
-    return (
-        df.filter(_in_query_bucket(emb))
-        .select(
-            F.col(id_col),
-            F.round(cosine_lit(emb, [float(x) for x in query]), 6).alias("cosine_sim"),
-        )
-        .orderBy(F.desc("cosine_sim"), F.asc(id_col))
-        .limit(k)
-    )
-
-
 def ann_cosine_scored(
     df: DataFrame,
     vec_col: str,
@@ -216,9 +109,7 @@ def ann_cosine_scored(
     battery AND the query cosine come out of the same numpy batch (the
     GEMM already touched every vector), so a caller comparing the
     LSH-filtered top-k against the brute-force top-k materializes this
-    tiny 3-column table once instead of running two full corpus passes.
-    Bit/ulp behavior matches ann_cosine_topk exactly (same plane matrix,
-    same sign rule)."""
+    tiny 3-column table once instead of running two full corpus passes."""
     import numpy as np
     import pandas as pd
 
@@ -378,13 +269,14 @@ def knn_join_gemm(
     """Top-k corpus neighbors for a SMALL query batch, GEMM-shaped.
 
     The query matrix (collected to the driver — valid for the "score a
-    batch of prompts" shape, like ann_cosine_topk's query fetch) is closed
+    batch of prompts" shape, like ann_cosine_scored's query vector) is closed
     over by an Arrow-batched mapInPandas; each corpus partition computes
     normalized C·Qᵀ in one BLAS call and keeps only its LOCAL top-k rows
     per query, so the shuffle into the global top-k window carries
     O(partitions · |Q| · k) rows — never the full 5·n score table. Same
-    result as knn_join (value-identity tested via exceptAll); ~3 HOF folds
-    per pair become one fused BLAS op: 1.4 s -> ~0.3 s at sf0.1.
+    result as the broadcast cross-join + window top-k form the tests keep
+    as its reference (value-identity via exceptAll); ~3 HOF folds per pair
+    become one fused BLAS op: 1.4 s -> ~0.3 s at sf0.1.
     """
     import pandas as pd
 
@@ -545,37 +437,4 @@ def hard_negative_join_gemm(
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rank") <= k)
-    )
-
-
-def knn_join(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    query_id: str = "q_id",
-    query_vec: str = "q_vec",
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    broadcast_queries: bool = True,
-) -> DataFrame:
-    """Top-k corpus neighbors for every query row (exact, broadcast form).
-
-    The query side is broadcast (valid while queries fit in memory — the
-    common "score a batch of prompts against the corpus" shape); each corpus
-    partition ranks locally and a WindowGroupLimit keeps k per query before
-    the final shuffle."""
-    qs = queries.select(F.col(query_id), _as_double(F.col(query_vec)).alias("__q"))
-    if broadcast_queries:
-        qs = F.broadcast(qs)
-    emb = _as_double(F.col(corpus_vec))
-    scored = corpus.select(F.col(corpus_id), emb.alias("__c")).join(qs).select(
-        query_id,
-        corpus_id,
-        F.round(cosine(F.col("__c"), F.col("__q")), 6).alias("cosine_sim"),
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine_sim"), F.asc(corpus_id))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
     )

@@ -128,5 +128,6 @@ def redact_pii(col: Column, token: str = "[PII]") -> Column:
 
 def doc_fingerprint(col: Column) -> Column:
     """Deterministic document fingerprint: md5 of normalized text (exact-dup
-    key; the rolling/shingle variant is minhash_signature in dedup.py)."""
+    key; the shingle-level near-dup variant is the MinHash-LSH path in
+    dedup.py)."""
     return F.md5(normalize_text(col))

@@ -37,15 +37,14 @@ _SHINGLES3 = f"""
 # VERDICT r11 item 4): tokenization stays in the JVM (split over the
 # shared normalize_text, codegen), but the per-doc counting moves to ONE
 # Arrow-batched pandas UDF — C-backed Counter/set over the words array.
-# The JVM HOF twin (corpus.repetition_counts: array_sort + a struct-
-# accumulator fold + a 2-gram transform, all interpreted CodegenFallback
-# expressions) allocated per element on the executor HEAP; that
-# allocation storm was the source of the 16-21 s in-suite blowups the
-# r11 bench's per-query GC papered over. Moving the counting into the
-# Python workers removes the JVM garbage at the source AND measures
-# faster solo (interleaved noop A/B at sf0.1: med 0.83 vs 1.11 s).
-# The JVM twin stays in operators/corpus.py as the value-identity
-# verification twin (tests/test_corpus.py pins both paths equal).
+# The JVM HOF form (array_sort + a struct-accumulator fold + a 2-gram
+# transform, all interpreted CodegenFallback expressions) allocated per
+# element on the executor HEAP; that allocation storm was the source of
+# the 16-21 s in-suite blowups the r11 bench's per-query GC papered over.
+# Moving the counting into the Python workers removes the JVM garbage at
+# the source AND measures faster solo (interleaved noop A/B at sf0.1:
+# med 0.83 vs 1.11 s). The JVM form is kept in tests/test_corpus.py as
+# the reference this lane must match value for value.
 # The return type is a StructType, not a DDL string: parsing DDL needs a
 # live SparkContext, and this decorator runs at import.
 @F.pandas_udf(
@@ -69,7 +68,7 @@ def _repetition_counts_arrow(words):  # pd.Series of word arrays
     tw, dw, top, t2, d2 = [], [], [], [], []
     for w in words:
         if w is None:
-            # NULL text: the JVM twin's size()/aggregate() give NULL, and
+            # NULL text: the JVM reference's size()/aggregate() give NULL, and
             # its guarded 2-gram arrays are empty
             tw.append(None)
             dw.append(None)

@@ -30,8 +30,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
 # InferFiltersFromGenerate turns explode(col) into a `size(col) > 0` filter;
 # when `col` aliases an expensive expression (the shingle HOF), filter
 # pushdown substitutes the definition and sinks it BELOW the parallelizing
@@ -44,6 +42,12 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 _EXCLUDED_RULES = (
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 )
+
+# How long stopping a streaming query may wait for its running micro-batch
+# (Spark's default, 0, waits forever). A drain stopped at its time limit
+# (streaming.ops.run_available_now) must not hand the caller's thread to
+# a hung foreachBatch body until that body returns.
+_STREAM_STOP_TIMEOUT = "5s"
 
 
 # The directory that holds the package, so a Python worker can import
@@ -85,6 +89,7 @@ def get_spark(app_name: str = "pulsar-lunar-spark", cpus: int | None = None) -> 
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.optimizer.excludedRules", _EXCLUDED_RULES)
+        .config("spark.sql.streaming.stopTimeout", _STREAM_STOP_TIMEOUT)
         .config("spark.ui.enabled", "false")
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
@@ -123,6 +128,7 @@ def _configure(spark: SparkSession) -> None:
         spark.conf.set(
             "spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)
         )
+        spark.conf.set("spark.sql.streaming.stopTimeout", _STREAM_STOP_TIMEOUT)
         try:
             if int(spark.conf.get("spark.sql.shuffle.partitions")) > 64:
                 spark.conf.set(

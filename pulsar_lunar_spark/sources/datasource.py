@@ -37,14 +37,9 @@ from pyspark.sql.datasource import (
     InputPartition,
     WriterCommitMessage,
 )
+from pyspark.sql.types import StructType
 
-ENVELOPE_DDL = (
-    "message_id struct<ledger_id: bigint, entry_id: bigint, partition: int, "
-    "batch_index: int>, topic string, key string, value binary, "
-    "properties map<string,string>, event_time timestamp, "
-    "publish_time timestamp, producer_name string, sequence_id bigint, "
-    "ordering_key binary, redelivery_count int, schema_version binary"
-)
+from pulsar_lunar_spark.functions.envelope import ENVELOPE_SCHEMA
 
 _COLORS = ("green", "blue", "red", "yellow")
 _EPOCH = 852076800  # 1997-01-01 00:00:00 UTC — inside the fixture date range
@@ -197,8 +192,8 @@ class PulsarLunarDataSource(DataSource):
     def name(cls) -> str:
         return "pulsar_lunar"
 
-    def schema(self) -> str:
-        return ENVELOPE_DDL
+    def schema(self) -> StructType:
+        return ENVELOPE_SCHEMA
 
     def reader(self, schema) -> DataSourceReader:
         return _BatchReader(_Opts(self.options))

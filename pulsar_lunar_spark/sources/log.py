@@ -66,6 +66,16 @@ def _safe_topic(topic: str) -> str:
     return topic.replace("/", "_").replace(":", "_")
 
 
+def _decode_shape(st: StructType | None) -> list[tuple[str, str]] | None:
+    """A payload schema's decode-compatibility fingerprint: field names and
+    types. Nullability and metadata don't affect from_json decode, and
+    payloads of one topic legitimately differ on them (e.g. one produced
+    from an outer-join DataFrame)."""
+    if st is None:
+        return None
+    return [(f.name, f.dataType.simpleString()) for f in st.fields]
+
+
 class IncompatibleSchema(ValueError):
     """Producing a payload shape that conflicts with the topic's registered
     schema (the broker's IncompatibleSchema error,
@@ -107,22 +117,22 @@ class MessageLog:
         """Register (or validate against) the topic's payload schema.
 
         First produce registers; later produces must match field names and
-        types exactly or raise IncompatibleSchema — the broker-side schema
-        validation the reference delegates to (PulsarApi.proto:688-700).
+        types exactly (``_decode_shape``) or raise IncompatibleSchema — the
+        broker-side schema validation the reference delegates to
+        (PulsarApi.proto:688-700).
         """
-        new = json.loads(payload_df.schema.json())
-        path = self.schema_path(topic)
-        if os.path.exists(path):
-            with open(path) as f:
-                cur = json.load(f)
-            if cur != new:
+        new = payload_df.schema
+        cur = self.get_schema(topic)
+        if cur is not None:
+            if _decode_shape(cur) != _decode_shape(new):
                 raise IncompatibleSchema(
                     f"topic '{topic}': payload schema {new} != registered {cur}"
                 )
             return
+        path = self.schema_path(topic)
         os.makedirs(os.path.dirname(path), exist_ok=True)
         with open(path, "w") as f:
-            json.dump(new, f)
+            json.dump(json.loads(new.json()), f)
 
     def get_schema(self, topic: str) -> StructType | None:
         """Fetch the topic's registered payload schema (GetSchema)."""
@@ -571,20 +581,10 @@ class MessageLog:
             raise FileNotFoundError(f"no topics match pattern {pattern!r}")
         if payload_schema is None:
             payload_schema = self.get_schema(names[0])
-
-            def _shape(st: StructType | None):
-                # decode-compatibility fingerprint: field names + types.
-                # Nullability and metadata don't affect from_json decode,
-                # and registered schemas legitimately differ on them
-                # (e.g. a topic produced from an outer-join DataFrame).
-                if st is None:
-                    return None
-                return [(f.name, f.dataType.simpleString()) for f in st.fields]
-
-            want = _shape(payload_schema)
+            want = _decode_shape(payload_schema)
             for t in names[1:]:
                 other = self.get_schema(t)
-                if _shape(other) != want:
+                if _decode_shape(other) != want:
                     raise IncompatibleSchema(
                         f"pattern {pattern!r}: topic '{t}' registered schema "
                         f"{other} conflicts with '{names[0]}' schema "

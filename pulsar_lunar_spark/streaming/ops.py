@@ -548,8 +548,12 @@ def run_available_now(
     (a ``foreachBatch`` that raises, a refused checkpoint) raises here as
     ``StreamingQueryException``. A drain still running after
     ``_DRAIN_TIMEOUT_S`` seconds is stopped and raises ``TimeoutError``,
-    so a partial drain never reads as a finished one. Callers never
-    await the query themselves.
+    so a partial drain never reads as a finished one. The stop waits at
+    most the session's stop timeout (``session._STREAM_STOP_TIMEOUT``)
+    for a running micro-batch; a batch hung past it (a ``foreachBatch``
+    body that does not return) ends the query when it returns, and the
+    ``TimeoutError`` does not wait for it. Callers never await the query
+    themselves.
 
     ``state_partitions`` overrides ``spark.sql.shuffle.partitions`` for this
     query only: a stateful stream materializes one state-store instance per
@@ -577,6 +581,7 @@ def run_available_now(
     Keep the default for anything whose output is produced by STATE
     EVICTION or TIMEOUT: outer-join null emission, TTL eviction
     observability, event-time-timeout session closure."""
+    from py4j.protocol import Py4JJavaError
     from pyspark.sql import SparkSession
 
     from pulsar_lunar_spark.session import scoped_confs
@@ -611,7 +616,13 @@ def run_available_now(
     with scoped_confs(SparkSession.getActiveSession(), overrides):
         q = writer.start()
         if not q.awaitTermination(_DRAIN_TIMEOUT_S):
-            q.stop()
+            try:
+                q.stop()
+            except Py4JJavaError as e:
+                # the stop timeout elapsed with a micro-batch still running
+                name = e.java_exception.getClass().getName()
+                if name != "java.util.concurrent.TimeoutException":
+                    raise
             raise TimeoutError(
                 f"availableNow drain ({checkpoint}) still running after "
                 f"{_DRAIN_TIMEOUT_S} s; stopped"

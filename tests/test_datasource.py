@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pulsar_lunar_spark.sources.datasource import register
+from pulsar_lunar_spark.streaming.ops import run_available_now
 
 
 @pytest.fixture(autouse=True)
@@ -40,16 +41,13 @@ def test_stream_drains_and_resumes(spark, tmp_path):
         stream = (
             spark.readStream.format("pulsar_lunar").option("rows", rows).load()
         )
-        q = (
+        run_available_now(
             stream.select("sequence_id")
             .writeStream.format("parquet")
             .option("path", out)
-            .outputMode("append")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            ck,
         )
-        q.awaitTermination(120)
         return (
             spark.read.parquet(out)
             .agg(

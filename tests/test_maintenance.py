@@ -77,11 +77,10 @@ def test_merge_upsert_schema_mismatch_rejected(spark, tmp_path):
         merge_upsert(spark, path, bad, key_cols=["k"])
 
 
-def test_snapshot_time_travel_and_vacuum(spark, tmp_path):
+def test_snapshot_time_travel(spark, tmp_path):
     from pulsar_lunar_spark.operators.maintenance import (
         read_snapshot,
         snapshot_versions,
-        vacuum_snapshots,
         write_snapshot,
     )
 
@@ -93,18 +92,8 @@ def test_snapshot_time_travel_and_vacuum(spark, tmp_path):
     # time travel: old versions stay intact after new writes
     assert read_snapshot(spark, path, version=0).count() == 10
     assert read_snapshot(spark, path).count() == 30
-    # vacuum retention
-    assert vacuum_snapshots(path, keep_last=2) == [0]
-    assert snapshot_versions(path) == [1, 2]
-    assert read_snapshot(spark, path, version=2).count() == 30
-    import pytest as _pt
-
-    with _pt.raises(FileNotFoundError):
-        read_snapshot(spark, path, version=0)
-    with _pt.raises(ValueError):
-        vacuum_snapshots(path, keep_last=0)
-    # vacuum never removes the only remaining snapshots below keep_last
-    assert vacuum_snapshots(path, keep_last=5) == []
+    with pytest.raises(FileNotFoundError):
+        read_snapshot(spark, path, version=3)
 
 
 def test_incremental_agg_refresh_matches_full_recompute(spark, tmp_path):
@@ -230,31 +219,3 @@ def test_cdc_apply_carries_unorderable_payload(spark, tmp_path):
     cdc_apply(spark, target, b2, ["k"], ["ts"], "op")
     got = {r["k"]: dict(r["props"]) for r in cdc_live(spark, target).collect()}
     assert got == {1: {"a": "9", "z": "3"}, 2: {"b": "2"}}
-
-
-def test_cdc_vacuum_tombstones_respects_horizon(spark, tmp_path):
-    """Tombstones at or below the redelivery horizon are vacuumed; newer
-    ones survive and keep guarding against stale resurrections."""
-    from pulsar_lunar_spark.operators.maintenance import (
-        cdc_apply,
-        cdc_live,
-        cdc_vacuum_tombstones,
-    )
-
-    target = str(tmp_path / "vac_target")
-    b = spark.createDataFrame(
-        [(1, 10, 100, "u"), (2, 0, 100, "d"), (3, 0, 300, "d"), (4, 40, 300, "u")],
-        "k long, v long, ts long, op string",
-    )
-    cdc_apply(spark, target, b, ["k"], ["ts"], "op")
-    stored = {r["k"]: r["op"] for r in spark.read.parquet(target).collect()}
-    assert stored == {1: "u", 2: "d", 3: "d", 4: "u"}
-
-    cdc_vacuum_tombstones(spark, target, "ts", horizon=200)
-    stored = {r["k"]: r["op"] for r in spark.read.parquet(target).collect()}
-    assert stored == {1: "u", 3: "d", 4: "u"}  # old tombstone k=2 gone
-
-    # the surviving newer tombstone still blocks a stale upsert
-    stale = spark.createDataFrame([(3, 99, 250, "u")], "k long, v long, ts long, op string")
-    cdc_apply(spark, target, stale, ["k"], ["ts"], "op")
-    assert 3 not in {r["k"] for r in cdc_live(spark, target).collect()}

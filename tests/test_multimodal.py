@@ -6,8 +6,6 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from pyspark.sql import functions as F
-
 from pulsar_lunar_spark.operators.multimodal import (
     MEDIA_SCHEMA,
     audio_features,
@@ -16,8 +14,6 @@ from pulsar_lunar_spark.operators.multimodal import (
     encode_bmp,
     encode_wav,
     image_features,
-    sample_frames,
-    with_media_stats,
 )
 
 
@@ -88,23 +84,6 @@ def test_audio_features_real_decode(spark):
     assert r1["decode_ok"] and r1["duration_ms"] == 50
     assert r1["rms"] == pytest.approx(50.0)
     assert rows["aud2"]["decode_ok"] is False  # zeros: no RIFF magic
-
-
-def test_frame_sampling_fanout(spark):
-    out = sample_frames(_media_df(spark), every_ms=1000).collect()
-    # 3500ms at 1 frame/s => frames at 0,1000,2000,3000
-    assert [r["frame_index"] for r in out] == [0, 1, 2, 3]
-    assert all(isinstance(r["frame"], (bytes, bytearray)) for r in out)
-
-
-def test_media_stats_jvm_side(spark):
-    out = with_media_stats(_media_df(spark))
-    assert out.filter(~F.col("has_content")).count() == 0
-    got = {r["media_id"]: r["n_bytes"] for r in out.collect()}
-    assert got["img2"] == 104
-    # no Python UDF in this plan: stats run at scan speed
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
 def test_bmp_pixel_roundtrip_and_nn_resize():
@@ -311,15 +290,16 @@ def test_sample_avi_frames_fanout(spark):
 
 
 def test_video_frame_dhash_brute_force(spark):
-    """Per-frame dHash equals the numpy brute-force replay (resample ->
-    horizontal bits -> band packing) for every frame; a zero-length/
-    corrupt clip emits exactly one decode_ok=false sentinel row."""
+    """video_frame_features' per-frame dHash equals the numpy brute-force
+    replay (resample -> horizontal bits -> band packing) for every frame;
+    a zero-length/corrupt clip emits exactly one decode_ok=false sentinel
+    row."""
     import pandas as pd
 
     from pulsar_lunar_spark.operators.multimodal import (
         MEDIA_SCHEMA,
         encode_avi,
-        video_frame_dhash,
+        video_frame_features,
     )
 
     rng = np.random.RandomState(7)
@@ -335,7 +315,7 @@ def test_video_frame_dhash_brute_force(spark):
     )
     got = {
         (r["media_id"], r["frame_index"]): r
-        for r in video_frame_dhash(df).collect()
+        for r in video_frame_features(df).collect()
     }
 
     def brute(src):
@@ -381,16 +361,15 @@ def test_video_neardup_planted_variants_pair(spark):
 
 
 def test_video_frame_features_matches_single_purpose_ops(spark):
-    """The fused per-frame feature stage (one decode pass) is value-
-    identical to the frame_deltas + video_frame_dhash pair it replaces
-    in q_video_neardup."""
+    """The fused per-frame feature stage (one decode pass) carries
+    frame_deltas' exact deltas; its dHash bands are pinned by
+    test_video_frame_dhash_brute_force."""
     import pandas as pd
 
     from pulsar_lunar_spark.operators.multimodal import (
         MEDIA_SCHEMA,
         encode_avi,
         frame_deltas,
-        video_frame_dhash,
         video_frame_features,
     )
 
@@ -416,14 +395,8 @@ def test_video_frame_features_matches_single_purpose_ops(spark):
             f = fused[(r["media_id"], r["frame_index"])]
             assert f["delta_sum"] == r["delta_sum"]
             assert (f["width"], f["height"]) == (r["width"], r["height"])
-    for r in video_frame_dhash(df).collect():
-        f = fused[(r["media_id"], r["frame_index"])]
-        assert f["decode_ok"] == r["decode_ok"]
-        if r["decode_ok"]:
-            assert [f[c] for c in ("b0", "b1", "b2", "b3")] == [
-                r[c] for c in ("b0", "b1", "b2", "b3")
-            ]
-            assert f["n_frames"] == r["n_frames"]
+    for i in range(3):
+        assert [fused[(f"v{i}", t)]["n_frames"] for t in range(2 + i)] == [2 + i] * (2 + i)
     # frame 0 carries the no-predecessor sentinel
     assert fused[("v0", 0)]["delta_sum"] == -1
     assert fused[("bad", -1)]["decode_ok"] is False

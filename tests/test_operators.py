@@ -14,7 +14,7 @@ from pulsar_lunar_spark.operators.dedup import (
     simhash_near_pairs,
     shingles,
 )
-from pulsar_lunar_spark.operators.similarity import ann_cosine_topk, cosine_topk
+from pulsar_lunar_spark.operators.similarity import ann_cosine_scored
 from pulsar_lunar_spark.operators.text import detect_lang, token_count
 from pulsar_lunar_spark.operators.topk import top_k_per_group
 
@@ -131,42 +131,72 @@ def test_shingles_short_text(spark):
 
 
 def test_cosine_topk_self_is_best(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()["embedding"]]
-    top = cosine_topk(emb, "embedding", q, k=5).collect()
+    from pulsar_lunar_spark.queries.llm import q_similarity_topk
+
+    top = q_similarity_topk(spark, sf_dir).collect()
     assert top[0]["vec_id"] == 0
     assert abs(top[0]["cosine_sim"] - 1.0) < 1e-6
     sims = [r["cosine_sim"] for r in top]
     assert sims == sorted(sims, reverse=True)
 
 
+def _top10(rows):
+    ranked = sorted(rows, key=lambda r: (-r["cosine_sim"], r["vec_id"]))
+    return {r["vec_id"] for r in ranked[:10]}
+
+
 def test_ann_recall_vs_exact(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()["embedding"]]
-    exact = {r["vec_id"] for r in cosine_topk(emb, "embedding", q, k=10).collect()}
-    approx = {r["vec_id"] for r in ann_cosine_topk(emb, "embedding", q, k=10).collect()}
+    scored = ann_cosine_scored(emb, "embedding", q).collect()
+    exact = _top10(scored)
+    approx = _top10([r for r in scored if r["in_bucket"]])
     # LSH recall on the true top-10 should be decent at these parameters
     assert len(exact & approx) >= 5
 
 
 def test_ann_scored_matches_topk(spark, sf_dir):
-    """The shared single-pass scan (bucket flag + cosine) must agree with
-    the filter-then-rank operator: same candidate set, same rounded
-    cosines, so the two forms are interchangeable in recall evaluation."""
-    from pulsar_lunar_spark.operators.similarity import ann_cosine_scored
+    """The single-pass scan (bucket flag + cosine) against a numpy brute
+    force: every rounded cosine, and the bucket flag both as
+    _batch_in_query_bucket computes it and as its definition states it
+    (all of one table's plane signs agree with the query's)."""
+    import numpy as np
 
+    from pulsar_lunar_spark.operators.similarity import (
+        _batch_in_query_bucket,
+        _plane_battery,
+        _signs_to_buckets,
+    )
+
+    n_planes, n_tables = 4, 12
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()["embedding"]]
-    scored = ann_cosine_scored(emb, "embedding", q).collect()
-    flagged = {r["vec_id"] for r in scored if r["in_bucket"]}
-    via_topk = {
-        r["vec_id"]
-        for r in ann_cosine_topk(emb, "embedding", q, k=len(scored)).collect()
+    rows = emb.select("vec_id", "embedding").collect()
+    ids = np.asarray([r["vec_id"] for r in rows])
+    vm = np.asarray([r["embedding"] for r in rows], dtype=np.float64)
+    qv = vm[ids == 0][0]
+    scored = {
+        r["vec_id"]: r
+        for r in ann_cosine_scored(emb, "embedding", [float(x) for x in qv]).collect()
     }
-    assert flagged == via_topk
-    by_id = {r["vec_id"]: r["cosine_sim"] for r in scored}
-    for r in cosine_topk(emb, "embedding", q, k=10).collect():
-        assert abs(by_id[r["vec_id"]] - r["cosine_sim"]) <= 1e-6
+    assert set(scored) == set(ids.tolist())
+
+    cos = (vm @ qv) / (np.sqrt((vm * vm).sum(axis=1)) * np.sqrt(qv @ qv))
+    for i, c in zip(ids, cos):
+        assert abs(scored[i]["cosine_sim"] - c) <= 1e-6
+
+    planes, weights = _plane_battery(len(qv), n_planes, n_tables, 42)
+    qbuckets = _signs_to_buckets(
+        ((planes @ qv) >= 0)[None, :], weights, n_planes, n_tables
+    )[0]
+    keep = _batch_in_query_bucket(vm, planes, weights, qbuckets, n_planes, n_tables)
+    row_signs = (vm @ planes.T >= 0).reshape(len(ids), n_tables, n_planes)
+    q_signs = (planes @ qv >= 0).reshape(n_tables, n_planes)
+    by_definition = (row_signs == q_signs[None]).all(axis=2).any(axis=1)
+    assert keep.tolist() == by_definition.tolist()
+    assert {i for i, k in zip(ids, keep) if k} == {
+        i for i, r in scored.items() if r["in_bucket"]
+    }
+    assert scored[0]["in_bucket"]
 
 
 def test_detect_lang(spark):
@@ -189,6 +219,33 @@ def test_token_count(spark):
     assert n == 8
 
 
+def _knn_join_jvm(queries, corpus, k):
+    """Reference for knn_join_gemm: top-k corpus neighbors for every query
+    row as a broadcast cross join, the JVM cosine fold and a window
+    top-k."""
+    from pyspark.sql import Window
+    from pulsar_lunar_spark.operators import similarity as S
+
+    qs = F.broadcast(
+        queries.select(
+            "q_id", F.transform("q_vec", lambda x: x.cast("double")).alias("__q")
+        )
+    )
+    scored = corpus.select(
+        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("__c")
+    ).join(qs).select(
+        "q_id",
+        "vec_id",
+        F.round(S.cosine(F.col("__c"), F.col("__q")), 6).alias("cosine_sim"),
+    )
+    w = Window.partitionBy("q_id").orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .drop("rn")
+    )
+
+
 def test_knn_join_gemm_matches_jvm_twin(spark, sf_dir):
     """The BLAS knn path must be value-identical (at the rounded 6dp the
     query emits) to the pure-JVM fold — same guarantee blocked_cosine_pairs
@@ -202,7 +259,7 @@ def test_knn_join_gemm_matches_jvm_twin(spark, sf_dir):
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
     cols = ["q_id", "vec_id", "cosine_sim"]
-    jvm = S.knn_join(queries, emb, k=4).select(*cols)
+    jvm = _knn_join_jvm(queries, emb, k=4).select(*cols)
     gemm = S.knn_join_gemm(queries, emb, k=4).select(*cols)
     assert jvm.exceptAll(gemm).count() == 0
     assert gemm.exceptAll(jvm).count() == 0

@@ -6,11 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from pulsar_lunar_spark.operators.partitioning import (
-    bucketed_join,
-    salted_join,
-    write_bucketed,
-)
+from pulsar_lunar_spark.operators.partitioning import salted_join, write_bucketed
 from pulsar_lunar_spark.plans.inspect import plan_text
 from pulsar_lunar_spark.session import load_table
 
@@ -39,7 +35,7 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, bucketed_tables):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = bucketed_join(spark, lt, rt, ["o_orderkey"])
+        joined = spark.table(lt).join(spark.table(rt), ["o_orderkey"])
         txt = plan_text(joined)
         assert "Exchange" not in txt, txt
         # and it is still a correct join

@@ -279,9 +279,8 @@ _edge_lists = st.lists(
 @settings(max_examples=10, deadline=None)
 @given(_edge_lists)
 def test_triangle_forms_match_bruteforce_property(spark, edges):
-    """For ANY undirected graph: both the wedge-join and edge-iterator
-    triangle counts equal brute force, and orientation emits exactly one
-    row per edge."""
+    """For ANY undirected graph: the edge-iterator triangle count equals
+    brute force, and orientation emits exactly one row per edge."""
     from pulsar_lunar_spark.operators import graph as G
 
     nbrs: dict[int, set[int]] = {}
@@ -302,9 +301,7 @@ def test_triangle_forms_match_bruteforce_property(spark, edges):
     rows = oriented.collect()
     assert len(rows) == len(edges)
     assert {(min(r.a, r.b), max(r.a, r.b)) for r in rows} == set(edges)
-    got_wedge = G.triangle_count_oriented(oriented).collect()[0].n_triangles
     it = G.triangle_count_adjacency(G.oriented_adjacency(oriented)).collect()[0]
-    assert got_wedge == want
     assert it.n_triangles == want
     assert it.n_edges == len(edges)
 

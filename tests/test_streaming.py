@@ -53,11 +53,10 @@ def test_produce_subscribe_roundtrip(spark, log, tmp_path):
     agg = stream.select(F.col("payload.value").alias("v")).agg(
         F.count(F.lit(1)).alias("n"), F.round(F.sum("v"), 4).alias("total")
     )
-    q = run_available_now(
+    run_available_now(
         agg.writeStream.format("memory").queryName("rt").outputMode("complete"),
         log.subscription_checkpoint("events", "rt"),
     )
-    q.awaitTermination(120)
     got = spark.sql("select * from rt").collect()[0]
 
     want = log.read("events").count()
@@ -109,16 +108,24 @@ def test_run_available_now_stops_and_raises_on_timeout(
     spark, log, tmp_path, monkeypatch
 ):
     """A drain still running at the drain time limit is stopped, and
-    run_available_now raises instead of returning a partial drain."""
+    run_available_now raises instead of returning a partial drain. The
+    stop is bounded by the session's stop timeout: the call returns while
+    a hung batch is still running, and the stopped query ends when that
+    batch returns."""
     import time
 
     from pulsar_lunar_spark.streaming import ops
 
     monkeypatch.setattr(ops, "_DRAIN_TIMEOUT_S", 0.5)
+    hang_s = 16
 
     def slow(bdf, batch_id):
-        time.sleep(3)
+        time.sleep(hang_s)
 
+    def running():
+        return [q for q in spark.streams.active if q.name == "slow_drain"]
+
+    t0 = time.monotonic()
     with pytest.raises(TimeoutError):
         run_available_now(
             log.subscribe("events")
@@ -126,7 +133,11 @@ def test_run_available_now_stops_and_raises_on_timeout(
             .foreachBatch(slow),
             str(tmp_path / "ck"),
         )
-    assert not [q for q in spark.streams.active if q.name == "slow_drain"]
+    assert time.monotonic() - t0 < hang_s - 5
+    deadline = t0 + hang_s + 60
+    while running() and time.monotonic() < deadline:
+        time.sleep(0.5)
+    assert not running()
 
 
 def test_subscription_cursor_resumes(spark, log, sf_dir, tmp_path):
@@ -137,10 +148,9 @@ def test_subscription_cursor_resumes(spark, log, sf_dir, tmp_path):
     stream = log.subscribe("events", payload_schema=PAYLOAD)
     flat = stream.select(F.col("payload.event_id").alias("event_id"))
 
-    q = run_available_now(
+    run_available_now(
         flat.writeStream.format("parquet").option("path", out_dir), ckpt
     )
-    q.awaitTermination(120)
     n1 = spark.read.parquet(out_dir).count()
     assert n1 == 1000
 
@@ -160,10 +170,9 @@ def test_subscription_cursor_resumes(spark, log, sf_dir, tmp_path):
         sequence_id="event_id",
         publish_time="ts",
     )
-    q2 = run_available_now(
+    run_available_now(
         flat.writeStream.format("parquet").option("path", out_dir), ckpt
     )
-    q2.awaitTermination(120)
     df = spark.read.parquet(out_dir)
     assert df.count() == 1500
     assert df.select("event_id").distinct().count() == 1500  # no reprocessing
@@ -180,8 +189,7 @@ def test_unsubscribe_resets_cursor_and_ack_ledger(spark, log, tmp_path):
     flat = log.subscribe("events", payload_schema=PAYLOAD).select(
         F.col("payload.event_id").alias("event_id")
     )
-    q = run_available_now(flat.writeStream.format("parquet").option("path", out1), ckpt)
-    q.awaitTermination(120)
+    run_available_now(flat.writeStream.format("parquet").option("path", out1), ckpt)
     assert spark.read.parquet(out1).count() == 1000
 
     # individually ack half the backlog on the same subscription
@@ -198,8 +206,7 @@ def test_unsubscribe_resets_cursor_and_ack_ledger(spark, log, tmp_path):
     # cursor gone: a re-subscribe under the SAME name drains from
     # initialPosition (all 1000), not from the old cursor (zero)
     out2 = str(tmp_path / "out2")
-    q2 = run_available_now(flat.writeStream.format("parquet").option("path", out2), ckpt)
-    q2.awaitTermination(120)
+    run_available_now(flat.writeStream.format("parquet").option("path", out2), ckpt)
     assert spark.read.parquet(out2).count() == 1000
     # topic data untouched
     assert log.read("events").count() == 1000
@@ -214,11 +221,10 @@ def test_streaming_tumbling_matches_batch(spark, log):
         watermark="10 minutes",
         value_col="v",
     )
-    q = run_available_now(
+    run_available_now(
         windowed.writeStream.format("memory").queryName("tw").outputMode("append"),
         log.subscription_checkpoint("events", "tw"),
     )
-    q.awaitTermination(120)
     got = {
         (r["win_start"], r["n"]) for r in spark.sql("select * from tw").collect()
     }
@@ -253,11 +259,10 @@ def test_streaming_dedup_drops_duplicates(spark, log, tmp_path):
         "ts",
         watermark="365 days",
     )
-    q = run_available_now(
+    run_available_now(
         deduped.writeStream.format("memory").queryName("dd").outputMode("append"),
         log.subscription_checkpoint("events", "dd"),
     )
-    q.awaitTermination(120)
     got = spark.sql("select count(*) n, count(distinct event_id) d from dd").collect()[0]
     assert got["n"] == 1000  # duplicates removed
     assert got["d"] == 1000
@@ -269,11 +274,10 @@ def test_session_window_stream_matches_batch(spark, log):
         F.col("key").alias("user"), F.col("event_time").alias("ts")
     )
     sess = session_aggregate(src, "ts", ["user"], gap="30 minutes", watermark="1 minute")
-    q = run_available_now(
+    run_available_now(
         sess.writeStream.format("memory").queryName("sw").outputMode("append"),
         log.subscription_checkpoint("events", "sw"),
     )
-    q.awaitTermination(180)
     got = spark.sql("select user, session_start, n_events from sw").collect()
 
     batch = (
@@ -302,11 +306,10 @@ def test_dlq_routing(spark, log, tmp_path):
         dlq_writer=lambda df: df.write.mode("append").parquet(dlq_dir),
         max_redeliver=3,
     )
-    q = run_available_now(
+    run_available_now(
         stream.writeStream.foreachBatch(fn),
         log.subscription_checkpoint("events", "dlq"),
     )
-    q.awaitTermination(120)
 
     good = spark.read.parquet(good_dir)
     dlq = spark.read.parquet(dlq_dir)
@@ -340,11 +343,10 @@ def test_stream_static_join_enriches(spark, log, sf_dir):
         F.col("key").cast("long").alias("key_id"), "sequence_id"
     )
     joined = stream_static_join(stream, users, "key_id")
-    q = run_available_now(
+    run_available_now(
         joined.writeStream.format("memory").queryName("ssj").outputMode("append"),
         log.subscription_checkpoint("events", "ssj"),
     )
-    q.awaitTermination(120)
     got = spark.sql("select count(*) n, count(distinct key_id) k from ssj").head()
     assert got["n"] == 1000
     assert got["k"] == users.count()
@@ -386,11 +388,10 @@ def test_stream_stream_join_time_bounded(spark, log, tmp_path):
     joined = stream_stream_join(
         left, right, "lts", "rts", ["uid"], watermark="10 years", within="1 hour"
     )
-    q = run_available_now(
+    run_available_now(
         joined.writeStream.format("memory").queryName("s2j").outputMode("append"),
         log.subscription_checkpoint("events", "s2j"),
     )
-    q.awaitTermination(180)
     got = spark.sql("select count(*) n from s2j").head()["n"]
     assert got == want
 
@@ -404,11 +405,10 @@ def test_stateful_running_count(spark, log, tmp_path):
         F.col("key").cast("long").alias("user_id")
     )
     counted = stateful_running_count(stream, "user_id")
-    q = run_available_now(
+    run_available_now(
         counted.writeStream.format("memory").queryName("src").outputMode("update"),
         log.subscription_checkpoint("events", "src"),
     )
-    q.awaitTermination(180)
     # update mode: take the LAST emitted count per key (max = cumulative)
     got = {
         r["key"]: r["mx"]
@@ -515,12 +515,11 @@ def test_schema_registry_get_and_reject(spark, sf_dir, tmp_path):
     # auto-decode via registry
     stream = ml.subscribe("s")
     assert "payload" in stream.columns
-    q = run_available_now(
+    run_available_now(
         stream.select("payload.event_id", "payload.value")
         .writeStream.format("memory").queryName("sreg").outputMode("append"),
         ml.subscription_checkpoint("s", "sreg"),
     )
-    q.awaitTermination(120)
     assert spark.sql("select count(*) n from sreg").head()["n"] == 100
 
     with _pt.raises(IncompatibleSchema):
@@ -567,11 +566,10 @@ def test_transform_with_state_high_watermark(spark, log, tmp_path):
             F.col("key").cast("long").alias("user_id"), "sequence_id"
         )
         hw = stateful_high_watermark(stream, "user_id", "sequence_id")
-        q = run_available_now(
+        run_available_now(
             hw.writeStream.format("memory").queryName("hwm").outputMode("update"),
             log.subscription_checkpoint("events", "hwm"),
         )
-        q.awaitTermination(180)
         got = {
             r["key"]: r["mx"]
             for r in spark.sql("select key, max(high_watermark) mx from hwm group by key").collect()
@@ -681,7 +679,6 @@ def test_observe_stats_streaming(spark, log):
         stream.writeStream.format("memory").queryName("obs_sink").outputMode("append"),
         log.subscription_checkpoint("events", "obs"),
     )
-    q.awaitTermination(180)
     q.processAllAvailable()
     got = last_observed(q, "consumer_stats")
     q.stop()
@@ -710,11 +707,10 @@ def test_streaming_matview_refresh_equals_batch(spark, log, tmp_path):
         )
 
     stream = log.subscribe("events").select("key", "sequence_id")
-    q = run_available_now(
+    run_available_now(
         stream.writeStream.foreachBatch(refresh),
         str(tmp_path / "ck"),
     )
-    q.awaitTermination(300)
     assert _os.path.isdir(agg_path)
     got = {r.key: r.n for r in spark.read.parquet(agg_path).collect()}
     want = {
@@ -843,7 +839,7 @@ def test_subscribe_pattern_unions_matching_topics(spark, sf_dir, tmp_path):
     run_available_now(
         stream.writeStream.format("parquet").option("path", out).outputMode("append"),
         str(tmp_path / "pattern_ckpt"),
-    ).awaitTermination(300)
+    )
     got = {
         r["topic"]: r["n"]
         for r in spark.read.parquet(out).groupBy("topic").count().withColumnRenamed("count", "n").collect()
@@ -878,7 +874,7 @@ def test_subscribe_pattern_expands_at_subscribe_time(spark, sf_dir, tmp_path):
     run_available_now(
         stream1.writeStream.format("parquet").option("path", out).outputMode("append"),
         ckpt,
-    ).awaitTermination(300)
+    )
     n1 = spark.read.parquet(out).count()
     assert n1 == 50
 
@@ -893,14 +889,14 @@ def test_subscribe_pattern_expands_at_subscribe_time(spark, sf_dir, tmp_path):
             stream2.writeStream.format("parquet")
             .option("path", out).outputMode("append"),
             ckpt,
-        ).awaitTermination(300)
+        )
     # a NEW subscription (fresh checkpoint + sink) drains the grown set
     out2 = str(tmp_path / "pt_out2")
     run_available_now(
         ml.subscribe_pattern(r"^pt\.").select("topic", "sequence_id")
         .writeStream.format("parquet").option("path", out2).outputMode("append"),
         str(tmp_path / "pt_ckpt2"),
-    ).awaitTermination(300)
+    )
     got = spark.read.parquet(out2)
     by_topic = {r["topic"]: r["count"] for r in got.groupBy("topic").count().collect()}
     assert by_topic == {"pt.a": 50, "pt.b": 50}
@@ -1019,6 +1015,25 @@ def test_individual_ack_blocks_span_partitions(spark, sf_dir, tmp_path):
     assert "LeftAnti" in plan and "Aggregate" not in plan, plan
     got = sorted(r["sequence_id"] for r in pending.collect())
     assert got == [i for i in all_ids if i % 7 == 0]
+
+
+def test_register_schema_ignores_nullability_not_types(spark, tmp_path):
+    """produce and subscribe_pattern share one compatibility rule: a
+    payload that differs from the registered schema only in nullability
+    registers cleanly; a type change still raises IncompatibleSchema."""
+    from pulsar_lunar_spark.sources.log import IncompatibleSchema
+
+    def payload(v_type, v_nullable):
+        schema = StructType(
+            [StructField("k", LongType()), StructField("v", v_type, v_nullable)]
+        )
+        return spark.createDataFrame([], schema)
+
+    ml = MessageLog(spark, str(tmp_path / "nlog"))
+    ml.register_schema("n", payload(DoubleType(), True))
+    ml.register_schema("n", payload(DoubleType(), False))
+    with pytest.raises(IncompatibleSchema):
+        ml.register_schema("n", payload(StringType(), True))
 
 
 def test_subscribe_pattern_schema_conflict_raises(spark, sf_dir, tmp_path):
