@@ -202,9 +202,7 @@ def _probe_scale_minhash(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     base = d.repartition(par).select(
         "doc_id",
-        F.transform(
-            D.shingles(F.col("text"), 3), lambda t: D._base_hash(t, "md5")
-        ).alias("base"),
+        F.transform(D.shingles(F.col("text"), 3), D._base_hash).alias("base"),
     )
     rep = base.select(
         "base",

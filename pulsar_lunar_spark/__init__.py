@@ -13,8 +13,8 @@ replay — see ``/root/reference/src/entity/producer.rs:19-54`` and
                   search, text analysis — all DataFrame-level, scale-aware.
 - ``functions`` — envelope serde (payload <-> typed columns), expression
                   helpers (built-in pyspark.sql.functions only, JVM-side).
-- ``streaming`` — watermarked windows, streaming dedup, DLQ/redelivery,
-                  delayed delivery, Key_Shared-style per-key ordering.
+- ``streaming`` — the bounded drain, DLQ/redelivery, exactly-once sinks,
+                  sticky Key_Shared ranges, custom stateful operators.
 - ``queries``   — the declared query registry verified against the DuckDB
                   oracle (the t2 correctness contract).
 - ``plans``     — plan-inspection helpers (pushdown/broadcast assertions).

@@ -6,11 +6,16 @@ at 100 TB the shuffle carries (hash, id) pairs only, never the text.
 
 MinHash-LSH near-dedup: shingle -> n minhashes -> b bands -> bucket join.
 Shuffle is O(n_docs * bands), never O(n^2); within-bucket verification is
-exact Jaccard on shingle sets. All hashing is xxhash64 + affine rehash
-(JVM built-ins, whole-stage codegen) — no Python UDF anywhere.
+exact Jaccard on shingle sets.
 
-SimHash: per-token 64-bit hash, bitwise weighted vote -> 64-bit signature;
+SimHash: per-token hash, bitwise weighted vote -> 60-bit signature;
 near-dups = signatures within Hamming distance d (banded lookup).
+
+Every base hash is the md5 prefix ``corpus.md5_int(s, 15)`` (the first
+15 hex digits of md5, a bigint in [0, 2^60)), which a DuckDB/ANSI oracle
+replicates value-exactly (see the q_dedup_minhash and q_dedup_simhash
+oracles). Signatures are computed in Arrow-batched numpy UDFs over
+JVM-staged hash arrays.
 """
 
 from __future__ import annotations
@@ -71,17 +76,11 @@ def shingles(col: Column, k: int = 3) -> Column:
     return shingles_from_words(F.split(normalize_text(col), " "), k)
 
 
-def _base_hash(s: Column, hasher: str) -> Column:
-    """Per-shingle base hash in [0, 2^31-1): xxhash64 (JVM intrinsic,
-    default) or the md5-prefix hash every SQL engine can replicate."""
-    if hasher == "xxhash64":
-        return F.pmod(F.xxhash64(s), F.lit(_MERSENNE_31))
-    if hasher == "md5":
-        return F.pmod(
-            F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
-            F.lit(_MERSENNE_31),
-        )
-    raise ValueError(f"unknown hasher: {hasher}")
+def _base_hash(s: Column) -> Column:
+    """Per-shingle MinHash base hash in [0, 2^31-1): the md5 prefix mod p."""
+    from pulsar_lunar_spark.operators.corpus import md5_int
+
+    return F.pmod(md5_int(s, 15), F.lit(_MERSENNE_31))
 
 
 def _hash_coefficients(n_hashes: int, seed: int) -> list[tuple[int, int]]:
@@ -93,55 +92,41 @@ def _hash_coefficients(n_hashes: int, seed: int) -> list[tuple[int, int]]:
 
 
 # Polynomial band-bucket fold constant (< 2^31 so (acc*K + s) stays < 2^62
-# before each mod — exact in int64 on both the JVM and numpy paths).
+# before each mod — exact in int64 in numpy and in the SQL oracle twins).
 _BAND_K = 1_000_003
 
 
-def _minhash_sig_udf(n_hashes: int, seed: int, bands: int | None = None):
-    """Vectorized MinHash over base-hash arrays: one Arrow batch → one
-    chunked (a·h + b) mod p matrix + segmented min (np.minimum.reduceat).
+def _minhash_sig_udf(n_hashes: int, seed: int, bands: int):
+    """Vectorized banded MinHash over base-hash arrays: one Arrow batch →
+    one chunked (a·h + b) mod p matrix + segmented min (np.minimum.reduceat),
+    folded into ``bands`` polynomial bucket ids over r=n_hashes//bands
+    signature values — the LSH pipeline never materializes the full
+    signature.
 
-    Identical values to the JVM expression path (same coefficients, same
-    int64 math — products stay < 2^63), ~50× faster: interpreted HOF
-    lambdas cost ~µs/element; numpy does the whole batch in C.
-
-    With ``bands`` set, returns the banded bucket ids directly (array of
-    ``bands`` polynomial folds over r=n_hashes//bands signature values) —
-    the LSH pipeline never materializes the full signature.
+    int64 math throughout (products stay < 2^63); interpreted Spark HOF
+    lambdas would cost ~µs/element, numpy does the whole batch in C.
     """
     import numpy as np
 
     coef = _hash_coefficients(n_hashes, seed)
     a_all = np.array([a for a, _ in coef], dtype=np.int64)
     b_all = np.array([b for _, b in coef], dtype=np.int64)
+    r = n_hashes // bands
+    cols = [[b * r + j for b in range(bands)] for j in range(r)]
 
-    def _signatures(base: pd.Series) -> "np.ndarray":
+    @F.pandas_udf("array<long>")
+    def bucketed(base: pd.Series) -> pd.Series:
         lens = base.map(len).to_numpy()
         starts = np.zeros(len(lens), dtype=np.int64)
         np.cumsum(lens[:-1], out=starts[1:])
         flat = np.concatenate([np.asarray(v, dtype=np.int64) for v in base])
-        out = np.empty((n_hashes, len(lens)), dtype=np.int64)
+        sigs = np.empty((n_hashes, len(lens)), dtype=np.int64)
         for c0 in range(0, n_hashes, 8):  # chunk: bounds peak memory
             c1 = min(c0 + 8, n_hashes)
             vals = (a_all[c0:c1, None] * flat[None, :] + b_all[c0:c1, None]) % _MERSENNE_31
-            out[c0:c1] = np.minimum.reduceat(vals, starts, axis=1)
-        return out.T  # (n_rows, n_hashes)
-
-    if bands is None:
-
-        @F.pandas_udf("array<long>")
-        def sig(base: pd.Series) -> pd.Series:
-            return pd.Series(list(_signatures(base)))
-
-        return sig
-
-    r = n_hashes // bands
-
-    @F.pandas_udf("array<long>")
-    def bucketed(base: pd.Series) -> pd.Series:
-        sigs = _signatures(base)
+            sigs[c0:c1] = np.minimum.reduceat(vals, starts, axis=1)
+        sigs = sigs.T  # (n_rows, n_hashes)
         acc = np.zeros((len(sigs), bands), dtype=np.int64)
-        cols = [[b * r + j for b in range(bands)] for j in range(r)]
         for j in range(r):
             acc = (acc * _BAND_K + sigs[:, cols[j]]) % _MERSENNE_31
         return pd.Series(list(acc))
@@ -304,58 +289,15 @@ def containment_pairs_from_postings(posts: DataFrame, df_cap: int = 50) -> DataF
     )
 
 
-def _banded_buckets(
-    sh: DataFrame,
-    n_hashes: int,
-    bands: int,
-    seed: int,
-    vectorized: bool,
-    hasher: str,
-) -> DataFrame:
-    """(__id, band, bucket) LSH table from a (__id, __sh) shingle table.
-
-    Stages shingle base hashes as a materialized column: Spark does NOT
-    eliminate common subexpressions across the n_hashes signature elements,
-    so inlining would recompute normalize+split+shingle n_hashes times per
-    row (measured 40x slowdown at 500 docs).
-    """
+def _banded_buckets(sh: DataFrame, n_hashes: int, bands: int, seed: int) -> DataFrame:
+    """(__id, band, bucket) LSH table from a (__id, __sh) shingle table:
+    base hashes in the JVM, signatures and band folds in one Arrow UDF."""
     if n_hashes % bands:
         raise ValueError("n_hashes must be divisible by bands")
-    r = n_hashes // bands
-    base = sh.select(
-        "__id",
-        F.transform("__sh", lambda s: _base_hash(s, hasher)).alias("__base"),
+    base = sh.select("__id", F.transform("__sh", _base_hash).alias("__base"))
+    bucketed = base.select(
+        "__id", _minhash_sig_udf(n_hashes, seed, bands)("__base").alias("__buckets")
     )
-    if vectorized:
-        bucketed = base.select(
-            "__id", _minhash_sig_udf(n_hashes, seed, bands=bands)("__base").alias("__buckets")
-        )
-    else:
-        def _affine(a: int, b: int):
-            return lambda h: (F.lit(a) * h + F.lit(b)) % _MERSENNE_31
-
-        # __sig is materialized as its own projection (multi-referenced, so
-        # CollapseProject cannot inline the 128 array_min trees into the
-        # 32 band folds — that inlining recomputes shingles per reference).
-        sigs = base.select(
-            "__id",
-            F.array(
-                *[
-                    F.array_min(F.transform("__base", _affine(a, b)))
-                    for a, b in _hash_coefficients(n_hashes, seed)
-                ]
-            ).alias("__sig"),
-        )
-
-        def _fold(b: int) -> Column:
-            acc: Column = F.lit(0).cast("long")
-            for j in range(r):
-                acc = (acc * _BAND_K + F.element_at("__sig", b * r + j + 1)) % _MERSENNE_31
-            return acc
-
-        bucketed = sigs.select(
-            "__id", F.array(*[_fold(b) for b in range(bands)]).alias("__buckets")
-        )
     return bucketed.select(
         "__id", F.posexplode("__buckets").alias("band", "bucket")
     )
@@ -369,23 +311,15 @@ def minhash_lsh_candidates(
     bands: int = 16,
     shingle_k: int = 3,
     seed: int = 42,
-    vectorized: bool = True,
     shingles_df: DataFrame | None = None,
-    hasher: str = "xxhash64",
 ) -> DataFrame:
     """Candidate near-duplicate pairs (id_a < id_b) via banded MinHash-LSH.
 
     rows-per-band r = n_hashes // bands; a pair with true Jaccard j collides
     with probability 1 - (1 - j^r)^bands. Shuffle cost: n_docs * bands rows.
-
-    ``vectorized=True`` (default) computes signatures in an Arrow-batched
-    numpy UDF; ``False`` keeps the pure-JVM expression path (same values).
-    ``hasher``: "xxhash64" (default) or "md5" — the engine-portable base
-    hash (first 15 hex chars of md5 mod p) an external SQL oracle can
-    replicate value-exactly; the affine rehash family is identical.
     """
     sh = shingles_df if shingles_df is not None else shingle_table(df, id_col, text_col, shingle_k)
-    banded = _banded_buckets(sh, n_hashes, bands, seed, vectorized, hasher)
+    banded = _banded_buckets(sh, n_hashes, bands, seed)
 
     # The self-join's two child stages are scheduled CONCURRENTLY and would
     # otherwise race to compute the shingle->sig->band pipeline twice; the
@@ -546,7 +480,6 @@ def minhash_dedup_pairs(
     bands: int = 32,
     shingle_k: int = 3,
     seed: int = 42,
-    hasher: str = "xxhash64",
 ) -> DataFrame:
     """End-to-end near-dup pair detection: LSH candidates + exact verify.
 
@@ -557,8 +490,7 @@ def minhash_dedup_pairs(
     """
     sh = shingle_table(df, id_col, text_col, shingle_k)
     cands = minhash_lsh_candidates(
-        df, id_col, text_col, n_hashes, bands, shingle_k, seed,
-        shingles_df=sh, hasher=hasher,
+        df, id_col, text_col, n_hashes, bands, shingle_k, seed, shingles_df=sh
     )
     return jaccard_verify(
         cands, df, id_col, text_col, shingle_k, threshold, shingles_df=sh
@@ -575,7 +507,6 @@ def minhash_incremental_pairs(
     bands: int = 32,
     shingle_k: int = 3,
     seed: int = 42,
-    hasher: str = "xxhash64",
     new_shingles: DataFrame | None = None,
     hist_shingles: DataFrame | None = None,
 ) -> DataFrame:
@@ -606,8 +537,8 @@ def minhash_incremental_pairs(
         if hist_shingles is not None
         else shingle_table(hist_df, id_col, text_col, shingle_k)
     )
-    nb = _banded_buckets(new_sh, n_hashes, bands, seed, True, hasher)
-    hb = _banded_buckets(hist_sh, n_hashes, bands, seed, True, hasher)
+    nb = _banded_buckets(new_sh, n_hashes, bands, seed)
+    hb = _banded_buckets(hist_sh, n_hashes, bands, seed)
     cands = (
         nb.alias("n")
         .join(
@@ -630,57 +561,39 @@ def minhash_incremental_pairs(
     )
 
 
-def _simhash_from_hashes(hashes: Column, n_bits: int = 64) -> Column:
-    """SimHash signature from a materialized array<long> of token hashes.
-
-    Unrolled per-bit vote (shift amounts must be literals); each vote is a
-    JVM fold over the token-hash array. Feed this a COLUMN REFERENCE, not an
-    inline expression — the 64 folds would otherwise each recompute it.
-    """
-
-    def _bit_merge(i: int):
-        return lambda acc, h: acc + F.when(
-            F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1
-        ).otherwise(-1)
-
-    sig = F.lit(0).cast("long")
-    for i in range(n_bits):
-        vote = F.aggregate(hashes, F.lit(0).cast("long"), _bit_merge(i))
-        sig = sig + F.when(vote > 0, F.lit(1 << i if i < 63 else -(1 << 63)).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return sig
+# SimHash signature width: the md5-prefix token hash has 60 bits.
+_SIMHASH_BITS = 60
 
 
-def _simhash_sig_udf(n_bits: int):
+def _simhash_sig_udf():
     """Vectorized SimHash over token-hash arrays: one Arrow batch → one
     bit-unpack matrix + segmented per-bit vote sums (np.add.reduceat).
 
-    Identical values to the per-bit JVM fold (_simhash_from_hashes) —
-    pytest-pinned — but the fold evaluates interpreted at ~µs/element ×
-    n_bits, while numpy does the whole batch in C (measured 3.3 s → 0.6 s
-    for the 60-bit path at sf0.1)."""
+    Bit i is set iff more of the row's token hashes have bit i set than
+    not. A row with no tokens (a NULL or empty array) has signature 0.
+    Such rows skip the reduceat: it gives a zero-length segment the next
+    row's element, not 0. numpy does the whole batch in C (measured
+    3.3 s → 0.6 s against a per-bit Spark fold at sf0.1)."""
     import numpy as np
+
+    bits = np.arange(_SIMHASH_BITS, dtype=np.uint64)
+    weights = np.left_shift(np.uint64(1), bits)
 
     @F.pandas_udf("long")
     def sig(hashes: pd.Series) -> pd.Series:
-        lens = hashes.map(len).to_numpy()
-        if lens.sum() == 0:
-            return pd.Series(np.zeros(len(lens), dtype=np.int64))
-        starts = np.zeros(len(lens), dtype=np.int64)
-        np.cumsum(lens[:-1], out=starts[1:])
-        flat = np.concatenate(
-            [np.asarray(v, dtype=np.int64) for v in hashes]
-        ).view(np.uint64)
-        # ones[t, i] = bit i of token-hash t; votes = 2*ones - n per row
-        ones = (
-            (flat[:, None] >> np.arange(n_bits, dtype=np.uint64)[None, :]) & 1
-        ).astype(np.int32)
-        ones_per_row = np.add.reduceat(ones, starts, axis=0)
-        votes = 2 * ones_per_row - lens[:, None]
-        bit_set = votes > 0
-        weights = (1 << np.arange(n_bits, dtype=np.uint64)).astype(np.uint64)
-        sigs = (bit_set.astype(np.uint64) * weights[None, :]).sum(axis=1)
+        lens = hashes.map(lambda v: 0 if v is None else len(v)).to_numpy()
+        sigs = np.zeros(len(lens), dtype=np.uint64)
+        rows = np.flatnonzero(lens)
+        if len(rows):
+            starts = np.zeros(len(rows), dtype=np.int64)
+            np.cumsum(lens[rows][:-1], out=starts[1:])
+            flat = np.concatenate(
+                [np.asarray(v, dtype=np.int64) for v in hashes.to_numpy()[rows]]
+            ).view(np.uint64)
+            # ones[t, i] = bit i of token-hash t; votes = 2*ones - n per row
+            ones = ((flat[:, None] >> bits[None, :]) & 1).astype(np.int32)
+            votes = 2 * np.add.reduceat(ones, starts, axis=0) - lens[rows, None]
+            sigs[rows] = ((votes > 0).astype(np.uint64) * weights[None, :]).sum(axis=1)
         return pd.Series(sigs.view(np.int64))
 
     return sig
@@ -691,49 +604,28 @@ def simhash_near_pairs(
     id_col: str,
     text_col: str,
     max_hamming: int = 3,
-    seed: int = 42,
-    hasher: str = "xxhash64",
-    vectorized: bool = True,
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance <= max_hamming.
 
     Banded lookup: split the signature into (max_hamming+1) blocks — by
     pigeonhole, any pair within distance d agrees exactly on >= 1 block,
     so a block-equality join finds all such pairs with O(n * blocks) shuffle.
-
-    ``hasher``: "xxhash64" (default, fastest — one JVM intrinsic per token,
-    64-bit signature) or "md5" (engine-portable 60-bit signature: token hash
-    is the first 15 hex chars of md5, so a DuckDB/ANSI oracle can replicate
-    the EXACT signature and pair set — see q_dedup_simhash's oracle).
-    ``vectorized``: Arrow/numpy per-bit vote (default) vs the pure-JVM fold
-    (same values, pytest-pinned).
+    The token hash is the md5 prefix ``md5_int(t, 15)``, so a DuckDB/ANSI
+    oracle can replicate the EXACT signature and pair set (see
+    q_dedup_simhash's oracle).
     """
-    n_blocks = max_hamming + 1
-    n_bits = 64 if hasher == "xxhash64" else 60
-    block_bits = n_bits // n_blocks
+    from pulsar_lunar_spark.operators.corpus import md5_int
 
-    if hasher == "xxhash64":
-        token_hash = lambda t: F.xxhash64(t, F.lit(seed))  # noqa: E731
-    elif hasher == "md5":
-        token_hash = lambda t: F.conv(  # noqa: E731
-            F.substring(F.md5(t), 1, 15), 16, 10
-        ).cast("long")
-    else:
-        raise ValueError(f"unknown hasher: {hasher}")
+    n_blocks = max_hamming + 1
+    block_bits = _SIMHASH_BITS // n_blocks
 
     hashed = ensure_parallelism(df).select(
         F.col(id_col).alias("__id"),
         F.transform(
-            F.split(normalize_text(F.col(text_col)), " "),
-            token_hash,
+            F.split(normalize_text(F.col(text_col)), " "), lambda t: md5_int(t, 15)
         ).alias("__h"),
     )
-    if vectorized:
-        sigs = hashed.select("__id", _simhash_sig_udf(n_bits)("__h").alias("__sig"))
-    else:
-        sigs = hashed.select(
-            "__id", _simhash_from_hashes(F.col("__h"), n_bits).alias("__sig")
-        )
+    sigs = hashed.select("__id", _simhash_sig_udf()("__h").alias("__sig"))
     mask = (1 << block_bits) - 1
     blocked = sigs.select(
         "__id",

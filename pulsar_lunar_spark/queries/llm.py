@@ -3,9 +3,8 @@ dedup (exact + MinHash-LSH + SimHash), text analysis, language ID,
 embedding similarity search.
 
 Oracle notes: every query here has an exact DuckDB twin. The MinHash and
-SimHash queries use md5-portable base hashes so the oracle replicates the
-full LSH pipeline value-exactly (signature -> banding -> verify); the
-xxhash64 hot paths keep their dedicated pytest recall/exactness suites.
+SimHash operators hash with the md5 prefix, so the oracle replicates the
+full LSH pipeline value-exactly (signature -> banding -> verify).
 The random-hyperplane ANN query uses a flag-style oracle (plane literals
 have no SQL twin; the contract — count, self-retrieval, recall bound — is
 asserted in-query).
@@ -408,7 +407,7 @@ def minhash_pairs_spool(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "pulsar_lunar_mh_pairs",
         lambda: D.minhash_dedup_pairs(
             load_table(spark, sf_dir, "documents"),
-            "doc_id", "text", threshold=0.3, hasher="md5",
+            "doc_id", "text", threshold=0.3,
         ),
     )
 
@@ -421,13 +420,13 @@ def minhash_pairs_spool(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-duplicate pairs (128 hashes, 32 bands) verified by
     exact shingle Jaccard >= 0.3. Shuffle O(docs*bands), never O(n^2).
-    Uses the md5-portable base hash so the oracle replicates the ENTIRE
-    LSH pipeline value-exactly in SQL — same coefficients, same band
-    folds, same verify (the xxhash64 hot path is pytest-covered)."""
+    The md5-portable base hash lets the oracle replicate the ENTIRE LSH
+    pipeline value-exactly in SQL — same coefficients, same band folds,
+    same verify."""
     d = load_table(spark, sf_dir, "documents")
-    return D.minhash_dedup_pairs(
-        d, "doc_id", "text", threshold=0.3, hasher="md5"
-    ).orderBy("id_a", "id_b")
+    return D.minhash_dedup_pairs(d, "doc_id", "text", threshold=0.3).orderBy(
+        "id_a", "id_b"
+    )
 
 
 # MATERIALIZED on every stage CTE is load-bearing for honest oracle
@@ -481,7 +480,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # table) and pass filtered views, instead of two materializations
     sh = D.shingle_table(d, "doc_id", "text", 3)
     return D.minhash_incremental_pairs(
-        new, hist, "doc_id", "text", threshold=0.3, hasher="md5",
+        new, hist, "doc_id", "text", threshold=0.3,
         new_shingles=sh.filter(F.col("__id") % 10 == 0),
         hist_shingles=sh.filter(F.col("__id") % 10 != 0),
     ).orderBy("new_id", "hist_id")
@@ -525,12 +524,12 @@ _SIMHASH_ORACLE = f"""
 )
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs within Hamming distance 3 (pigeonhole banded
-    join over 4 15-bit blocks). Uses the md5-portable 60-bit signature so
-    the oracle replicates the ENTIRE pipeline — signature, banding, verify —
-    value-exact in SQL (the xxhash64 hot path is pytest-covered)."""
+    join over 4 15-bit blocks). The md5-portable 60-bit signature lets the
+    oracle replicate the ENTIRE pipeline — signature, banding, verify —
+    value-exact in SQL."""
     d = load_table(spark, sf_dir, "documents")
     return (
-        D.simhash_near_pairs(d, "doc_id", "text", max_hamming=3, hasher="md5")
+        D.simhash_near_pairs(d, "doc_id", "text", max_hamming=3)
         .select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
         .orderBy("id_a", "id_b")
     )

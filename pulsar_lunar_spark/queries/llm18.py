@@ -333,11 +333,11 @@ def q_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         staged = sh.select(
             "__id", "__sh",
-            F.transform("__sh", lambda t: D._base_hash(t, "md5")).alias("__base"),
+            F.transform("__sh", D._base_hash).alias("__base"),
         )
         return staged.select(
             "__id", "__sh",
-            D._minhash_sig_udf(128, 42, bands=32)("__base").alias("__buckets"),
+            D._minhash_sig_udf(128, 42, 32)("__base").alias("__buckets"),
             F.lit(batch_id).cast("long").alias("bid"),
         )
 

@@ -245,7 +245,6 @@ def q_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
             bands=bands,
             seed=42,
             shingles_df=sh,
-            hasher="md5",
         )
         ver = D.jaccard_verify(
             cands, d, "doc_id", "text", threshold=0.0, shingles_df=sh

@@ -99,9 +99,6 @@ class MessageLog:
         Exclusive/Failover semantics fall out (one active query per dir)."""
         return os.path.join(self.root, "subscriptions", _safe_topic(topic), subscription)
 
-    def dlq_path(self, topic: str) -> str:
-        return self.topic_path(f"{topic}.DLQ")
-
     def ack_path(self, topic: str, subscription: str) -> str:
         """Ledger of individually-acked message positions for one
         (topic, subscription) — the durable sibling of the broker's
@@ -201,18 +198,6 @@ class MessageLog:
         if compression is not None:
             writer = writer.option("compression", compression)
         writer.parquet(self.topic_path(topic))
-
-    def produce_stream(self, env_stream: DataFrame, topic: str, checkpoint: str, **opts):
-        """Streaming produce: writeStream of envelope rows into the topic
-        (the reference's async producer; exactly-once via the checkpoint +
-        sequence_id dedup on read, PulsarApi.proto:577-579)."""
-        return (
-            env_stream.writeStream.format("parquet")
-            .option("path", self.topic_path(topic))
-            .option("checkpointLocation", checkpoint)
-            .outputMode("append")
-            .options(**opts)
-        )
 
     # -- consume: batch views ------------------------------------------
     def read(self, topic: str) -> DataFrame:

@@ -1,38 +1,23 @@
-"""Structured Streaming surface: watermarked windows, streaming dedup,
-DLQ/redelivery, delayed delivery, Key_Shared ordering (SURVEY §2C)."""
+"""Structured Streaming surface: the bounded drain, DLQ/redelivery,
+exactly-once sinks, sticky Key_Shared ranges, custom stateful operators
+(SURVEY §2C)."""
 
 from pulsar_lunar_spark.streaming.ops import (
     foreach_batch_with_dlq,
     idempotent_foreach_batch,
     key_hash_sticky,
-    key_shared,
     key_shared_range,
     run_available_now,
-    session_aggregate,
-    stateful_high_watermark,
     stateful_running_count,
     stateful_sessionize,
-    stream_static_join,
-    stream_stream_join,
-    streaming_dedup,
-    tumbling_counts,
-    with_deliver_at,
 )
 
 __all__ = [
-    "tumbling_counts",
-    "session_aggregate",
-    "streaming_dedup",
-    "key_shared",
     "key_hash_sticky",
     "key_shared_range",
-    "with_deliver_at",
     "foreach_batch_with_dlq",
     "idempotent_foreach_batch",
     "run_available_now",
-    "stream_static_join",
-    "stream_stream_join",
     "stateful_running_count",
     "stateful_sessionize",
-    "stateful_high_watermark",
 ]

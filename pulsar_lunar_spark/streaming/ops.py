@@ -1,89 +1,21 @@
 """Streaming operators (SURVEY §2B streaming row + §2C semantics map).
 
-Watermarked event-time windows, streaming dedup, compacted updates, DLQ
-routing with redelivery counts, delayed delivery, Key_Shared-style per-key
-ordering — each a thin, tested composition of Structured Streaming
-primitives, designed to run identically on a real cluster.
+The helpers the streaming queries share: the bounded drain
+(``run_available_now``), DLQ routing with redelivery counts, the
+exactly-once sink ledger, sticky Key_Shared hash ranges, custom stateful
+operators and observed consumer stats. Windows, dedup and joins are
+one-line Structured Streaming primitives, so the queries call them
+directly.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Callable
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
-
-
-def tumbling_counts(
-    stream: DataFrame,
-    ts_col: str,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    keys: Sequence[str] = (),
-    value_col: str | None = None,
-) -> DataFrame:
-    """Watermarked tumbling-window aggregation; late rows beyond the
-    watermark are dropped (Pulsar has no such notion — this is the Spark
-    event-time upgrade, SIGMOD'18 Structured Streaming model)."""
-    aggs = [F.count(F.lit(1)).alias("n")]
-    if value_col is not None:
-        aggs.append(F.sum(value_col).alias("total_value"))
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("w"), *keys)
-        .agg(*aggs)
-        .select(F.col("w.start").alias("win_start"), F.col("w.end").alias("win_end"), *keys, *[
-            F.col(a) for a in (["n"] + (["total_value"] if value_col else []))
-        ])
-    )
-
-
-def session_aggregate(
-    stream: DataFrame,
-    ts_col: str,
-    key_cols: Sequence[str],
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-    value_col: str | None = None,
-) -> DataFrame:
-    """Session windows with an inactivity gap (F.session_window) — the
-    streaming twin of the batch gaps-and-islands query (q_events_session)."""
-    aggs = [F.count(F.lit(1)).alias("n_events")]
-    if value_col is not None:
-        aggs.append(F.sum(value_col).alias("total_value"))
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(ts_col, gap).alias("s"), *key_cols)
-        .agg(*aggs)
-        .select(
-            *key_cols,
-            F.col("s.start").alias("session_start"),
-            F.col("s.end").alias("session_end"),
-            *[F.col(a) for a in (["n_events"] + (["total_value"] if value_col else []))],
-        )
-    )
-
-
-def streaming_dedup(
-    stream: DataFrame,
-    id_cols: Sequence[str],
-    ts_col: str,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Exactly-once-per-id view: dropDuplicates bounded by a watermark so
-    state doesn't grow forever (the broker-dedup analog of
-    last_sequence_id, /root/reference/src/PulsarApi.proto:577-579)."""
-    return stream.withWatermark(ts_col, watermark).dropDuplicates([*id_cols])
-
-
-def key_shared(stream: DataFrame, key_col: str, num_partitions: int) -> DataFrame:
-    """Key_Shared dispatch (PulsarApi.proto:286-295): all messages of a key
-    to the same partition/task => per-key processing order within a batch.
-    (Deviation vs Pulsar, documented: order holds within a micro-batch per
-    partition, not across restarts — SURVEY §7 hard parts.)"""
-    return stream.repartition(num_partitions, F.col(key_col))
 
 
 def key_hash_sticky(key_col: str | Column, buckets: int = 65536) -> Column:
@@ -116,32 +48,23 @@ def key_shared_range(
     return stream.filter((slot >= lo) & (slot < hi))
 
 
-def with_deliver_at(stream: DataFrame, deliver_at: Column) -> DataFrame:
-    """Delayed delivery (deliver_at_time, PulsarApi.proto:126): tag rows
-    with their visibility time; pair with a filter on the batch time in
-    foreachBatch (rows not yet due are carried by re-reading — file/Pulsar
-    sources re-serve unacked data by offset, so filtering is sufficient)."""
-    return stream.withColumn("deliver_at_ts", deliver_at)
-
-
 def foreach_batch_with_dlq(
     process: Callable[[DataFrame], None],
     is_poison: Column,
     dlq_writer: Callable[[DataFrame], None],
+    retry_ledger_dir: str,
     max_redeliver: int = 3,
-    retry_ledger_dir: str | None = None,
-    msg_key: Column | None = None,
 ):
     """DLQ routing (DeadLetterPolicy, /root/reference/src/entity/consumer.rs:71-77):
     rows matching ``is_poison`` fail processing; after ``max_redeliver``
     failed deliveries the message is retired to the DLQ — exactly once.
     Returns a foreachBatch(batch_df, batch_id) function.
 
-    With ``retry_ledger_dir`` set, per-message attempt counts persist
-    across deliveries in a versioned parquet ledger (one tiny file set per
-    batch that saw poison; the ledger holds ONLY poison message keys, so
-    it stays small at any stream volume — the broker's per-consumer
-    redelivery counter, PulsarApi.proto:475):
+    Per-message attempt counts, keyed on ``sequence_id``, persist across
+    deliveries in a versioned parquet ledger under ``retry_ledger_dir``
+    (one tiny file set per batch that saw poison; the ledger holds ONLY
+    poison message keys, so it stays small at any stream volume — the
+    broker's per-consumer redelivery counter, PulsarApi.proto:475):
 
     - attempts < max_redeliver: the row is withheld (the source re-serves
       unacked data, so it will be delivered again) and its count bumped;
@@ -150,10 +73,8 @@ def foreach_batch_with_dlq(
     - retired messages on later redeliveries are dropped — a poison
       message lands in the DLQ exactly once.
 
-    Without a ledger there is no cross-delivery memory: poison rows are
-    dead-lettered immediately with the count stamped at policy max (the
-    degenerate max_redeliver=0 policy). All routing is DataFrame ops — no
-    driver-side collect; the ledger join broadcasts (poison keys are few).
+    All routing is DataFrame ops — no driver-side collect; the ledger join
+    broadcasts (poison keys are few).
     """
     import os
 
@@ -163,20 +84,8 @@ def foreach_batch_with_dlq(
         bad = tagged.filter(F.col("__poison")).drop("__poison")
         process(good)
 
-        if retry_ledger_dir is None:
-            dlq_writer(
-                bad.withColumn(
-                    "redelivery_count",
-                    (F.coalesce(F.col("redelivery_count"), F.lit(0)) + F.lit(max_redeliver)).cast(
-                        "int"
-                    ),
-                )
-            )
-            return
-
         spark = batch_df.sparkSession
-        key = msg_key if msg_key is not None else F.col("sequence_id").cast("string")
-        bad = bad.withColumn("__mkey", key)
+        bad = bad.withColumn("__mkey", F.col("sequence_id").cast("string"))
         latest_ptr = os.path.join(retry_ledger_dir, "_LATEST")
         if os.path.exists(latest_ptr):
             with open(latest_ptr) as f:
@@ -235,55 +144,7 @@ def foreach_batch_with_dlq(
     return _fn
 
 
-def stream_static_join(
-    stream: DataFrame,
-    dim: DataFrame,
-    on: Column | Sequence[str],
-    how: str = "inner",
-) -> DataFrame:
-    """Stream-static join: enrich a message stream with a dimension table
-    (the per-message schema/metadata lookup a broker does server-side).
-    The static side is re-resolved per micro-batch and broadcast when small
-    — no state is kept, so it scales to any stream volume."""
-    return stream.join(F.broadcast(dim), on, how)
-
-
-def stream_stream_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_ts: str,
-    right_ts: str,
-    keys: Sequence[str],
-    watermark: str = "2 hours",
-    within: str = "1 hour",
-    how: str = "inner",
-) -> DataFrame:
-    """Stream-stream join with watermarks on both sides and a time-bound
-    condition, so join state is evictable (bounded by watermark + interval
-    — without the bound, both sides' state would grow forever at 100 TB).
-
-    ``keys`` and ``right_ts`` name the logical columns; the right side's
-    physical columns must be pre-renamed with a ``r_`` prefix (so the join
-    output has no ambiguous names). The time bound is
-    ``r_<right_ts> ∈ [left_ts, left_ts + within]``.
-    """
-    lw = left.withWatermark(left_ts, watermark)
-    rw = right.withWatermark(f"r_{right_ts}", watermark)
-    cond = None
-    for k in keys:
-        c = F.col(k) == F.col(f"r_{k}")
-        cond = c if cond is None else (cond & c)
-    bound = (F.col(f"r_{right_ts}") >= F.col(left_ts)) & (
-        F.col(f"r_{right_ts}") <= F.col(left_ts) + F.expr(f"INTERVAL {within}")
-    )
-    return lw.join(rw, cond & bound, how)
-
-
-def stateful_running_count(
-    stream: DataFrame,
-    key_col: str,
-    timeout_ms: int | None = None,
-) -> DataFrame:
+def stateful_running_count(stream: DataFrame, key_col: str) -> DataFrame:
     """Custom stateful operator via applyInPandasWithState: a per-key
     running message count maintained across micro-batches (the consumer-side
     redelivery/progress counter the reference keeps per consumer id,
@@ -320,65 +181,6 @@ def stateful_running_count(
             stateStructType=state_schema,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def stateful_high_watermark(stream: DataFrame, key_col: str, seq_col: str) -> DataFrame:
-    """Per-key sequence high-watermark via transformWithStateInPandas (the
-    Spark 4 stateful API; requires the RocksDB state store provider).
-
-    Tracks max(sequence_id) per key across micro-batches — the broker's
-    ``last_sequence_id`` register that powers producer dedup
-    (/root/reference/src/PulsarApi.proto:577-579). Emits one row per key
-    per batch with the running high-watermark; state is a single long per
-    key in RocksDB (spillable, snapshotted into the checkpoint).
-
-    Environment note: transformWithState's state-server protocol requires
-    the ``protobuf`` Python package at runtime (gated below; this
-    container lacks it — ``stateful_running_count`` over
-    applyInPandasWithState is the dependency-free equivalent).
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:  # pragma: no cover
-        raise ImportError(
-            "transformWithStateInPandas requires the 'protobuf' package "
-            "(state-server protocol); use stateful_running_count instead"
-        ) from e
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = StructType(
-        [StructField("key", LongType()), StructField("high_watermark", LongType())]
-    )
-
-    class HighWatermark(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._hw = handle.getValueState("hw", "hw long")
-
-        def handleInputRows(self, key, rows, timerValues):
-            cur = self._hw.get()[0] if self._hw.exists() else -1
-            for pdf in rows:
-                m = int(pdf[seq_col].max())
-                if m > cur:
-                    cur = m
-            self._hw.update((cur,))
-            yield pd.DataFrame({"key": [key[0]], "high_watermark": [cur]})
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream.withColumn("key", F.col(key_col))
-        .groupBy("key")
-        .transformWithStateInPandas(
-            HighWatermark(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
         )
     )
 
@@ -639,15 +441,3 @@ def observe_stats(df: DataFrame, name: str, **metrics: Column) -> DataFrame:
     micro-batch's values arrive in query.lastProgress["observedMetrics"]
     [name] — per-batch consumer stats for free."""
     return df.observe(name, *[c.alias(k) for k, c in metrics.items()])
-
-
-def last_observed(query, name: str) -> dict | None:
-    """Observed metrics of the most recent micro-batch (ConsumerStats
-    poll): None until the first batch completes."""
-    p = query.lastProgress
-    if not p:
-        return None
-    m = p.get("observedMetrics", {}).get(name)
-    if m is None:
-        return None
-    return m.asDict() if hasattr(m, "asDict") else dict(m)

@@ -175,9 +175,7 @@ def test_neardup_safe_split_excludes_exactly_leaky_eval_docs(spark):
     res = {r["source"]: r for r in
            all_queries()["q_neardup_safe_split"].fn(spark, sf).collect()}
     d = load_table(spark, sf, "documents")
-    pairs = D.minhash_dedup_pairs(
-        d, "doc_id", "text", threshold=0.3, hasher="md5"
-    ).collect()
+    pairs = D.minhash_dedup_pairs(d, "doc_id", "text", threshold=0.3).collect()
     docs = d.select("doc_id", "source").collect()
     src = {r["doc_id"]: r["source"] for r in docs}
     is_eval = lambda i: i % 10 == 7  # noqa: E731

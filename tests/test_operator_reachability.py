@@ -1,16 +1,21 @@
 """Structural guard for one implementation per operator: every top-level
-definition in ``pulsar_lunar_spark/operators/`` is reachable, through the
-call graph, from code that runs — the query registry, the session, the
-sources, streaming and functions layers, the tools, ``bench.py``,
-``__spark_entry__.py`` or ``perfbench/``. A definition whose only callers
-are tests, the package ``__init__`` re-exports or a string naming it is a
-second form that nothing runs; delete it, or move it next to the test
-that uses it as a reference.
+definition in the guarded packages — ``operators/``, ``streaming/``,
+``sources/`` and ``functions/`` under ``pulsar_lunar_spark/`` — is
+reachable, through the call graph, from code that runs: the query
+registry, the session, the tools, ``bench.py``, ``__spark_entry__.py`` or
+``perfbench/``. A definition whose only callers are tests, a package
+``__init__`` re-export or a string naming it is a second form that nothing
+runs; delete it, or move it next to the test that uses it as a reference.
+
+The guarded packages reach each other only through call edges from a
+reached definition, never as roots. A name a guarded package's
+``__init__`` re-exports resolves to its definition when a caller imports
+it from the package; the re-export itself is not a caller.
 
 The pass is static (AST only, no Spark): a reference is a bare name bound
-by an import of an operators module or symbol, an attribute of such a
-module alias, or, inside an operators module, a bare name of one of its
-own top-level definitions."""
+by an import of a guarded module or symbol, an attribute of such a module
+alias, or, inside a guarded module, a bare name of one of its own
+top-level definitions."""
 
 from __future__ import annotations
 
@@ -19,14 +24,10 @@ import os
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _PKG = "pulsar_lunar_spark"
-_OPS_PKG = f"{_PKG}.operators"
-_OPS_DIR = os.path.join(ROOT, _PKG, "operators")
+_GUARDED = ("operators", "streaming", "sources", "functions")
 _ROOTS = (
     os.path.join(_PKG, "queries"),
     os.path.join(_PKG, "session.py"),
-    os.path.join(_PKG, "sources"),
-    os.path.join(_PKG, "streaming"),
-    os.path.join(_PKG, "functions"),
     "tools",
     "bench.py",
     "__spark_entry__.py",
@@ -50,71 +51,85 @@ def _parse(path):
         return ast.parse(fh.read(), filename=path)
 
 
-def _ops_modules():
+def _modules():
+    """(package, module) of every guarded module."""
     return {
-        name[: -len(".py")]
-        for name in os.listdir(_OPS_DIR)
+        (pkg, name[: -len(".py")])
+        for pkg in _GUARDED
+        for name in os.listdir(os.path.join(ROOT, _PKG, pkg))
         if name.endswith(".py") and name != "__init__.py"
     }
 
 
+def _module_key(dotted, modules):
+    """(package, module) for ``pulsar_lunar_spark.<package>.<module>``."""
+    parts = dotted.split(".")
+    if len(parts) == 3 and parts[0] == _PKG and (parts[1], parts[2]) in modules:
+        return (parts[1], parts[2])
+    return None
+
+
 def _reexports(modules):
-    """``operators/__init__`` names bound by
-    ``from pulsar_lunar_spark.operators.m import x``."""
+    """(package, name) -> (package, module, name) for the names a guarded
+    package's ``__init__`` binds by
+    ``from pulsar_lunar_spark.<package>.<module> import name``."""
     out = {}
-    for node in ast.walk(_parse(os.path.join(_OPS_DIR, "__init__.py"))):
-        if isinstance(node, ast.ImportFrom) and node.module:
-            mod = node.module.rpartition(".")[2]
-            if node.module == f"{_OPS_PKG}.{mod}" and mod in modules:
-                for a in node.names:
-                    out[a.asname or a.name] = (mod, a.name)
+    for pkg in _GUARDED:
+        tree = _parse(os.path.join(ROOT, _PKG, pkg, "__init__.py"))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.module:
+                key = _module_key(node.module, modules)
+                if key is not None and key[0] == pkg:
+                    for a in node.names:
+                        out[(pkg, a.asname or a.name)] = (*key, a.name)
     return out
 
 
 def _bindings(tree, modules, reexports):
-    """Local name -> {("mod", m)} for an operators module alias, or
-    {("sym", (m, name))} for an imported operators definition; a set,
+    """Local name -> {("mod", (pkg, m))} for a guarded module alias, or
+    {("sym", (pkg, m, name))} for an imported guarded definition; a set,
     because function-local imports may bind one name to two modules in
-    one file. The engine imports operators by absolute name only; any
-    other form leaves its references unresolved, and the guard then
-    fails rather than pass."""
+    one file. The engine imports guarded code by absolute name only; any
+    other form leaves its references unresolved, and the guard then fails
+    rather than pass."""
     bound = {}
     for node in ast.walk(tree):
         if isinstance(node, ast.Import):
             for a in node.names:
-                head, _, mod = a.name.rpartition(".")
-                if head == _OPS_PKG and mod in modules and a.asname:
-                    bound.setdefault(a.asname, set()).add(("mod", mod))
+                key = _module_key(a.name, modules)
+                if key is not None and a.asname:
+                    bound.setdefault(a.asname, set()).add(("mod", key))
         elif isinstance(node, ast.ImportFrom):
             src = node.module or ""
+            head, _, pkg = src.rpartition(".")
             for a in node.names:
                 hit = None
-                if src == _OPS_PKG:
-                    if a.name in modules:
-                        hit = ("mod", a.name)
-                    elif a.name in reexports:
-                        hit = ("sym", reexports[a.name])
-                elif src.rpartition(".")[0] == _OPS_PKG:
-                    mod = src.rpartition(".")[2]
-                    if mod in modules:
-                        hit = ("sym", (mod, a.name))
+                if head == _PKG and pkg in _GUARDED:
+                    if (pkg, a.name) in modules:
+                        hit = ("mod", (pkg, a.name))
+                    elif (pkg, a.name) in reexports:
+                        hit = ("sym", reexports[(pkg, a.name)])
+                else:
+                    key = _module_key(src, modules)
+                    if key is not None:
+                        hit = ("sym", (*key, a.name))
                 if hit:
                     bound.setdefault(a.asname or a.name, set()).add(hit)
     return bound
 
 
 def _refs(node, bound, own):
-    """Operators definitions ``node`` references."""
+    """Guarded definitions ``node`` references."""
     out = set()
     for sub in ast.walk(node):
         if isinstance(sub, ast.Name):
             out |= {ref for kind, ref in bound.get(sub.id, ()) if kind == "sym"}
             if own is not None and sub.id in own[1]:
-                out.add((own[0], sub.id))
+                out.add((*own[0], sub.id))
         elif isinstance(sub, ast.Attribute) and isinstance(sub.value, ast.Name):
             out |= {
-                (mod, sub.attr)
-                for kind, mod in bound.get(sub.value.id, ())
+                (*key, sub.attr)
+                for kind, key in bound.get(sub.value.id, ())
                 if kind == "mod"
             }
     return out
@@ -136,23 +151,22 @@ def _top_level_names(stmt):
     return [n for n in names if not (n.startswith("__") and n.endswith("__"))]
 
 
-def unreachable_operators():
-    """Sorted ``module.name`` of operators definitions nothing runs."""
-    modules = _ops_modules()
+def unreachable_definitions():
+    """Sorted ``package.module.name`` of guarded definitions nothing runs."""
+    modules = _modules()
     reexports = _reexports(modules)
     edges = {}
     seeds = set()
-    for mod in sorted(modules):
-        path = os.path.join(_OPS_DIR, f"{mod}.py")
-        tree = _parse(path)
+    for pkg, mod in sorted(modules):
+        tree = _parse(os.path.join(ROOT, _PKG, pkg, f"{mod}.py"))
         bound = _bindings(tree, modules, reexports)
-        own = (mod, {n for s in tree.body for n in _top_level_names(s)})
+        own = ((pkg, mod), {n for s in tree.body for n in _top_level_names(s)})
         for stmt in tree.body:
             names = _top_level_names(stmt)
             refs = _refs(stmt, bound, own)
             if names:
                 for n in names:
-                    edges.setdefault((mod, n), set()).update(refs)
+                    edges.setdefault((pkg, mod, n), set()).update(refs)
             elif not isinstance(stmt, (ast.Import, ast.ImportFrom)):
                 # Module-level code runs at import.
                 seeds |= refs
@@ -168,9 +182,9 @@ def unreachable_operators():
             continue
         reached.add(cur)
         todo.extend(r for r in edges[cur] if r in edges and r not in reached)
-    return sorted(f"{m}.{n}" for (m, n) in set(edges) - reached)
+    return sorted(".".join(d) for d in set(edges) - reached)
 
 
 def test_every_operator_is_reachable_from_code_that_runs():
-    dead = unreachable_operators()
-    assert not dead, "operators nothing runs:\n" + "\n".join(dead)
+    dead = unreachable_definitions()
+    assert not dead, "definitions nothing runs:\n" + "\n".join(dead)

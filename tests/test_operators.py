@@ -111,17 +111,66 @@ def test_simhash_finds_planted_near_dups(spark):
     assert (1, 2) in found
 
 
+def _simhash_fold(hashes, n_bits):
+    """Reference SimHash: the per-bit vote as a Spark fold over a
+    materialized array<long> of token hashes. A NULL array folds to a
+    NULL vote on every bit, so its signature is 0."""
+
+    def _bit_merge(i: int):
+        return lambda acc, h: acc + F.when(
+            F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1
+        ).otherwise(-1)
+
+    sig = F.lit(0).cast("long")
+    for i in range(n_bits):
+        vote = F.aggregate(hashes, F.lit(0).cast("long"), _bit_merge(i))
+        sig = sig + F.when(vote > 0, F.lit(1 << i if i < 63 else -(1 << 63)).cast("long")).otherwise(
+            F.lit(0).cast("long")
+        )
+    return sig
+
+
 def test_simhash_vectorized_matches_jvm_fold(spark, sf_dir):
-    """The Arrow/numpy per-bit vote must be value-identical to the pure-JVM
-    fold — for both hash families (signed xxhash64 and 60-bit md5)."""
+    """The Arrow/numpy per-bit vote of simhash_near_pairs is
+    value-identical to the Spark fold reference on its md5 token hashes,
+    including rows with no tokens (NULL text, an empty hash array) between
+    and after other rows, single-token rows and non-ASCII text."""
+    from pulsar_lunar_spark.operators.corpus import md5_int
+    from pulsar_lunar_spark.operators.dedup import (
+        _SIMHASH_BITS,
+        _simhash_sig_udf,
+        normalize_text,
+    )
     from pulsar_lunar_spark.session import load_table
 
-    d = load_table(spark, sf_dir, "documents").limit(120)
-    for hasher in ("xxhash64", "md5"):
-        vec = simhash_near_pairs(d, "doc_id", "text", 3, hasher=hasher, vectorized=True)
-        jvm = simhash_near_pairs(d, "doc_id", "text", 3, hasher=hasher, vectorized=False)
-        assert vec.exceptAll(jvm).count() == 0, hasher
-        assert jvm.exceptAll(vec).count() == 0, hasher
+    crafted = spark.createDataFrame(
+        [(-1, None), (-2, ""), (-3, "word"), (-4, "Größe café naïve 日本語 — ñ"), (-5, None)],
+        "doc_id long, text string",
+    )
+    docs = load_table(spark, sf_dir, "documents").limit(120).select("doc_id", "text")
+    hashed = crafted.unionByName(docs).select(
+        "doc_id",
+        F.transform(F.split(normalize_text(F.col("text")), " "), lambda t: md5_int(t, 15)).alias("h"),
+    )
+    arrays = spark.createDataFrame(
+        [(-10, [5, 9]), (-11, []), (-12, [7]), (-13, None), (-14, [3, 3, 12]), (-15, [])],
+        "doc_id long, h array<long>",
+    )
+    rows = (
+        arrays.unionByName(hashed)
+        .coalesce(1)
+        .select(
+            "doc_id",
+            _simhash_sig_udf()("h").alias("arrow"),
+            _simhash_fold(F.col("h"), _SIMHASH_BITS).alias("fold"),
+        )
+        .collect()
+    )
+    assert len(rows) == 131
+    assert [(r["doc_id"], r["arrow"], r["fold"]) for r in rows if r["arrow"] != r["fold"]] == []
+    got = {r["doc_id"]: r["arrow"] for r in rows}
+    assert got[-1] == got[-5] == got[-11] == got[-13] == got[-15] == 0
+    assert got[-12] == 7 and got[-3] != 0
 
 
 def test_shingles_short_text(spark):

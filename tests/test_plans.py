@@ -201,17 +201,14 @@ def test_curriculum_interleave_is_sharded(spark, sf_dir):
 
 
 def test_minhash_jvm_variant_plan(spark, sf_dir):
-    """The pure-JVM fallback stays Python-free; both variants avoid
-    cartesian joins. (The vectorized default is Python-by-design.)"""
+    """The MinHash-LSH candidate join avoids cartesian joins. (Its Arrow
+    signature lane is Python-by-design.)"""
     from pulsar_lunar_spark.operators.dedup import minhash_lsh_candidates
     from pulsar_lunar_spark.session import load_table
 
     d = load_table(spark, sf_dir, "documents")
-    jvm = minhash_lsh_candidates(d, "doc_id", "text", vectorized=False)
-    assert not uses_python_eval(jvm)
-    assert_scale_plan(jvm, forbid_cartesian=True)
-    vec = minhash_lsh_candidates(d, "doc_id", "text", vectorized=True)
-    assert_scale_plan(vec, forbid_cartesian=True)
+    cands = minhash_lsh_candidates(d, "doc_id", "text")
+    assert_scale_plan(cands, forbid_cartesian=True)
 
 
 @pytest.mark.parametrize("name", ["q7_volume_shipping", "q8_market_share", "q9_product_profit", "q14_promo_share"])

@@ -1,6 +1,8 @@
 """End-to-end Structured Streaming tests over the MessageLog: produce ->
-subscribe -> windowed/sessionized/deduped/DLQ'd consumption with real
-micro-batch execution (availableNow triggers, memory + parquet sinks)."""
+subscribe -> stateful/DLQ'd/exactly-once consumption with real
+micro-batch execution (availableNow triggers, memory + parquet sinks).
+The windowed, deduped, sessionized and joined streams are checked by the
+parity tests of the q_stream_* queries."""
 
 from __future__ import annotations
 
@@ -11,13 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
 from pulsar_lunar_spark.sources.log import MessageLog
-from pulsar_lunar_spark.streaming import (
-    foreach_batch_with_dlq,
-    run_available_now,
-    session_aggregate,
-    streaming_dedup,
-    tumbling_counts,
-)
+from pulsar_lunar_spark.streaming import foreach_batch_with_dlq, run_available_now
 
 PAYLOAD = StructType(
     [
@@ -212,90 +208,10 @@ def test_unsubscribe_resets_cursor_and_ack_ledger(spark, log, tmp_path):
     assert log.read("events").count() == 1000
 
 
-def test_streaming_tumbling_matches_batch(spark, log):
-    stream = log.subscribe("events", payload_schema=PAYLOAD)
-    windowed = tumbling_counts(
-        stream.select(F.col("event_time").alias("ts"), F.col("payload.value").alias("v")),
-        "ts",
-        window="1 hour",
-        watermark="10 minutes",
-        value_col="v",
-    )
-    run_available_now(
-        windowed.writeStream.format("memory").queryName("tw").outputMode("append"),
-        log.subscription_checkpoint("events", "tw"),
-    )
-    got = {
-        (r["win_start"], r["n"]) for r in spark.sql("select * from tw").collect()
-    }
-    batch = (
-        log.read("events")
-        .groupBy(F.window("event_time", "1 hour").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("win_start"), "n")
-    )
-    want = {(r["win_start"], r["n"]) for r in batch.collect()}
-    # availableNow drains everything; final windows may be withheld by the
-    # watermark — everything emitted must match the batch answer
-    assert got <= want
-    assert len(got) >= len(want) - 2
-
-
-def test_streaming_dedup_drops_duplicates(spark, log, tmp_path):
-    """Producing the same rows twice, a deduped subscription emits one copy."""
-    dup = log.read("events").limit(200)
-    # re-append the same envelope rows (same sequence ids)
-    dup.withColumn("__partition", F.col("message_id.partition")).write.partitionBy(
-        "__partition"
-    ).mode("append").parquet(log.topic_path("events"))
-
-    stream = log.subscribe("events", payload_schema=PAYLOAD)
-    deduped = streaming_dedup(
-        stream.select(
-            F.col("payload.event_id").alias("event_id"),
-            F.col("event_time").alias("ts"),
-        ),
-        ["event_id"],
-        "ts",
-        watermark="365 days",
-    )
-    run_available_now(
-        deduped.writeStream.format("memory").queryName("dd").outputMode("append"),
-        log.subscription_checkpoint("events", "dd"),
-    )
-    got = spark.sql("select count(*) n, count(distinct event_id) d from dd").collect()[0]
-    assert got["n"] == 1000  # duplicates removed
-    assert got["d"] == 1000
-
-
-def test_session_window_stream_matches_batch(spark, log):
-    stream = log.subscribe("events", payload_schema=PAYLOAD)
-    src = stream.select(
-        F.col("key").alias("user"), F.col("event_time").alias("ts")
-    )
-    sess = session_aggregate(src, "ts", ["user"], gap="30 minutes", watermark="1 minute")
-    run_available_now(
-        sess.writeStream.format("memory").queryName("sw").outputMode("append"),
-        log.subscription_checkpoint("events", "sw"),
-    )
-    got = spark.sql("select user, session_start, n_events from sw").collect()
-
-    batch = (
-        log.read("events")
-        .groupBy(F.session_window("event_time", "30 minutes").alias("s"), F.col("key").alias("user"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select("user", F.col("s.start").alias("session_start"), "n_events")
-        .collect()
-    )
-    want = {(r["user"], r["session_start"], r["n_events"]) for r in batch}
-    gotset = {(r["user"], r["session_start"], r["n_events"]) for r in got}
-    assert gotset <= want
-    assert len(gotset) >= len(want) - len({r["user"] for r in batch})  # last session/user may be withheld
-
-
 def test_dlq_routing(spark, log, tmp_path):
-    """Poison messages (value is null after decode => schema mismatch) land
-    in the DLQ with an escalated redelivery_count; good rows reach the sink."""
+    """Through a real drain, poison messages land in the DLQ and good rows
+    reach the sink. With max_redeliver=1 every poison message is
+    dead-lettered on its first delivery, with redelivery_count 1."""
     good_dir = str(tmp_path / "good")
     dlq_dir = str(tmp_path / "dlq")
 
@@ -304,7 +220,8 @@ def test_dlq_routing(spark, log, tmp_path):
         process=lambda df: df.write.mode("append").parquet(good_dir),
         is_poison=F.col("payload.value") > 190.0,  # deterministic "failure"
         dlq_writer=lambda df: df.write.mode("append").parquet(dlq_dir),
-        max_redeliver=3,
+        retry_ledger_dir=str(tmp_path / "retry_ledger"),
+        max_redeliver=1,
     )
     run_available_now(
         stream.writeStream.foreachBatch(fn),
@@ -316,7 +233,7 @@ def test_dlq_routing(spark, log, tmp_path):
     n_total = log.read("events").count()
     assert good.count() + dlq.count() == n_total
     assert dlq.filter(F.col("payload.value") <= 190.0).count() == 0
-    assert dlq.agg(F.min("redelivery_count")).collect()[0][0] == 3
+    assert {r["redelivery_count"] for r in dlq.select("redelivery_count").collect()} == {1}
 
 
 def test_compacted_view(spark, log):
@@ -325,75 +242,6 @@ def test_compacted_view(spark, log):
     keys = log.read("events").select("key").distinct().count()
     assert comp.count() == keys
     assert comp.groupBy("key").count().agg(F.max("count")).collect()[0][0] == 1
-
-
-def test_stream_static_join_enriches(spark, log, sf_dir):
-    """Stream-static join: envelope stream enriched with a static dimension
-    (per-key attributes) matches the batch join row-for-row in count."""
-    from pulsar_lunar_spark.session import load_table
-    from pulsar_lunar_spark.streaming import stream_static_join
-
-    users = (
-        load_table(spark, sf_dir, "events")
-        .limit(1000)
-        .groupBy(F.col("user_id").alias("key_id"))
-        .agg(F.count(F.lit(1)).alias("user_n"))
-    )
-    stream = log.subscribe("events").select(
-        F.col("key").cast("long").alias("key_id"), "sequence_id"
-    )
-    joined = stream_static_join(stream, users, "key_id")
-    run_available_now(
-        joined.writeStream.format("memory").queryName("ssj").outputMode("append"),
-        log.subscription_checkpoint("events", "ssj"),
-    )
-    got = spark.sql("select count(*) n, count(distinct key_id) k from ssj").head()
-    assert got["n"] == 1000
-    assert got["k"] == users.count()
-
-
-def test_stream_stream_join_time_bounded(spark, log, tmp_path):
-    """Stream-stream inner join of two topics on user_id within a 1-hour
-    bound matches the equivalent batch join."""
-    from pulsar_lunar_spark.streaming import stream_stream_join
-
-    env = log.read("events")
-    # split one topic into two streams: clicks (even seq) and views (odd)
-    left_b = env.filter(F.col("sequence_id") % 2 == 0).select(
-        F.col("key").cast("long").alias("uid"), F.col("event_time").alias("lts"),
-        F.col("sequence_id").alias("lseq"),
-    )
-    right_b = env.filter(F.col("sequence_id") % 2 == 1).select(
-        F.col("key").cast("long").alias("r_uid"), F.col("event_time").alias("r_rts"),
-        F.col("sequence_id").alias("rseq"),
-    )
-    want = (
-        left_b.join(
-            right_b,
-            (F.col("uid") == F.col("r_uid"))
-            & (F.col("r_rts") >= F.col("lts"))
-            & (F.col("r_rts") <= F.col("lts") + F.expr("INTERVAL 1 HOUR")),
-        )
-    ).count()
-
-    stream = log.subscribe("events")
-    left = stream.filter(F.col("sequence_id") % 2 == 0).select(
-        F.col("key").cast("long").alias("uid"), F.col("event_time").alias("lts"),
-        F.col("sequence_id").alias("lseq"),
-    )
-    right = stream.filter(F.col("sequence_id") % 2 == 1).select(
-        F.col("key").cast("long").alias("r_uid"), F.col("event_time").alias("r_rts"),
-        F.col("sequence_id").alias("rseq"),
-    )
-    joined = stream_stream_join(
-        left, right, "lts", "rts", ["uid"], watermark="10 years", within="1 hour"
-    )
-    run_available_now(
-        joined.writeStream.format("memory").queryName("s2j").outputMode("append"),
-        log.subscription_checkpoint("events", "s2j"),
-    )
-    got = spark.sql("select count(*) n from s2j").head()["n"]
-    assert got == want
 
 
 def test_stateful_running_count(spark, log, tmp_path):
@@ -547,49 +395,6 @@ def test_idempotent_sink_skips_replayed_batches(spark, log, tmp_path):
     assert n == 100  # 50 (batch 0, once) + 50 (batch 1)
 
 
-def test_transform_with_state_high_watermark(spark, log, tmp_path):
-    """transformWithStateInPandas (RocksDB state store): per-key sequence
-    high-watermark across micro-batches equals the batch max."""
-    pytest.importorskip(
-        "google.protobuf.descriptor",
-        reason="transformWithState needs the protobuf package (state-server protocol)",
-    )
-    from pulsar_lunar_spark.streaming import stateful_high_watermark
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = log.subscribe("events", max_files_per_trigger=4).select(
-            F.col("key").cast("long").alias("user_id"), "sequence_id"
-        )
-        hw = stateful_high_watermark(stream, "user_id", "sequence_id")
-        run_available_now(
-            hw.writeStream.format("memory").queryName("hwm").outputMode("update"),
-            log.subscription_checkpoint("events", "hwm"),
-        )
-        got = {
-            r["key"]: r["mx"]
-            for r in spark.sql("select key, max(high_watermark) mx from hwm group by key").collect()
-        }
-        want = {
-            r["key"]: r["mx"]
-            for r in (
-                log.read("events")
-                .groupBy(F.col("key").cast("long").alias("key"))
-                .agg(F.max("sequence_id").alias("mx"))
-            ).collect()
-        }
-        assert got == want
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
 def test_compressed_topic_roundtrip(spark, sf_dir, tmp_path):
     """Producing with each supported codec yields byte-identical reads
     (the reference's 4-codec compression surface, producer.rs:52-131)."""
@@ -663,11 +468,7 @@ def test_observe_stats_batch(spark, sf_dir):
 def test_observe_stats_streaming(spark, log):
     """Streaming observe: per-micro-batch metrics land in
     query.lastProgress['observedMetrics'] (ConsumerStats poll)."""
-    from pulsar_lunar_spark.streaming.ops import (
-        last_observed,
-        observe_stats,
-        run_available_now,
-    )
+    from pulsar_lunar_spark.streaming.ops import observe_stats
 
     stream = observe_stats(
         log.subscribe("events"),
@@ -679,10 +480,7 @@ def test_observe_stats_streaming(spark, log):
         stream.writeStream.format("memory").queryName("obs_sink").outputMode("append"),
         log.subscription_checkpoint("events", "obs"),
     )
-    q.processAllAvailable()
-    got = last_observed(q, "consumer_stats")
-    q.stop()
-    assert got is not None
+    got = q.lastProgress["observedMetrics"]["consumer_stats"]
     n_total = log.read("events").count()
     assert 0 < got["n_msgs"] <= n_total and got["max_seq"] is not None
 
@@ -1165,9 +963,7 @@ def test_stream_ingest_dedup_matches_batch_replay(spark):
         for r in all_queries()["q_stream_ingest_dedup"].fn(spark, sf).collect()
     }
     d = load_table(spark, sf, "documents")
-    batch = D.minhash_dedup_pairs(
-        d, "doc_id", "text", threshold=0.3, hasher="md5"
-    ).collect()
+    batch = D.minhash_dedup_pairs(d, "doc_id", "text", threshold=0.3).collect()
     want = {
         (r["id_a"], r["id_b"]): max(r["id_a"] % 3, r["id_b"] % 3)
         for r in batch
