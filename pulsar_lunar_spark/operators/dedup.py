@@ -56,7 +56,8 @@ def shingles_from_words(words: Column, k: int = 3) -> Column:
     """Distinct word k-shingles from a pre-split word array (array<string>).
 
     For texts shorter than k words, falls back to the whole text as a single
-    shingle so every doc has >= 1 shingle. Callers that can stage ``words``
+    shingle. A text with no tokens (NULL, or empty once normalized) has no
+    shingles, so it near-duplicates nothing. Callers that can stage ``words``
     as a materialized column should: Spark does not CSE across the
     references below, so an inlined split(normalize(...)) is recomputed
     per reference (the minhash staging lesson).
@@ -68,7 +69,12 @@ def shingles_from_words(words: Column, k: int = 3) -> Column:
             lambda i: F.concat_ws(" ", F.slice(words, i + 1, k)),
         )
     )
-    return F.when(n >= k, k_shingles).otherwise(F.array(F.concat_ws(" ", words)))
+    whole = F.concat_ws(" ", words)
+    return (
+        F.when(n >= k, k_shingles)
+        .when(whole != "", F.array(whole))
+        .otherwise(F.array().cast("array<string>"))
+    )
 
 
 def shingles(col: Column, k: int = 3) -> Column:
@@ -291,10 +297,13 @@ def containment_pairs_from_postings(posts: DataFrame, df_cap: int = 50) -> DataF
 
 def _banded_buckets(sh: DataFrame, n_hashes: int, bands: int, seed: int) -> DataFrame:
     """(__id, band, bucket) LSH table from a (__id, __sh) shingle table:
-    base hashes in the JVM, signatures and band folds in one Arrow UDF."""
+    base hashes in the JVM, signatures and band folds in one Arrow UDF.
+    A document with no shingles gets no signature and no bucket."""
     if n_hashes % bands:
         raise ValueError("n_hashes must be divisible by bands")
-    base = sh.select("__id", F.transform("__sh", _base_hash).alias("__base"))
+    base = sh.filter(F.size("__sh") > 0).select(
+        "__id", F.transform("__sh", _base_hash).alias("__base")
+    )
     bucketed = base.select(
         "__id", _minhash_sig_udf(n_hashes, seed, bands)("__base").alias("__buckets")
     )
@@ -570,9 +579,10 @@ def _simhash_sig_udf():
     bit-unpack matrix + segmented per-bit vote sums (np.add.reduceat).
 
     Bit i is set iff more of the row's token hashes have bit i set than
-    not. A row with no tokens (a NULL or empty array) has signature 0.
-    Such rows skip the reduceat: it gives a zero-length segment the next
-    row's element, not 0. numpy does the whole batch in C (measured
+    not. A row with no tokens (a NULL or empty array) has signature 0
+    (:func:`simhash_near_pairs` sends it none). Such rows skip the
+    reduceat: it gives a zero-length segment the next row's element,
+    not 0. numpy does the whole batch in C (measured
     3.3 s → 0.6 s against a per-bit Spark fold at sf0.1)."""
     import numpy as np
 
@@ -612,18 +622,22 @@ def simhash_near_pairs(
     so a block-equality join finds all such pairs with O(n * blocks) shuffle.
     The token hash is the md5 prefix ``md5_int(t, 15)``, so a DuckDB/ANSI
     oracle can replicate the EXACT signature and pair set (see
-    q_dedup_simhash's oracle).
+    q_dedup_simhash's oracle). A text with no tokens (NULL, or empty
+    once normalized) gets no signature and pairs with nothing.
     """
     from pulsar_lunar_spark.operators.corpus import md5_int
 
     n_blocks = max_hamming + 1
     block_bits = _SIMHASH_BITS // n_blocks
 
-    hashed = ensure_parallelism(df).select(
-        F.col(id_col).alias("__id"),
-        F.transform(
-            F.split(normalize_text(F.col(text_col)), " "), lambda t: md5_int(t, 15)
-        ).alias("__h"),
+    hashed = (
+        ensure_parallelism(df)
+        .select(F.col(id_col).alias("__id"), normalize_text(F.col(text_col)).alias("__t"))
+        .filter(F.col("__t") != "")
+        .select(
+            "__id",
+            F.transform(F.split("__t", " "), lambda t: md5_int(t, 15)).alias("__h"),
+        )
     )
     sigs = hashed.select("__id", _simhash_sig_udf()("__h").alias("__sig"))
     mask = (1 << block_bits) - 1

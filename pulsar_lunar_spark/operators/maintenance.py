@@ -202,10 +202,15 @@ def write_snapshot(df: DataFrame, path: str) -> int:
     the multi-version storage model (time travel) that table formats
     provide, built on directory-per-version parquet: the commit point is
     the atomic appearance of _SUCCESS, so concurrent readers either see
-    the version fully or not at all."""
+    the version fully or not at all. The write asks for the marker
+    itself: ``get_spark`` sessions write none by default."""
     vs = snapshot_versions(path)
     v = (vs[-1] + 1) if vs else 0
-    df.write.mode("overwrite").parquet(os.path.join(path, f"v={v}"))
+    (
+        df.write.mode("overwrite")
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "true")
+        .parquet(os.path.join(path, f"v={v}"))
+    )
     return v
 
 

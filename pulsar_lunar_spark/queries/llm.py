@@ -333,7 +333,7 @@ _MH_SHINGLES = f"""
                    RANGE(1, GREATEST(LEN(STRING_SPLIT({_NORM}, ' ')) - 2, 1) + 1),
                    i -> ARRAY_TO_STRING(STRING_SPLIT({_NORM}, ' ')[i:i+2], ' ')
                )) AS sh
-        FROM documents
+        FROM documents WHERE {_NORM} <> ''
 """
 _MH_SIG_SQL = ",\n               ".join(
     f"MIN(({a} * h + {b}) % {_MH_P}) AS s{i}"
@@ -500,6 +500,7 @@ _SIMHASH_ORACLE = f"""
         SELECT doc_id,
                CAST(CONCAT('0x', SUBSTR(MD5(t.tok), 1, 15)) AS BIGINT) AS h
         FROM documents, UNNEST(STRING_SPLIT({_NORM}, ' ')) AS t(tok)
+        WHERE {_NORM} <> ''
     ), sigs AS MATERIALIZED (
         SELECT doc_id, {_SIMHASH_SIG_SQL} AS sig
         FROM toks GROUP BY doc_id
@@ -540,10 +541,10 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH sh AS MATERIALIZED (
         SELECT doc_id,
-               LIST_DISTINCT(LIST_TRANSFORM(
+               CASE WHEN {_NORM} <> '' THEN LIST_DISTINCT(LIST_TRANSFORM(
                    RANGE(1, GREATEST(LEN(STRING_SPLIT({_NORM}, ' ')) - 2, 1) + 1),
                    i -> ARRAY_TO_STRING(STRING_SPLIT({_NORM}, ' ')[i:i+2], ' ')
-               )) AS sh
+               )) ELSE [] END AS sh
         FROM documents WHERE doc_id < 40
     )
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,

@@ -23,13 +23,15 @@ from pulsar_lunar_spark.session import ensure_parallelism, load_table
 _NORM = "REGEXP_REPLACE(TRIM(LOWER(text)), '\\s+', ' ', 'g')"
 _WORDS = f"STRING_SPLIT({_NORM}, ' ')"
 
-# DuckDB twin of dedup.shingles(k=3) incl. the short-doc fallback.
+# DuckDB twin of dedup.shingles(k=3) incl. the short-doc fallback and
+# the no-token rule (NULL or empty text: no shingles).
 _SHINGLES3 = f"""
     CASE WHEN LEN({_WORDS}) >= 3
          THEN LIST_DISTINCT(LIST_TRANSFORM(
                   RANGE(1, LEN({_WORDS}) - 2 + 1),
                   i -> ARRAY_TO_STRING({_WORDS}[i:i+2], ' ')))
-         ELSE [{_NORM}] END
+         WHEN {_NORM} <> '' THEN [{_NORM}]
+         ELSE [] END
 """
 
 

@@ -36,7 +36,7 @@ WITH w AS (
                RANGE(1, GREATEST(LEN(STRING_SPLIT(t, ' ')) - 2, 1) + 1),
                i -> ARRAY_TO_STRING(STRING_SPLIT(t, ' ')[i:i+2], ' ')
            )) AS shs
-    FROM corpus
+    FROM corpus WHERE t <> ''
 ), posts AS (
     SELECT DISTINCT doc_id, UNNEST(shs) AS s FROM sh
 ), sizes AS (

@@ -285,7 +285,9 @@ _SETSIM_ORACLE = f"""
                    LIST_DISTINCT(LIST_TRANSFORM(
                        RANGE(1, LEN(words) - 4 + 1),
                        i -> ARRAY_TO_STRING(words[i:i+4], ' ')))
-               ELSE [ARRAY_TO_STRING(words, ' ')] END AS shs
+               WHEN ARRAY_TO_STRING(words, ' ') <> ''
+               THEN [ARRAY_TO_STRING(words, ' ')]
+               ELSE [] END AS shs
         FROM corpus
     ), posts AS MATERIALIZED (
         SELECT doc_id, UNNEST(shs) AS s FROM sh

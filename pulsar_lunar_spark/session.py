@@ -54,6 +54,13 @@ _STREAM_STOP_TIMEOUT = "5s"
 # pulsar_lunar_spark._daemon whatever the driver's working directory is.
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+# The local filesystem a local master uses for ``file:`` paths, and the
+# FileContext binding of it (jvm/NioLocalFileSystem.java).
+_FS_SOURCE = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "NioLocalFileSystem.java"
+)
+_FS_CLASS = "pulsar_lunar_spark.jvm.NioLocalFileSystem"
+
 
 def get_spark(app_name: str = "pulsar-lunar-spark", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) a tuned SparkSession.
@@ -74,6 +81,22 @@ def get_spark(app_name: str = "pulsar-lunar-spark", cpus: int | None = None) -> 
     workers' ``PYTHONPATH`` so the daemon imports from any working
     directory. A cluster keeps the stock daemon: its workers' Python
     install is not the driver's to assume.
+
+    Writes leave no ``_SUCCESS`` marker. Creating it truncates the
+    previous append's ``._SUCCESS.crc``, and on ext4 truncating a
+    recently written file waits for its writeback (about 80 ms per
+    topic append). The one reader of the marker,
+    :func:`pulsar_lunar_spark.operators.maintenance.write_snapshot`, asks
+    for it per write.
+
+    A local master also maps ``file:`` to
+    ``pulsar_lunar_spark.jvm.NioLocalFileSystem`` (see
+    :func:`local_fs_jar`): Hadoop's checksummed local filesystem, but
+    permissions and link checks go through ``java.nio`` instead of a
+    forked ``chmod``/``readlink`` (about 1 ms each, some 70 per topic
+    append without the native hadoop library). When the jar cannot be
+    built the session keeps Hadoop's stock local filesystem and one
+    warning is logged.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 8)
@@ -90,6 +113,7 @@ def get_spark(app_name: str = "pulsar-lunar-spark", cpus: int | None = None) -> 
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.optimizer.excludedRules", _EXCLUDED_RULES)
         .config("spark.sql.streaming.stopTimeout", _STREAM_STOP_TIMEOUT)
+        .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
         .config("spark.ui.enabled", "false")
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
@@ -98,7 +122,94 @@ def get_spark(app_name: str = "pulsar-lunar-spark", cpus: int | None = None) -> 
             .config("spark.python.daemon.module", "pulsar_lunar_spark._daemon")
             .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         )
+        for key, value in _local_fs_confs().items():
+            builder = builder.config(key, value)
     return builder.getOrCreate()
+
+
+def _local_fs_confs() -> dict[str, str]:
+    """The confs that put the local filesystem shim under ``file:``, or
+    none when its jar is missing or a running JVM cannot load it (a JVM
+    keeps the classpath it started with)."""
+    from py4j.protocol import Py4JError
+    from pyspark import SparkContext
+
+    jar = local_fs_jar()
+    if jar is None:
+        return {}
+    if SparkContext._jvm is not None:
+        try:
+            SparkContext._jvm.java.lang.Class.forName(_FS_CLASS)
+        except Py4JError:
+            return {}
+    return {
+        "spark.driver.extraClassPath": jar,
+        "spark.hadoop.fs.file.impl": _FS_CLASS,
+        "spark.hadoop.fs.AbstractFileSystem.file.impl": _FS_CLASS + "$Fs",
+    }
+
+
+def local_fs_jar() -> str | None:
+    """Path of the compiled ``jvm/NioLocalFileSystem.java``, or None.
+
+    Built once with ``javac --release 17`` against Spark's Hadoop client
+    jar (about 1-3 s) into ``~/.cache/pulsar_lunar_spark``, named by a
+    digest of the source and that jar's file name, and written
+    atomically, so concurrent builders and later sessions share one
+    copy. None, with one logged warning, when the jar cannot be built:
+    no Hadoop client jar, no ``javac`` on ``PATH``, an unwritable cache
+    directory or a failed compile."""
+    import glob
+    import hashlib
+    import logging
+    import shutil
+    import subprocess
+    import tempfile
+    import zipfile
+
+    from pyspark.find_spark_home import _find_spark_home
+
+    def unavailable(reason: str) -> None:
+        logging.getLogger(__name__).warning(
+            "local filesystem shim unavailable (%s); using Hadoop's stock "
+            "local filesystem",
+            reason,
+        )
+
+    hadoop = sorted(
+        glob.glob(os.path.join(_find_spark_home(), "jars", "hadoop-client-api-*.jar"))
+    )
+    if not hadoop:
+        return unavailable("no hadoop-client-api jar")
+    with open(_FS_SOURCE, "rb") as fh:
+        digest = hashlib.sha256(fh.read() + os.path.basename(hadoop[-1]).encode())
+    cache = os.path.join(os.path.expanduser("~"), ".cache", "pulsar_lunar_spark")
+    jar = os.path.join(cache, f"nio-local-fs-{digest.hexdigest()[:16]}.jar")
+    if os.path.isfile(jar):
+        return jar
+    javac = shutil.which("javac")
+    if javac is None:
+        return unavailable("no javac on PATH")
+    try:
+        os.makedirs(cache, exist_ok=True)
+        with tempfile.TemporaryDirectory(dir=cache) as tmp:
+            classes = os.path.join(tmp, "classes")
+            subprocess.run(
+                [javac, "--release", "17", "-cp", hadoop[-1], "-d", classes, _FS_SOURCE],
+                check=True,
+                capture_output=True,
+                timeout=300,
+            )
+            part = os.path.join(tmp, "part.jar")
+            with zipfile.ZipFile(part, "w") as zf:
+                for root, _dirs, files in os.walk(classes):
+                    for name in files:
+                        path = os.path.join(root, name)
+                        zf.write(path, os.path.relpath(path, classes))
+            os.replace(part, jar)
+    except (OSError, subprocess.SubprocessError) as exc:
+        return unavailable(f"{type(exc).__name__}: {exc}")
+    return jar
 
 
 def _configure(spark: SparkSession) -> None:

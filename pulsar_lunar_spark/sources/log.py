@@ -159,7 +159,13 @@ class MessageLog:
         Physical layout: partitioned by the envelope's key-hash ``partition``
         (Pulsar's partitioned topic, discovery/mod.rs:71) — consumers of one
         partition read one directory; per-key order within a partition is
-        the parquet row order, as in a Pulsar ledger.
+        the parquet row order, as in a Pulsar ledger. Each produce adds
+        exactly one data file to every partition directory it touches:
+        the shuffle hashes on ``__partition`` without a fixed count, so
+        all rows of a partition meet in one write task and AQE may
+        coalesce small produces into fewer tasks. The append leaves no
+        ``_SUCCESS`` marker in the topic (a ``get_spark`` session
+        default).
 
         ``time_partition=True`` additionally lays the log out by
         ``__pdate = date(publish_time)`` so time-range seeks
@@ -190,7 +196,7 @@ class MessageLog:
             out = out.withColumn("__pdate", F.to_date("publish_time"))
             layout.append("__pdate")
         writer = (
-            out.repartition(num_partitions, "__partition")
+            out.repartition("__partition")
             .sortWithinPartitions(*layout, "sequence_id")
             .write.partitionBy(*layout)
             .mode("append")

@@ -179,6 +179,44 @@ def test_shingles_short_text(spark):
     assert out == ["two words"]
 
 
+_NO_TOKEN_DOCS = [
+    (1, "the quick brown fox jumps over the lazy dog"),
+    (2, None),
+    (3, "completely unrelated content about query plans"),
+    (4, None),
+    (5, ""),
+]
+
+
+def test_documents_without_tokens_are_never_near_duplicates(spark, duck):
+    """NULL and empty documents have no shingles and no signature, so
+    neither lane pairs them (before: Jaccard 1.0 and Hamming 0); the
+    DuckDB shingle twin applies the same rule."""
+    from pulsar_lunar_spark.queries.llm3 import _SHINGLES3
+
+    df = spark.createDataFrame(_NO_TOKEN_DOCS + [(6, "   ")], "doc_id long, text string")
+    assert minhash_dedup_pairs(df, "doc_id", "text", threshold=0.5).collect() == []
+    assert simhash_near_pairs(df, "doc_id", "text", max_hamming=3).collect() == []
+    spark_sh = {
+        r["doc_id"]: sorted(r["sh"])
+        for r in df.select("doc_id", shingles(F.col("text"), 3).alias("sh")).collect()
+    }
+    assert spark_sh[2] == spark_sh[4] == spark_sh[5] == spark_sh[6] == []
+    duck.sql(
+        "CREATE OR REPLACE TEMP TABLE no_token_docs (doc_id BIGINT, text VARCHAR)"
+    )
+    duck.executemany(
+        "INSERT INTO no_token_docs VALUES (?, ?)", _NO_TOKEN_DOCS + [(6, "   ")]
+    )
+    sql_sh = {
+        doc_id: sorted(sh)
+        for doc_id, sh in duck.sql(
+            f"SELECT doc_id, {_SHINGLES3} AS sh FROM no_token_docs"
+        ).fetchall()
+    }
+    assert sql_sh == spark_sh
+
+
 def test_cosine_topk_self_is_best(spark, sf_dir):
     from pulsar_lunar_spark.queries.llm import q_similarity_topk
 

@@ -145,14 +145,26 @@ def test_worker_daemon_is_local_master_only(on_cluster, monkeypatch):
     else:
         monkeypatch.delenv("SPARK_GRAFT_ON_CLUSTER", raising=False)
     confs = session.get_spark("pl-conf-probe", cpus=2)
+    assert confs["spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs"] == "false"
+    fs_confs = (
+        "spark.driver.extraClassPath",
+        "spark.hadoop.fs.file.impl",
+        "spark.hadoop.fs.AbstractFileSystem.file.impl",
+    )
     if on_cluster:
         assert "spark.python.daemon.module" not in confs
         assert "spark.executorEnv.PYTHONPATH" not in confs
         assert "master" not in confs
+        assert not any(key in confs for key in fs_confs)
     else:
         assert confs["spark.python.daemon.module"] == "pulsar_lunar_spark._daemon"
         assert confs["spark.executorEnv.PYTHONPATH"] == ROOT
         assert confs["master"] == "local[2]"
+        assert os.path.isfile(confs["spark.driver.extraClassPath"])
+        assert confs["spark.hadoop.fs.file.impl"] == session._FS_CLASS
+        assert confs["spark.hadoop.fs.AbstractFileSystem.file.impl"] == (
+            session._FS_CLASS + "$Fs"
+        )
 
 
 _FORBIDDEN = re.compile(r"parallelize\(|createDataFrame\(")
