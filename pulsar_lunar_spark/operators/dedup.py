@@ -111,6 +111,11 @@ def _minhash_sig_udf(n_hashes: int, seed: int, bands: int):
 
     int64 math throughout (products stay < 2^63); interpreted Spark HOF
     lambdas would cost ~µs/element, numpy does the whole batch in C.
+
+    A row with no base hashes (a NULL or empty array: a document with no
+    shingles) gets NULL, so it lands in no bucket. Such rows skip the
+    reduceat: it gives a zero-length segment the next row's element, and
+    a trailing one an out-of-range index.
     """
     import numpy as np
 
@@ -122,11 +127,17 @@ def _minhash_sig_udf(n_hashes: int, seed: int, bands: int):
 
     @F.pandas_udf("array<long>")
     def bucketed(base: pd.Series) -> pd.Series:
-        lens = base.map(len).to_numpy()
-        starts = np.zeros(len(lens), dtype=np.int64)
-        np.cumsum(lens[:-1], out=starts[1:])
-        flat = np.concatenate([np.asarray(v, dtype=np.int64) for v in base])
-        sigs = np.empty((n_hashes, len(lens)), dtype=np.int64)
+        lens = base.map(lambda v: 0 if v is None else len(v)).to_numpy()
+        out = [None] * len(lens)
+        rows = np.flatnonzero(lens)
+        if not len(rows):
+            return pd.Series(out, dtype=object)
+        starts = np.zeros(len(rows), dtype=np.int64)
+        np.cumsum(lens[rows][:-1], out=starts[1:])
+        flat = np.concatenate(
+            [np.asarray(v, dtype=np.int64) for v in base.to_numpy()[rows]]
+        )
+        sigs = np.empty((n_hashes, len(rows)), dtype=np.int64)
         for c0 in range(0, n_hashes, 8):  # chunk: bounds peak memory
             c1 = min(c0 + 8, n_hashes)
             vals = (a_all[c0:c1, None] * flat[None, :] + b_all[c0:c1, None]) % _MERSENNE_31
@@ -135,7 +146,9 @@ def _minhash_sig_udf(n_hashes: int, seed: int, bands: int):
         acc = np.zeros((len(sigs), bands), dtype=np.int64)
         for j in range(r):
             acc = (acc * _BAND_K + sigs[:, cols[j]]) % _MERSENNE_31
-        return pd.Series(list(acc))
+        for i, row in zip(rows, acc):
+            out[i] = row
+        return pd.Series(out, dtype=object)
 
     return bucketed
 
@@ -301,9 +314,7 @@ def _banded_buckets(sh: DataFrame, n_hashes: int, bands: int, seed: int) -> Data
     A document with no shingles gets no signature and no bucket."""
     if n_hashes % bands:
         raise ValueError("n_hashes must be divisible by bands")
-    base = sh.filter(F.size("__sh") > 0).select(
-        "__id", F.transform("__sh", _base_hash).alias("__base")
-    )
+    base = sh.select("__id", F.transform("__sh", _base_hash).alias("__base"))
     bucketed = base.select(
         "__id", _minhash_sig_udf(n_hashes, seed, bands)("__base").alias("__buckets")
     )

@@ -541,11 +541,11 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH sh AS MATERIALIZED (
         SELECT doc_id,
-               CASE WHEN {_NORM} <> '' THEN LIST_DISTINCT(LIST_TRANSFORM(
+               LIST_DISTINCT(LIST_TRANSFORM(
                    RANGE(1, GREATEST(LEN(STRING_SPLIT({_NORM}, ' ')) - 2, 1) + 1),
                    i -> ARRAY_TO_STRING(STRING_SPLIT({_NORM}, ' ')[i:i+2], ' ')
-               )) ELSE [] END AS sh
-        FROM documents WHERE doc_id < 40
+               )) AS sh
+        FROM documents WHERE doc_id < 40 AND {_NORM} <> ''
     )
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
            ROUND(LEN(LIST_INTERSECT(a.sh, b.sh)) * 1.0 /
@@ -558,9 +558,12 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard similarity over all pairs of a bounded doc slice
     (the verification kernel of the near-dup pipeline, oracle-checked;
-    unbounded pairwise Jaccard at scale goes through LSH, never this)."""
+    unbounded pairwise Jaccard at scale goes through LSH, never this). A
+    document with no shingles (no tokens) pairs with nothing."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 40)
-    sh = d.select(F.col("doc_id"), D.shingles(F.col("text"), 3).alias("sh"))
+    sh = d.select(F.col("doc_id"), D.shingles(F.col("text"), 3).alias("sh")).filter(
+        F.size("sh") > 0
+    )
     a = sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))

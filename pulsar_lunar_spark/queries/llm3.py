@@ -167,9 +167,11 @@ def q_quality_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH RECURSIVE sh AS (
         SELECT doc_id, {_SHINGLES3} AS sh FROM documents WHERE doc_id < 80
+    ), nz AS (
+        SELECT * FROM sh WHERE LEN(sh) > 0
     ), pairs AS (
         SELECT a.doc_id AS ia, b.doc_id AS ib
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+        FROM nz a JOIN nz b ON a.doc_id < b.doc_id
         WHERE LEN(LIST_INTERSECT(a.sh, b.sh)) * 1.0 /
               LEN(LIST_DISTINCT(LIST_CONCAT(a.sh, b.sh))) >= 0.3
     ), edges AS (
@@ -190,9 +192,12 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clustering: exact-Jaccard pair edges (bounded doc slice) →
     connected components (iterative min-label propagation) → cluster sizes.
     At scale the edge list comes from MinHash-LSH, not the pairwise join;
-    the CC loop is the same either way (oracle: recursive CTE)."""
+    the CC loop is the same either way (oracle: recursive CTE). A document
+    with no shingles (no tokens) gets no edge and stays a cluster of one."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 80)
-    sh = d.select(F.col("doc_id"), D.shingles(F.col("text"), 3).alias("sh"))
+    sh = d.select(F.col("doc_id"), D.shingles(F.col("text"), 3).alias("sh")).filter(
+        F.size("sh") > 0
+    )
     a = sh.select(F.col("doc_id").alias("src"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("dst"), F.col("sh").alias("sh_b"))
     jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(F.array_union("sh_a", "sh_b"))

@@ -38,7 +38,8 @@ TABLE_NAMES = (
 # on q_contamination at sf0.1: 4.4 s -> 0.94 s steady-state from excluding
 # the rule.  Semantics are unaffected (Generate with outer=false already
 # skips empty arrays); the inferred filter is purely an early-prune that
-# never helps our plans (derived arrays are non-empty by construction).
+# never helps our plans (a derived shingle array is empty only for a
+# document with no tokens, and such documents are rare).
 _EXCLUDED_RULES = (
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 )
@@ -127,10 +128,22 @@ def get_spark(app_name: str = "pulsar-lunar-spark", cpus: int | None = None) -> 
     return builder.getOrCreate()
 
 
+def _local_fs_unavailable(reason: str) -> None:
+    import logging
+
+    logging.getLogger(__name__).warning(
+        "local filesystem shim unavailable (%s); using Hadoop's stock "
+        "local filesystem",
+        reason,
+    )
+
+
 def _local_fs_confs() -> dict[str, str]:
     """The confs that put the local filesystem shim under ``file:``, or
-    none when its jar is missing or a running JVM cannot load it (a JVM
-    keeps the classpath it started with)."""
+    none, with one logged warning, when its jar is missing or a running
+    JVM cannot load it (a JVM keeps the classpath it started with, so a
+    session built before the first ``get_spark`` keeps the stock
+    filesystem)."""
     from py4j.protocol import Py4JError
     from pyspark import SparkContext
 
@@ -141,6 +154,7 @@ def _local_fs_confs() -> dict[str, str]:
         try:
             SparkContext._jvm.java.lang.Class.forName(_FS_CLASS)
         except Py4JError:
+            _local_fs_unavailable("the running JVM was started without its jar")
             return {}
     return {
         "spark.driver.extraClassPath": jar,
@@ -161,7 +175,6 @@ def local_fs_jar() -> str | None:
     directory or a failed compile."""
     import glob
     import hashlib
-    import logging
     import shutil
     import subprocess
     import tempfile
@@ -169,18 +182,11 @@ def local_fs_jar() -> str | None:
 
     from pyspark.find_spark_home import _find_spark_home
 
-    def unavailable(reason: str) -> None:
-        logging.getLogger(__name__).warning(
-            "local filesystem shim unavailable (%s); using Hadoop's stock "
-            "local filesystem",
-            reason,
-        )
-
     hadoop = sorted(
         glob.glob(os.path.join(_find_spark_home(), "jars", "hadoop-client-api-*.jar"))
     )
     if not hadoop:
-        return unavailable("no hadoop-client-api jar")
+        return _local_fs_unavailable("no hadoop-client-api jar")
     with open(_FS_SOURCE, "rb") as fh:
         digest = hashlib.sha256(fh.read() + os.path.basename(hadoop[-1]).encode())
     cache = os.path.join(os.path.expanduser("~"), ".cache", "pulsar_lunar_spark")
@@ -189,7 +195,7 @@ def local_fs_jar() -> str | None:
         return jar
     javac = shutil.which("javac")
     if javac is None:
-        return unavailable("no javac on PATH")
+        return _local_fs_unavailable("no javac on PATH")
     try:
         os.makedirs(cache, exist_ok=True)
         with tempfile.TemporaryDirectory(dir=cache) as tmp:
@@ -208,7 +214,7 @@ def local_fs_jar() -> str | None:
                         zf.write(path, os.path.relpath(path, classes))
             os.replace(part, jar)
     except (OSError, subprocess.SubprocessError) as exc:
-        return unavailable(f"{type(exc).__name__}: {exc}")
+        return _local_fs_unavailable(f"{type(exc).__name__}: {exc}")
     return jar
 
 

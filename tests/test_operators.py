@@ -217,6 +217,47 @@ def test_documents_without_tokens_are_never_near_duplicates(spark, duck):
     assert sql_sh == spark_sh
 
 
+def test_registry_dedup_kernels_skip_documents_without_tokens(spark, tmp_path):
+    """The all-pairs Jaccard kernels (q_ngram_jaccard, q_dedup_cluster)
+    and the streaming ingest-dedup lane over a documents table whose
+    every ingest day holds two documents with no tokens: they match
+    their DuckDB oracles, and no pair names a no-token document (before:
+    a 0/0 Jaccard raised DIVIDE_BY_ZERO, and the lane's MinHash UDF gave
+    a no-token row its neighbour's buckets)."""
+    import duckdb
+
+    from pulsar_lunar_spark.queries import all_queries
+
+    docs = _NO_TOKEN_DOCS + [
+        (6, "   "),
+        (7, "the quick brown fox jumps over the lazy dog again"),
+        (8, "the quick brown fox jumps over the lazy dog"),
+        (9, None),
+        (10, ""),
+        (11, "completely unrelated content about query plans and costs"),
+    ]
+    no_tokens = {2, 4, 5, 6, 9, 10}
+    con = duckdb.connect()
+    con.sql("CREATE TABLE d (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO d VALUES (?, ?)", docs)
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    con.sql(f"COPY d TO '{sf / 'documents.parquet'}' (FORMAT PARQUET)")
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf / 'documents.parquet'}')")
+
+    def rounded(rows):
+        return [tuple(round(v, 6) if isinstance(v, float) else v for v in r) for r in rows]
+
+    specs = all_queries()
+    for name in ("q_ngram_jaccard", "q_dedup_cluster", "q_stream_ingest_dedup"):
+        got = rounded(tuple(r) for r in specs[name].fn(spark, str(sf)).collect())
+        assert got == rounded(con.sql(specs[name].oracle).fetchall()), name
+        if name != "q_dedup_cluster":
+            ids = {v for r in got for v in r[-3:-1]}
+            assert ids and not ids & no_tokens, name
+    con.close()
+
+
 def test_cosine_topk_self_is_best(spark, sf_dir):
     from pulsar_lunar_spark.queries.llm import q_similarity_topk
 

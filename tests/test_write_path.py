@@ -260,6 +260,16 @@ def test_fs_jar_is_none_without_javac(tmp_path, monkeypatch, caplog):
     assert "no javac on PATH" in caplog.text
 
 
+def test_fs_confs_are_empty_when_the_running_jvm_lacks_the_shim(spark, monkeypatch, caplog):
+    """A JVM keeps the classpath it started with: when it cannot load
+    the shim class, the session keeps the stock filesystem and says so."""
+    from pulsar_lunar_spark import session as S
+
+    monkeypatch.setattr(S, "_FS_CLASS", _FS_CLASS + "Missing")
+    assert S._local_fs_confs() == {}
+    assert "the running JVM was started without its jar" in caplog.text
+
+
 # -- one rule for the job-success marker -------------------------------------
 
 _MARKER = "marksuccessfuljobs"
